@@ -21,6 +21,7 @@ Emitters must never break the pipeline: emission errors are swallowed
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 
 NAMESPACE = "arcane.stream"
@@ -191,26 +192,58 @@ def make_streaming_listener(metrics: DeclaredMetrics):
     return StreamingQueryMetricsListener()
 
 
+#: how long a pending observation may wait for the listener bus to drain
+#: before its batch counts as never executed (ms)
+_OBSERVATION_DRAIN_MS = 5_000
+
+
 def observe_batch(df, metrics: "DeclaredMetrics | None", name: str = "batch"):
-    """Inline batch observability via Spark's ``observe`` API: attach
-    row-count and byte-ish accumulators to a DataFrame so the SAME
-    action that runs the pipeline reports ``rows.incoming`` — no second
-    ``count()`` job (the reference pays its metrics zero extra queries
-    too; this is the batch twin of the streaming listener).
+    """Inline batch observability via Spark's ``observe`` API: attach a
+    row count to a DataFrame so the SAME action that runs the pipeline
+    reports ``rows.incoming`` — no second ``count()`` job (the reference
+    pays its metrics zero extra queries too; this is the batch twin of the
+    streaming listener).
 
     Returns ``(observed_df, finish)`` — run any action on the returned
-    frame, then call ``finish()`` to emit the observed values into the
-    declared-metrics hub and get them back as a dict."""
+    frame, then call ``finish()``: it adds the observed row count to the
+    ``rows.incoming`` counter and returns the values as a dict. ``finish``
+    never blocks on an action that did not happen: when nothing executed
+    the frame, it logs one WARN line, emits nothing and returns None."""
     from pyspark.sql import Observation
     import pyspark.sql.functions as F
 
     obs = Observation(name)
     observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
-    def finish() -> dict:
+    def finish() -> dict | None:
+        if not _observation_done(obs, df.sparkSession):
+            logging.getLogger(__name__).warning(
+                "observe_batch: no action executed the observed batch; "
+                "%s not emitted for it", ROWS_INCOMING,
+            )
+            return None
         got = obs.get
         if metrics is not None:
-            metrics.gauge(ROWS_INCOMING, float(got.get("rows", 0)))
+            metrics.counter(ROWS_INCOMING, got.get("rows", 0))
         return got
 
     return observed, finish
+
+
+def _observation_done(obs, spark) -> bool:
+    """Non-blocking completion check. Spark completes an observation from
+    a query-execution listener, so right after the action returns its
+    event may still be queued: a pending observation gets one bounded
+    drain of the listener bus before it counts as never executed."""
+    from py4j.protocol import Py4JJavaError
+
+    future = obs._jo.future()
+    if future.isCompleted():
+        return True
+    try:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(
+            _OBSERVATION_DRAIN_MS
+        )
+    except Py4JJavaError:  # TimeoutException: a busy bus reads as not executed
+        pass
+    return future.isCompleted()

@@ -31,7 +31,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
-from arcane_framework_scala_spark.operators.merge_apply import merge_apply
+from arcane_framework_scala_spark.operators.merge_apply import _collapse_ties, merge_apply
 from arcane_framework_scala_spark.sources.paths import glob_escape
 from arcane_framework_scala_spark.queries.merge import MergeDialect, build_merge_query
 from arcane_framework_scala_spark.schema.schema import MERGE_KEY_COLUMN
@@ -335,12 +335,9 @@ class SnapshotParquetTarget:
                 if dialect.insert_condition
                 else F.lit(True)
             )
-            from arcane_framework_scala_spark.operators.dedup_window import (
-                latest_version_per_key,
-            )
-            boot = latest_version_per_key(source, dialect.version_column).filter(
-                insert_ok
-            )
+            boot = _collapse_ties(
+                source, dialect, MERGE_KEY_COLUMN, version_first=True
+            ).filter(insert_ok)
             drop = [c for c in dialect.non_data_columns if c in boot.columns]
             self._commit(boot.drop(*drop), expected_base=0)
             return
@@ -404,12 +401,13 @@ class CatalogTarget:
             self.spark.sql(f"ALTER TABLE {self.table} ADD COLUMNS ({cols})")
 
     def merge(self, source: DataFrame, dialect: MergeDialect) -> None:
+        # one staged row per key, under the same tie policy merge_apply
+        # uses: rank() = 1 alone keeps every row tied at the max version,
+        # which the MERGE rejects on a matched key and inserts twice on a
+        # new one
+        staged = _collapse_ties(source, dialect, MERGE_KEY_COLUMN, version_first=True)
         if not self.exists():
-            df = source
-            from arcane_framework_scala_spark.operators.dedup_window import (
-                latest_version_per_key,
-            )
-            df = latest_version_per_key(df, dialect.version_column)
+            df = staged
             if dialect.insert_condition:
                 df = df.filter(F.expr(dialect.insert_condition.replace("t_s.", "")))
             df = df.drop(*[c for c in dialect.non_data_columns if c in df.columns])
@@ -424,10 +422,10 @@ class CatalogTarget:
         # catalog itself is safe — MemCatalog/Iceberg state is JVM-global,
         # and clones inherit the spark.sql.catalog.* conf).
         sess = source.sparkSession
-        source.createOrReplaceTempView(view)
+        staged.createOrReplaceTempView(view)
         try:
             sql = build_merge_query(
-                dialect, self.table, view, source.columns, deduplicate=True
+                dialect, self.table, view, staged.columns, deduplicate=False
             )
             try:
                 sess.sql(sql)

@@ -9,6 +9,9 @@ scala:104-176``, folder math ``SynapseAzureBlobReaderExtensions.scala:
   and anything newer is excluded from the poll;
 - each folder carries a ``model.json`` CDM manifest: per-entity attribute
   names + CDM types (schema may change batch to batch → T8 migration);
+  it is read and parsed once per batch. Small files (``model.json``,
+  ``changelog.info``) are read in one JVM call each
+  (``IOUtils.toByteArray``), never byte by byte over py4j;
 - entity CSVs are quoted multiline; files are numbered ``N.csv`` and the
   reference processes them in **descending numeric order so the deletes in
   the lowest-numbered file apply last** (O1);
@@ -96,13 +99,9 @@ class SynapseCdmSource:
             return None
         stream = fs.open(p)
         try:
-            data = bytearray()
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                data.append(b)
-            return data.decode("utf-8")
+            # one py4j round trip for the whole file (py4j returns byte[]
+            # as bytes); decoding happens here, so multi-byte UTF-8 is safe
+            return jvm.org.apache.commons.io.IOUtils.toByteArray(stream).decode("utf-8")
         finally:
             stream.close()
 
@@ -140,14 +139,6 @@ class SynapseCdmSource:
         return {"version": folders[-1] if folders else ""}
 
     # -- batch assembly ----------------------------------------------------
-    def _entity_schema(self, folder: str) -> T.StructType:
-        model = self._read_small_file(f"{folder}/model.json")
-        if model is None:
-            raise FileNotFoundError(f"{folder}/model.json missing")
-        fields = parse_cdm_model(model, self.entity)
-        # CSVs are read as strings; typed conversion happens in _typed()
-        return T.StructType([T.StructField(n, T.StringType(), True) for n, _ in fields])
-
     def _typed(self, df: DataFrame, fields: list[tuple[str, T.DataType]]) -> DataFrame:
         cols = []
         for name, dtype in fields:
@@ -185,9 +176,12 @@ class SynapseCdmSource:
         if not csvs:
             return None
         csvs.sort(key=_csv_sort_key, reverse=True)
-        schema = self._entity_schema(folder)
         model = self._read_small_file(f"{folder}/model.json")
+        if model is None:
+            raise FileNotFoundError(f"{folder}/model.json missing")
         fields = parse_cdm_model(model, self.entity)
+        # CSVs are read as strings; typed conversion happens in _typed()
+        schema = T.StructType([T.StructField(n, T.StringType(), True) for n, _ in fields])
         raw = (
             self.spark.read.schema(schema)
             .option("header", "false")

@@ -45,11 +45,6 @@ class StreamSettings:
     #: mode and tests; the reference's lifetime service maps to stop()
     max_batches: int | None = None
     advance_watermark_on_idle: bool = True
-    #: emit rows.incoming by counting each batch (one extra count job per
-    #: batch — CDC batches are shaper-bounded so this is cheap relative to
-    #: the merge; disable for oversized batches). Only consulted when a
-    #: DeclaredMetrics hub is attached to the runner.
-    count_incoming_rows: bool = True
 
 
 @dataclass
@@ -112,12 +107,14 @@ class StreamRunner:
             df = batch.df
             if self.field_rule is not None:
                 df = apply_field_selection(df, self.field_rule)
-            if dm is not None and self.settings.count_incoming_rows:
-                rows = df.count()
-                self.metrics.rows_incoming += rows
-                dm.counter(M.ROWS_INCOMING, rows)
+            # rows.incoming rides on the sink's own action (df.observe):
+            # no second job re-reads the batch to count it
+            df, finish = M.observe_batch(df, dm) if dm is not None else (df, None)
             with M.timed_gauge(dm, M.BATCH_MERGE_DURATION):
                 self.sink.apply(df)
+            observed = finish and finish()
+            if observed:
+                self.metrics.rows_incoming += observed["rows"]
             self.metrics.batches_merged += 1
             for op in self.maintenance.due(self._batch_index):
                 if self.maintenance_fn is not None:

@@ -1,7 +1,9 @@
 """Synapse Link CDM source tests (S6/S7): folder gating, per-batch schema,
-multiline CSV, typed conversion, merge key, watermark-driven incremental."""
+multiline CSV, typed conversion, merge key, watermark-driven incremental,
+and the driver-side small-file reads (one JVM call per file)."""
 
 import json
+import threading
 
 import pytest
 
@@ -125,3 +127,102 @@ def test_cdm_to_merge_pipeline(spark, cdm_container, tmp_path):
     assert set(final) == {"a1"}  # a2 deleted by the versionnumber-4 tombstone
     assert final["a1"]["name"] == "renamed"
     assert final["a1"]["versionnumber"] == 3
+
+
+def test_multibyte_model_json_parses_identically(spark, tmp_path):
+    """Multi-byte UTF-8 attribute names survive the one-call read: the
+    batch schema is exactly what parse_cdm_model makes of the file text."""
+    model = {
+        "name": "cdm",
+        "entities": [
+            {
+                "name": "account",
+                "attributes": [
+                    {"name": "Id", "dataType": "guid"},
+                    {"name": "näme_名前", "dataType": "string"},
+                    {"name": "größe", "dataType": "int64"},
+                ],
+            }
+        ],
+    }
+    text = json.dumps(model, ensure_ascii=False)
+    folder = "2025-09-01T00.00.00Z"
+    root = tmp_path / "cdm"
+    (root / folder / "account").mkdir(parents=True)
+    (root / folder / "model.json").write_text(text, encoding="utf-8")
+    (root / folder / "account" / "1.csv").write_text("a1,zürich 東京,7\n", encoding="utf-8")
+    src = SynapseCdmSource(spark=spark, container_path=str(root), entity="account")
+    assert src._read_small_file(f"{folder}/model.json") == text
+    df = src.read_batch(folder)
+    fields = parse_cdm_model(text, "account")
+    assert [(n, df.schema[n].dataType) for n, _ in fields] == fields
+    row = df.collect()[0]
+    assert row["näme_名前"] == "zürich 東京"
+    assert row["größe"] == 7
+
+
+@pytest.mark.parametrize("info", [None, "", "\n"])
+def test_empty_or_absent_changelog_gives_no_cutoff(spark, tmp_path, info):
+    root = tmp_path / "cdm"
+    rows = ["a1,x,1.0,1,False,9/1/2025 1:02:03 PM"]
+    for folder in ("2025-09-01T00.00.00Z", "2025-09-01T01.00.00Z"):
+        _write_batch(root, folder, rows)
+    if info is not None:
+        (root / "Changelog").mkdir()
+        (root / "Changelog" / "changelog.info").write_text(info)
+    src = SynapseCdmSource(spark=spark, container_path=str(root), entity="account")
+    assert src.in_progress_folder() is None
+    assert src.completed_folders(None) == [
+        "2025-09-01T00.00.00Z",
+        "2025-09-01T01.00.00Z",
+    ]
+
+
+def _padded_model(pad_entities: int) -> dict:
+    """MODEL plus other entities: a larger model.json with the same
+    ``account`` schema."""
+    pad = [
+        {
+            "name": f"pad{i}",
+            "attributes": [{"name": f"col{j}", "dataType": "string"} for j in range(20)],
+        }
+        for i in range(pad_entities)
+    ]
+    return {**MODEL, "entities": MODEL["entities"] + pad}
+
+
+def test_read_batch_round_trips_do_not_grow_with_model_json(spark, tmp_path, monkeypatch):
+    """The py4j round trips of one read_batch, counted at the gateway
+    client, are the same for a 4 KB and a 26 KB model.json: the file is
+    read in one call, and parsed once."""
+    root = tmp_path / "cdm"
+    rows = ["a1,x,1.0,1,False,9/1/2025 1:02:03 PM"]
+    sizes = {}
+    for folder, pad in (("2025-09-01T00.00.00Z", 5), ("2025-09-01T01.00.00Z", 30)):
+        _write_batch(root, folder, rows)
+        text = json.dumps(_padded_model(pad))
+        (root / folder / "model.json").write_text(text)
+        sizes[folder] = len(text)
+    small, big = sorted(sizes)
+    assert 4_000 < sizes[small] < 5_000 and 24_000 < sizes[big] < 28_000
+
+    client = type(spark.sparkContext._gateway._gateway_client)
+    original = client.send_command
+    me = threading.get_ident()
+    calls = [0]
+
+    def counted(self, *a, **kw):
+        if threading.get_ident() == me:  # this test's calls only
+            calls[0] += 1
+        return original(self, *a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    src = SynapseCdmSource(spark=spark, container_path=str(root), entity="account")
+
+    def round_trips(folder):
+        calls[0] = 0
+        assert src.read_batch(folder) is not None
+        return calls[0]
+
+    round_trips(small)  # warm-up
+    assert round_trips(big) == round_trips(small)

@@ -941,3 +941,35 @@ def test_polling_loop_with_inloop_maintenance_on_the_durable_table(
     ).coalesce(1).write.parquet(os.path.join(src_dir, "wave3"))
     assert runner.run_once() >= 1
     assert {r["pk"] for r in target.read().collect()} == {"a", "b", "c", "d"}
+
+
+TIE_SCHEMA = "ARCANE_MERGE_KEY string, createdon long, name string, qty long"
+
+
+@pytest.mark.parametrize("case", ["bootstrap", "new_key", "matched_key"])
+def test_tied_versions_collapse_the_same_way_on_both_sinks(spark, target, tmp_path, case):
+    """Two rows of one key tied at the max version (two blobs with one
+    creation second) become the same single row on the DataFrame merge
+    and on the catalog MERGE — never a cardinality violation on a
+    matched key, never a doubled insert of a new one."""
+    from arcane_framework_scala_spark.queries.merge import UPSERT_BLOB
+    from arcane_framework_scala_spark.sinks.merge_sink import SnapshotParquetTarget
+
+    base = {
+        "bootstrap": [],
+        "new_key": [("k0", 1, "base", 0)],
+        "matched_key": [("k0", 1, "base", 0), ("k1", 1, "base", 0)],
+    }[case]
+    tied = [("k1", 2, "tied-b", 2), ("k1", 2, "tied-a", 1)]
+    got = []
+    for t in (SnapshotParquetTarget(spark, str(tmp_path / "snap")), target):
+        sink = MergeSink(target=t, dialect=UPSERT_BLOB)
+        for batch in (base, tied):
+            if batch:
+                sink.apply(spark.createDataFrame(batch, TIE_SCHEMA))
+        got.append(
+            [r.asDict() for r in t.read().filter(F.col("ARCANE_MERGE_KEY") == "k1").collect()]
+        )
+    snapshot, durable = got
+    assert snapshot == durable
+    assert [(r["name"], r["qty"]) for r in snapshot] == [("tied-a", 1)]
