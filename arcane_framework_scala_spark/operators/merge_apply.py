@@ -93,7 +93,9 @@ def merge_apply(
     M3 UpsertBlob): matched+delete → row removed; matched+update-guard →
     source values (version guard makes replays idempotent, T9); matched
     otherwise → target kept; unmatched source + insert-guard → inserted;
-    unmatched target → kept.
+    unmatched target → kept. These are the generated MERGE SQL's
+    semantics, column resolution included (``tests/test_mem_catalog_
+    merge.py`` compares the two row for row).
     """
     out_fields = target.schema.fields
     # W1 dedup + tie collapse fuse into one window pass (version-first
@@ -128,17 +130,21 @@ def merge_apply(
     )
 
     use_source = (matched & F.coalesce(update_c, F.lit(False))) | source_only
-    source_cols = set(source.columns)
+    # columns match by name without regard to case, as the MERGE SQL
+    # resolves them; a target column the batch lacks keeps its value on
+    # update (MERGE never assigns it) and is NULL on insert (the target
+    # side of a source-only row is all NULL)
+    source_cols = {c.lower(): c for c in source.columns}
     projection = []
     for f in out_fields:
-        s_val = (
-            F.col(f"{SOURCE_ALIAS}.{f.name}")
-            if f.name in source_cols
-            else F.lit(None).cast(f.dataType)
-        )
+        t_val = F.col(f"{TARGET_ALIAS}.{f.name}")
+        s_name = source_cols.get(f.name.lower())
+        if s_name is None:
+            projection.append(t_val.alias(f.name))
+            continue
         projection.append(
-            F.when(use_source, s_val)
-            .otherwise(F.col(f"{TARGET_ALIAS}.{f.name}"))
+            F.when(use_source, F.col(f"{SOURCE_ALIAS}.{s_name}"))
+            .otherwise(t_val)
             .alias(f.name)
         )
     return kept.select(*projection)

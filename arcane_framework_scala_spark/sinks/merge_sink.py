@@ -12,12 +12,17 @@ Three target flavors behind one interface:
   :func:`operators.merge_apply`. This makes the full pipeline runnable and
   testable on any filesystem with zero catalog dependencies — the local
   stand-in for Iceberg, not a scale recommendation.
+- ``DurableCatalogTarget``: the copy-on-write lakehouse table on that
+  snapshot layout — partition- or file-group-pruned rewrites carried by
+  hard link, X1–X4 maintenance, time travel and a derived change feed,
+  all on the files each merge commits. Merges execute through
+  :func:`operators.merge_apply` as well.
 
-Both implement the reference's merge-retry policy (exponential backoff with
-an error-message allowlist, ``services/merging/JdbcMergeServiceClient.
-scala:38-58``) and per-batch schema drift handling (T8: missing columns are
-added to the target before the merge — ``SchemaMigrationProcessor.scala:
-24-50``).
+``MergeSink`` applies the reference's merge-retry policy to all three
+(exponential backoff with an error-message allowlist, ``services/merging/
+JdbcMergeServiceClient.scala:38-58``), and each target handles per-batch
+schema drift (T8: missing columns are added to the target before the
+merge — ``SchemaMigrationProcessor.scala:24-50``).
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
+from pyspark.sql.types import StructField
 
 from arcane_framework_scala_spark.operators.merge_apply import _collapse_ties, merge_apply
 from arcane_framework_scala_spark.sources.paths import glob_escape
@@ -73,7 +79,7 @@ class CommitConflictError(RuntimeError):
     """A concurrent writer committed between this writer's snapshot write
     and pointer flip — the filesystem analogue of Iceberg's
     ``CommitFailedException``. Retryable by policy: the retried merge
-    re-hydrates from the winner's snapshot, so no batch is lost."""
+    re-reads the winner's snapshot, so no batch is lost."""
 
 
 #: K1 parity: the reference chunks staged parquet at 10 000 rows per file
@@ -81,6 +87,17 @@ class CommitConflictError(RuntimeError):
 #: (``write.target-file-size-bytes`` / split planning) is the better default
 #: at scale — tiny files are a 100 TB anti-pattern — so the knob is opt-in.
 REFERENCE_MAX_ROWS_PER_FILE = 10_000
+
+
+def _drift_fields(
+    source: DataFrame, target_columns: list[str], dialect: MergeDialect
+) -> list[StructField]:
+    """T8 schema drift: the batch's data fields the target lacks. Names
+    match without regard to case, as Spark resolves columns: a batch
+    column ``REGION`` is the target's ``region``, not a new one."""
+    have = {c.lower() for c in target_columns}
+    have |= {c.lower() for c in dialect.non_data_columns}
+    return [f for f in source.schema.fields if f.name.lower() not in have]
 
 
 class SnapshotParquetTarget:
@@ -222,8 +239,8 @@ class SnapshotParquetTarget:
         clobber data files the winner already committed. The loser's
         staging dir is removed best-effort (leftovers are
         ``remove_orphan_files`` territory), and ``CommitConflictError`` is
-        retryable — the retried merge re-hydrates from the winner's
-        snapshot, so both batches land.
+        retryable — the retried merge re-reads the winner's snapshot, so
+        both batches land.
 
         ``expected_base`` is the version the CALLER's read was based on
         (captured by :meth:`merge` before reading the target). A commit
@@ -284,36 +301,52 @@ class SnapshotParquetTarget:
         os.replace(tmp, self._pointer())
 
     def _commit_pruned(
-        self, df: DataFrame, carry_dirs: list[str], expected_base: int
+        self, df: DataFrame, carry: list[str], expected_base: int
     ) -> None:
         """CoW commit of a PRUNED rewrite group: ``df`` holds only the
-        rewritten (touched) partitions, and every untouched partition
-        directory of the base snapshot is carried into the new snapshot
-        by HARD LINK — byte-identical by construction (same inodes, zero
+        rewritten rows, and every base-snapshot-relative path in ``carry``
+        — a leaf partition dir (``col=value[/col2=value2]``, all its data
+        files) or a single data file — is carried into the new snapshot
+        by HARD LINK: byte-identical by construction (same inodes, zero
         data movement), the file-level reuse an Iceberg manifest
-        expresses by reference. ``carry_dirs`` are base-snapshot-relative
-        leaf partition paths (``col=value[/col2=value2]``). Snapshots stay
-        self-contained (every version dir lists the full table) and
-        expiry stays a plain ``rmtree``: the filesystem's link count is
-        the manifest refcount, so shared files survive until the last
-        referencing snapshot is expired. Falls back to copy when the
-        filesystem refuses links."""
+        expresses by reference. Snapshots stay self-contained (every
+        version dir lists the full table) and expiry stays a plain
+        ``rmtree``: the filesystem's link count is the manifest refcount,
+        so shared files survive until the last referencing snapshot is
+        expired. Falls back to copy when the filesystem refuses links;
+        never clobbers a freshly written file of the same name."""
         staging = self._write_staging(df, expected_base + 1)
         base_dir = os.path.join(self.path, f"v={expected_base}")
-        for rel in carry_dirs:
+        for rel in carry:
             src = os.path.join(base_dir, rel)
-            dst = os.path.join(staging, rel)
-            os.makedirs(dst, exist_ok=True)
-            for name in os.listdir(src):
-                s = os.path.join(src, name)
-                if not os.path.isfile(s):
-                    continue
-                d = os.path.join(dst, name)
+            names = (
+                [
+                    os.path.join(rel, n)
+                    for n in os.listdir(src)
+                    if os.path.isfile(os.path.join(src, n))
+                ]
+                if os.path.isdir(src)
+                else [rel]
+            )
+            for name in names:
+                s, d = os.path.join(base_dir, name), os.path.join(staging, name)
+                os.makedirs(os.path.dirname(d), exist_ok=True)
                 try:
                     os.link(s, d)
-                except OSError:
+                except FileExistsError:
+                    raise
+                except OSError:  # EXDEV/EPERM: links refused, copy
                     shutil.copy2(s, d)
         self._finalize(staging, expected_base)
+
+    def _distributed(self, df: DataFrame) -> DataFrame:
+        """Hash-distribute ``df`` by the partition columns before a write,
+        so each partition value is written by one task — one file per
+        touched partition (Iceberg's ``write.distribution-mode=hash``)
+        instead of one per task that holds its rows."""
+        if not self.partition_cols:
+            return df
+        return df.hint("rebalance", *self.partition_cols)
 
     def overwrite(self, df: DataFrame) -> None:
         self._commit(df)
@@ -339,18 +372,13 @@ class SnapshotParquetTarget:
                 source, dialect, MERGE_KEY_COLUMN, version_first=True
             ).filter(insert_ok)
             drop = [c for c in dialect.non_data_columns if c in boot.columns]
-            self._commit(boot.drop(*drop), expected_base=0)
+            self._commit(self._distributed(boot.drop(*drop)), expected_base=0)
             return
         # T8 schema drift: add source-only columns to the target as nulls
-        missing = [
-            f
-            for f in source.schema.fields
-            if f.name not in set(target.columns)
-            and f.name not in dialect.non_data_columns
-        ]
-        for f in missing:
+        for f in _drift_fields(source, target.columns, dialect):
             target = target.withColumn(f.name, F.lit(None).cast(f.dataType))
-        self._commit(merge_apply(target, source, dialect), expected_base=base)
+        merged = merge_apply(target, source, dialect)
+        self._commit(self._distributed(merged), expected_base=base)
 
 
 class CatalogTarget:
@@ -388,14 +416,9 @@ class CatalogTarget:
         """T8 drift: add source-only data columns to the target before the
         merge (``SchemaMigrationProcessor.scala:24-50``). ADD COLUMNS is a
         metadata-only operation on Iceberg/Delta/v1 alike."""
-        target_cols = {c.lower() for c in self.spark.table(self.table).columns}
-        markers = {c.lower() for c in dialect.non_data_columns}
-        missing = [
-            f
-            for f in source.schema.fields
-            if f.name.lower() not in target_cols
-            and f.name.lower() not in markers
-        ]
+        missing = _drift_fields(
+            source, self.spark.table(self.table).columns, dialect
+        )
         if missing:
             cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in missing)
             self.spark.sql(f"ALTER TABLE {self.table} ADD COLUMNS ({cols})")
@@ -442,38 +465,41 @@ class CatalogTarget:
 
 
 class DurableCatalogTarget:
-    """Copy-on-write lakehouse table: real ``MERGE INTO`` execution AND
-    durable snapshot commits AND maintenance, all on ONE table.
+    """Copy-on-write lakehouse table: merges, durable snapshot commits
+    and maintenance, all on ONE table.
 
     Iceberg's copy-on-write MERGE performs exactly this sequence per
     commit (``JdbcMergeServiceClient.scala:62-91`` drives it through
-    Trino): (1) read the current snapshot's files, (2) execute the
-    rewrite through the DSv2 group-based row-level-operation surface,
-    (3) commit the rewritten files as a new snapshot. Here step 2 runs on
-    the javaext MemCatalog (the same ``SupportsRowLevelOperations``
-    surface Iceberg CoW uses, so the generated MERGE SQL is byte-identical
-    to the catalog path), and steps 1/3 run on the versioned-parquet
-    layout the X1–X4 maintenance family already manages — compaction,
-    snapshot expiry, orphan removal, ANALYZE and time travel all operate
-    on the same files every merge commits.
+    Trino): (1) read the current snapshot's files, (2) rewrite them with
+    the batch applied, (3) commit the rewritten files as a new snapshot.
+    Here step 2 is :func:`operators.merge_apply` — the M1-M3 dialect
+    semantics of the generated MERGE SQL, checked row for row against
+    that SQL (``tests/test_mem_catalog_merge.py``) — and steps 1/3 run on
+    the versioned-parquet layout the X1–X4 maintenance family already
+    manages: compaction, snapshot expiry, orphan removal, ANALYZE and
+    time travel all operate on the same files every merge commits.
+    Nothing is held between merges: each one reads ``_CURRENT``, so a
+    crash before the snapshot commit loses nothing — the retried batch
+    replays onto the last durable snapshot (T9 version guards make the
+    replay idempotent) — and maintenance between merges costs the next
+    merge nothing extra.
 
     On a hive-partitioned table (``partition_cols``) the rewrite group is
     PRUNED to the touched partitions, exactly as Iceberg CoW prunes the
     rewrite to files whose key ranges intersect the source (the same
     partition-scoped merge the reference's ``ON … IN (…)`` lists buy —
-    ``models/queries/MergeQuerySegment.scala:54-71``): the execution
-    table is hydrated with only the partitions the batch writes into or
-    holds a matched merge key in, the MERGE rewrites just that group, and
-    the snapshot commit carries every untouched partition directory over
-    by hard link — byte-identical, zero data movement
+    ``models/queries/MergeQuerySegment.scala:54-71``): the merge reads
+    only the partitions the batch writes into or holds a matched merge
+    key in, rewrites just that group, and the snapshot commit carries
+    every untouched partition directory over by hard link —
+    byte-identical, zero data movement
     (:meth:`SnapshotParquetTarget._commit_pruned`). Unpartitioned tables
     keep the whole-table group (there is nothing to prune by), and a
     schema-drift batch falls back to the full rewrite (carried-over files
-    cannot gain columns). Durable truth is the snapshot layout either
-    way: every merge re-hydrates the execution table from ``_CURRENT``
-    first, so a crash after the MERGE but before the snapshot commit
-    loses nothing — the retried batch replays onto the last durable
-    snapshot (T9 version guards make the replay idempotent).
+    cannot gain columns). Merge results and ``overwrite`` input are
+    distributed by the partition columns before the write, so each
+    touched partition gets one file per commit (Iceberg's
+    ``write.distribution-mode=hash``).
 
     ``file_group_pruning=True`` extends the pruning BELOW partitions to
     Iceberg's real granularity on unpartitioned tables: the rewrite
@@ -483,10 +509,14 @@ class DurableCatalogTarget:
     and inserts land in the rewritten output. How much it prunes is the
     layout's property, exactly as on Iceberg: after
     ``optimize_snapshot(sort_cols=[...])`` a key-clustered batch touches
-    few files; a uniformly-hashing merge key touches most. Opt-in for
-    now: the whole-table path keeps the steady-state mirror elision
-    (zero re-read on consecutive merges), which the file-group path
-    trades for O(|group|) hydration per merge.
+    few files; a uniformly-hashing merge key touches most. It stays
+    opt-in because the probe is an extra scan job per merge that pays
+    off only on a multi-file layout: a table kept at one file (as
+    compaction leaves it) has nothing to carry, and none of the
+    ``perfbench`` workloads has a multi-file layout to measure it on.
+
+    ``table`` is accepted for call-site compatibility and unused: the
+    snapshot layout under ``path`` is the whole table.
     """
 
     def __init__(
@@ -499,11 +529,9 @@ class DurableCatalogTarget:
         file_group_pruning: bool = False,
     ):
         self.spark = spark
-        self.table = table
         self.snapshots = SnapshotParquetTarget(
             spark, path, max_rows_per_file, partition_cols
         )
-        self.catalog = CatalogTarget(spark, table)
         self.file_group_pruning = file_group_pruning
 
     # -- durable truth: reads delegate to the snapshot layout ---------
@@ -533,76 +561,12 @@ class DurableCatalogTarget:
 
     # -- CoW write path ------------------------------------------------
 
-    #: catalog property recording which durable snapshot the execution
-    #: table is a faithful copy of. Set only AFTER both sides agree;
-    #: cleared BEFORE the catalog is mutated — so a crash at any point
-    #: leaves it absent/stale and the next merge re-hydrates. Steady
-    #: state (consecutive merges from one process, e.g. foreachBatch)
-    #: skips the full-table re-read entirely.
-    MIRROR_PROPERTY = "arcane.mirror_of_snapshot"
-
-    def _mirror_version(self) -> int | None:
-        if not self.catalog.exists():
-            return None
-        rows = self.spark.sql(f"SHOW TBLPROPERTIES {self.table}").collect()
-        props = {r["key"]: r["value"] for r in rows}
-        try:
-            return int(props[self.MIRROR_PROPERTY])
-        except (KeyError, ValueError):
-            return None
-
-    def _set_mirror(self, version: int) -> None:
-        self.spark.sql(
-            f"ALTER TABLE {self.table} SET TBLPROPERTIES "
-            f"('{self.MIRROR_PROPERTY}'='{version}')"
-        )
-
-    def _clear_mirror(self) -> None:
-        self.spark.sql(
-            f"ALTER TABLE {self.table} UNSET TBLPROPERTIES IF EXISTS "
-            f"('{self.MIRROR_PROPERTY}')"
-        )
-
-    def _hydrate(self) -> None:
-        """Step 1 of the CoW commit: the execution table mirrors the
-        current durable snapshot. A catalog table whose mirror property
-        matches ``_CURRENT`` is that snapshot (the property is cleared
-        before every mutation), so the full-table re-read is skipped;
-        anything else — absent property, stale version, leftover of a
-        crash between MERGE and commit — is never trusted."""
-        cur_v = self.snapshots.current_version()
-        if cur_v is None:
-            if self.catalog.exists():
-                self.spark.sql(f"DROP TABLE {self.table}")
-            return
-        if self._mirror_version() == cur_v:
-            return  # steady state: catalog already IS this snapshot
-        self.catalog.overwrite(self.snapshots.read())
-        self._set_mirror(cur_v)
-
-    def _commit_from_catalog(self, expected_base: int | None = None) -> None:
-        """Step 3: the rewritten table becomes the next durable snapshot
-        (atomic ``v=N`` claim + ``_CURRENT`` flip — readers never see a
-        partial one), then the catalog is marked as its mirror.
-        ``expected_base`` is the snapshot the catalog was hydrated from;
-        a commit landing in between raises ``CommitConflictError`` and the
-        retried merge re-hydrates from the winner."""
-        merged = self.catalog.read()
-        assert merged is not None  # _hydrate + merge always create it
-        self.snapshots._commit(merged, expected_base=expected_base)
-        self._set_mirror(self.snapshots.current_version())
-
     def overwrite(self, df: DataFrame) -> None:
-        base = self.snapshots.current_version() or 0
-        if self.catalog.exists():
-            self._clear_mirror()
-        self.catalog.overwrite(df)
-        self._commit_from_catalog(expected_base=base)
+        self.snapshots.overwrite(self.snapshots._distributed(df))
 
     def merge(self, source: DataFrame, dialect: MergeDialect) -> None:
-        # the base version is captured BEFORE hydrate: the MERGE rewrites
-        # a catalog table that mirrors exactly this snapshot, so the
-        # commit asserts the pointer has not moved off it since.
+        # the pruned paths read and commit against this base version; the
+        # whole-table path captures its own inside snapshots.merge
         base = self.snapshots.current_version() or 0
         if (
             base
@@ -617,11 +581,7 @@ class DurableCatalogTarget:
             and self._merge_pruned_files(source, dialect, base)
         ):
             return
-        self._hydrate()
-        if self.catalog.exists():
-            self._clear_mirror()  # catalog is about to diverge
-        self.catalog.merge(source, dialect)  # real MERGE INTO (step 2)
-        self._commit_from_catalog(expected_base=base)
+        self.snapshots.merge(source, dialect)
 
     def _merge_pruned(
         self, source: DataFrame, dialect: MergeDialect, base: int
@@ -648,12 +608,7 @@ class DurableCatalogTarget:
         pcols = self.snapshots.partition_cols
         base_dir = os.path.join(self.snapshots.path, f"v={base}")
         base_df = self.spark.read.parquet(glob_escape(base_dir))
-        have = {c.lower() for c in base_df.columns}
-        markers = {c.lower() for c in dialect.non_data_columns}
-        if any(
-            f.name.lower() not in have and f.name.lower() not in markers
-            for f in source.schema.fields
-        ):
+        if _drift_fields(source, base_df.columns, dialect):
             return False  # T8 drift -> full rewrite
         if any(c not in source.columns for c in pcols):
             return False
@@ -690,11 +645,8 @@ class DurableCatalogTarget:
                 .collect()
             }
         )
-        # hydrate the catalog with ONLY the rewrite group (a partition
-        # filter — the scan prunes to the touched directories). The
-        # catalog never mirrors the full snapshot on this path, so the
-        # mirror property stays unset and the next merge re-hydrates its
-        # own (cheap, group-sized) slice.
+        # the rewrite group is a partition filter — the scan prunes to
+        # the touched directories
         terms = []
         for t in touched:
             conj = None
@@ -708,13 +660,10 @@ class DurableCatalogTarget:
                 for i in range(0, len(terms), 2)
             ]
         group = base_df.filter(terms[0] if terms else F.lit(False))
-        if self.catalog.exists():
-            self._clear_mirror()
-        self.catalog.overwrite(group)
-        self.catalog.merge(source, dialect)  # real MERGE INTO on the group
-        merged = self.catalog.read()
-        assert merged is not None
-        self.snapshots._commit_pruned(merged, carry, expected_base=base)
+        merged = merge_apply(group, source, dialect)
+        self.snapshots._commit_pruned(
+            self.snapshots._distributed(merged), carry, expected_base=base
+        )
         return True
 
     def _merge_pruned_files(
@@ -746,12 +695,7 @@ class DurableCatalogTarget:
 
         base_dir = os.path.join(self.snapshots.path, f"v={base}")
         base_df = self.spark.read.parquet(glob_escape(base_dir))
-        have = {c.lower() for c in base_df.columns}
-        markers = {c.lower() for c in dialect.non_data_columns}
-        if any(
-            f.name.lower() not in have and f.name.lower() not in markers
-            for f in source.schema.fields
-        ):
+        if _drift_fields(source, base_df.columns, dialect):
             return False  # T8 drift -> full rewrite
         keys = source.select(MERGE_KEY_COLUMN).distinct()
 
@@ -805,15 +749,15 @@ class DurableCatalogTarget:
         }
         matched_rel = sorted({rel(u) for u in matched_uris})
         carry = sorted(all_files - set(matched_rel))
-        # the rewrite group IS the matched files — hydrate by reading
-        # exactly those paths. Never an `isin(<file literals>)` filter:
-        # under a uniformly-hashing merge key the matched set approaches
-        # |files| and an IN-literal of 10^5+ path strings bloats the plan
-        # (the scan below stays O(1) plan nodes at any file count).
-        # Paths are REBUILT from the literal base_dir + decoded rel name
-        # and glob-escaped — input_file_name() URIs are percent-encoded
-        # and Hadoop glob-expands read paths, so feeding them back raw
-        # can duplicate rows between group and carry (ADVICE r8).
+        # the rewrite group IS the matched files — read exactly those
+        # paths. Never an `isin(<file literals>)` filter: under a
+        # uniformly-hashing merge key the matched set approaches |files|
+        # and an IN-literal of 10^5+ path strings bloats the plan (the
+        # scan below stays O(1) plan nodes at any file count). Paths are
+        # REBUILT from the literal base_dir + decoded rel name and
+        # glob-escaped — input_file_name() URIs are percent-encoded and
+        # Hadoop glob-expands read paths, so feeding them back raw can
+        # duplicate rows between group and carry (ADVICE r8).
         group = (
             self.spark.read.parquet(
                 *[glob_escape(os.path.join(base_dir, r)) for r in matched_rel]
@@ -821,28 +765,9 @@ class DurableCatalogTarget:
             if matched_rel
             else base_df.filter(F.lit(False))
         )
-        if self.catalog.exists():
-            self._clear_mirror()
-        self.catalog.overwrite(group)
-        self.catalog.merge(source, dialect)  # real MERGE INTO on the group
-        merged = self.catalog.read()
-        assert merged is not None
-        # carry unmatched files FLAT into the new snapshot dir: link each
-        # file at its base-relative path ('' dirname for a flat layout)
-        staging = self.snapshots._write_staging(merged, base + 1)
-        for name in carry:
-            src, dst = os.path.join(base_dir, name), os.path.join(staging, name)
-            try:
-                os.link(src, dst)
-            except FileExistsError:
-                # collision with a freshly written part file: never
-                # clobber (task-UUID part names make this ~impossible)
-                raise
-            except OSError:
-                # filesystem refuses links (EXDEV/EPERM): carry by copy,
-                # mirroring _commit_pruned's fallback
-                shutil.copy2(src, dst)
-        self.snapshots._finalize(staging, expected_base=base)
+        merged = merge_apply(group, source, dialect)
+        # unmatched files are carried FLAT at their base-relative path
+        self.snapshots._commit_pruned(merged, carry, expected_base=base)
         return True
 
     def changes(self, v_from: int, v_to: int, keys: list[str] | None = None):
@@ -861,10 +786,10 @@ class DurableCatalogTarget:
     def watermark_store(self):
         """T2 watermark persistence that survives what the table survives:
         the reference stores progress in the Iceberg table's ``comment``
-        property (durable because Iceberg metadata is files); MemCatalog
-        TBLPROPERTIES are JVM memory, so here the watermark lives as a
-        rename-committed JSON file inside the snapshot layout — same
-        crash-replay contract (``IcebergTablePropertyManager.scala``)."""
+        property (durable because Iceberg metadata is files); this table
+        has no catalog, so the watermark lives as a rename-committed JSON
+        file inside the snapshot layout — same crash-replay contract
+        (``IcebergTablePropertyManager.scala``)."""
         from arcane_framework_scala_spark.streaming.watermark import (
             FileWatermarkStore,
         )
@@ -880,7 +805,7 @@ class MergeSink:
     audit-parity staging — the reference always stages to Iceberg first;
     Spark can merge straight from the batch DataFrame, K1/K5 elided)."""
 
-    target: SnapshotParquetTarget | CatalogTarget
+    target: SnapshotParquetTarget | CatalogTarget | DurableCatalogTarget
     dialect: MergeDialect
     retry: RetryPolicy = field(default_factory=RetryPolicy)
 

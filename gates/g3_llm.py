@@ -523,10 +523,10 @@ WHERE CASE WHEN b2.k IS NOT NULL THEN NOT b2.del ELSE NOT b1.del END
 
 def q_m8_lakehouse_vertical(spark, sf_dir):
     """The FULL lakehouse lifecycle on ONE durable copy-on-write table
-    (``DurableCatalogTarget``): three CT-dialect waves merged with real
-    ``MERGE INTO`` through the DSv2 row-level-op surface, each committing
-    a durable parquet snapshot — then X1 compaction, X4 ANALYZE, X3
-    orphan removal and X2 snapshot expiry run on the SAME table, time
+    (``DurableCatalogTarget``): three CT-dialect waves merged
+    copy-on-write, each committing a durable parquet snapshot — then X1
+    compaction, X4 ANALYZE, X3 orphan removal and X2 snapshot expiry run
+    on the SAME table, time
     travel proves compaction was metadata-only, and a T9 crash-replay of
     the last wave lands byte-identical. This is the unified shape the
     reference gets from Trino-on-Iceberg (``JdbcMergeServiceClient.
@@ -549,17 +549,10 @@ def q_m8_lakehouse_vertical(spark, sf_dir):
     )
 
     _harden_session(spark)
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    table = "arcm.gate.m8"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     run_dir = tempfile.mkdtemp(prefix="arcane_m8_run_")
     target = DurableCatalogTarget(
         # 500-row chunks fragment every snapshot so X1 has work to do
-        spark, os.path.join(run_dir, "t"), table, max_rows_per_file=500
+        spark, os.path.join(run_dir, "t"), "m8", max_rows_per_file=500
     )
     ev = _read(spark, sf_dir, "events")
     mx = ev.agg(F.max("event_id")).first()[0]
@@ -622,32 +615,17 @@ def q_m8_lakehouse_vertical(spark, sf_dir):
     sink.apply(batch.filter(waves[2]))
     if target.versions() != [3, 4, 5]:
         raise AssertionError(f"post-replay history wrong: {target.versions()}")
-    # final participates in BOTH remaining checks and the sink: one
-    # checkpointed read serves all of them (was 5 executions). The three
-    # post-replay reads (current, pre-replay snapshot, catalog twin) are
-    # independent jobs — overlap them (guide §2.6)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        final, replayed, cat = pool.map(
-            lambda fn: fn().localCheckpoint(),
-            (target.read, lambda: target.read_version(4),
-             lambda: spark.table(table)),
-        )
-    # both closing checks run over the three checkpoints — independent
-    # count jobs, overlapped (§2.6; r12)
+    # final participates in the replay check and the sink: one
+    # checkpointed read serves both. The two post-replay reads (current,
+    # pre-replay snapshot) are independent jobs — overlap them (guide
+    # §2.6)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_rep = pool.submit(
-            final.exceptAll(replayed).unionAll(replayed.exceptAll(final)).count
+        final, replayed = pool.map(
+            lambda fn: fn().localCheckpoint(),
+            (target.read, lambda: target.read_version(4)),
         )
-        f_twin = pool.submit(
-            cat.exceptAll(final).unionAll(final.exceptAll(cat)).count
-        )
-        if f_rep.result():
-            raise AssertionError("replaying wave 3 was not idempotent")
-        # twin: the catalog execution table mirrors the durable snapshot
-        if f_twin.result():
-            raise AssertionError(
-                "catalog table diverged from durable snapshot"
-            )
+    if final.exceptAll(replayed).unionAll(replayed.exceptAll(final)).count():
+        raise AssertionError("replaying wave 3 was not idempotent")
     return final
 
 
@@ -695,18 +673,11 @@ def q_m10_pruned_cow_merge(spark, sf_dir):
     )
 
     _harden_session(spark)
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    table = "arcm.gate.m10"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     run_dir = tempfile.mkdtemp(prefix="arcane_m10_run_")
     target = DurableCatalogTarget(
         spark,
         os.path.join(run_dir, "t"),
-        table,
+        "m10",
         partition_cols=["bucket"],
     )
     ev = _read(spark, sf_dir, "events")
@@ -1059,9 +1030,9 @@ def q_m11_file_pruned_merge(spark, sf_dir):
     whose key range overlaps it: the manifest prunes the planning probe
     itself, every unmatched file is carried into the new snapshot BY
     HARD LINK (same inode — pinned), and at least one file is genuinely
-    rewritten. The default stays False (the whole-table path keeps the
-    steady-state mirror elision; see docs/SCALE.md) — this gate is the
-    opt-in path's end-to-end proof. Waves hold disjoint increasing
+    rewritten. The default stays False (the probe scan pays off only on
+    a multi-file layout; see docs/SCALE.md) — this gate is the opt-in
+    path's end-to-end proof. Waves hold disjoint increasing
     version ranges, so sequential MERGE == global latest-per-key with
     delete-last over the included rows, which the oracle recomputes."""
     import tempfile
@@ -1077,16 +1048,9 @@ def q_m11_file_pruned_merge(spark, sf_dir):
     from arcane_framework_scala_spark.sinks.table_stats import table_stats
 
     _harden_session(spark)
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    table = "arcm.gate.m11"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     run_dir = tempfile.mkdtemp(prefix="arcane_m11_run_")
     target = DurableCatalogTarget(
-        spark, os.path.join(run_dir, "t"), table, file_group_pruning=True
+        spark, os.path.join(run_dir, "t"), "m11", file_group_pruning=True
     )
     ev = _read(spark, sf_dir, "events")
     mx = ev.agg(F.max("event_id")).first()[0]
@@ -2207,19 +2171,12 @@ def q_x7_snapshot_audit(spark, sf_dir):
     )
 
     _harden_session(spark)
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    table = "arcm.gate.x7"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     run_dir = tempfile.mkdtemp(prefix="arcane_x7_run_")
     # 5-row files fragment every snapshot so the stats trigger has
     # small-file pressure to detect (the merged table is ~|users| rows,
     # which is only ~12 at sf0.001)
     target = DurableCatalogTarget(
-        spark, os.path.join(run_dir, "t"), table, max_rows_per_file=5
+        spark, os.path.join(run_dir, "t"), "x7", max_rows_per_file=5
     )
     ev = _read(spark, sf_dir, "events")
     mx = ev.agg(F.max("event_id")).first()[0]
@@ -2289,8 +2246,8 @@ FROM ranked WHERE rk = 1 AND NOT del
 
 
 def _web_ingest_setup(spark, sf_dir, gate: str):
-    """Shared m9/a21 scaffolding: a fresh durable CoW target (table
-    ``arcm.gate.<gate>``), the canonical-URL-keyed CDC batch projection,
+    """Shared m9/a21 scaffolding: a fresh durable CoW target in a new
+    temp dir, the canonical-URL-keyed CDC batch projection,
     and the three disjoint crawl-wave predicates. The wave thresholds
     aggregate max(doc_id) from the RAW documents scan (not the
     regexp-heavy canonicalized projection)."""
@@ -2302,16 +2259,9 @@ def _web_ingest_setup(spark, sf_dir, gate: str):
     )
 
     _harden_session(spark)
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    table = f"arcm.gate.{gate}"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     run_dir = tempfile.mkdtemp(prefix=f"arcane_{gate}_run_")
     target = DurableCatalogTarget(
-        spark, os.path.join(run_dir, "t"), table, max_rows_per_file=500
+        spark, os.path.join(run_dir, "t"), gate, max_rows_per_file=500
     )
     batch = _docs_with_urls(spark, sf_dir).select(
         mssql_merge_key("canon_url").alias("ARCANE_MERGE_KEY"),
@@ -2420,6 +2370,12 @@ def q_t_ivm_state_merge(spark, sf_dir):
     from arcane_framework_scala_spark.operators import ivm
 
     target, sink, batch, waves = _web_ingest_setup(spark, sf_dir, "tivm")
+    # the state table lives in the MERGE-capable catalog
+    jar = os.path.join(
+        REPO_ROOT, "javaext", "mem-catalog.jar"
+    )
+    spark.sql(f"ADD JAR {jar}")
+    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
     state = "arcm.gate.tivm_state"
     spark.sql(f"DROP TABLE IF EXISTS {state}")
     spark.sql(
@@ -2633,13 +2589,6 @@ def q_t_ivm_live_maintain(spark, sf_dir):
     )
 
     _harden_session(spark)
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    table = "arcm.gate.tlive"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     run_dir = tempfile.mkdtemp(prefix="arcane_tlive_run_")
     incoming = os.path.join(run_dir, "incoming")
     os.makedirs(incoming)
@@ -2663,7 +2612,7 @@ def q_t_ivm_live_maintain(spark, sf_dir):
                 os.rename(os.path.join(sub, fn), dst)
                 os.utime(dst, (mtime + i * 1000, mtime + i * 1000))
 
-    target = DurableCatalogTarget(spark, os.path.join(run_dir, "t"), table)
+    target = DurableCatalogTarget(spark, os.path.join(run_dir, "t"), "tlive")
     maintainer = ivm.StreamingViewMaintainer(
         target, group_col="host", size_col="n_chars"
     )
@@ -2734,13 +2683,6 @@ def q_t_ivm_live_deletes(spark, sf_dir):
     )
 
     _harden_session(spark)
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    table = "arcm.gate.tlivedel"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     run_dir = tempfile.mkdtemp(prefix="arcane_tlivedel_run_")
     incoming = os.path.join(run_dir, "incoming")
     os.makedirs(incoming)
@@ -2787,7 +2729,7 @@ def q_t_ivm_live_deletes(spark, sf_dir):
                 os.rename(os.path.join(sub, fn), dst)
                 os.utime(dst, (mtime + i * 1000, mtime + i * 1000))
 
-    target = DurableCatalogTarget(spark, os.path.join(run_dir, "t"), table)
+    target = DurableCatalogTarget(spark, os.path.join(run_dir, "t"), "tlivedel")
     maintainer = ivm.StreamingViewMaintainer(
         target, group_col="host", size_col="n_chars"
     )

@@ -1,12 +1,12 @@
-"""DurableCatalogTarget: real MERGE INTO + durable copy-on-write snapshots
-on one table (the unified Iceberg-CoW shape — the reference gets it from
+"""DurableCatalogTarget: copy-on-write merges + durable snapshots on one
+table (the unified Iceberg-CoW shape — the reference gets it from
 Trino-on-Iceberg, ``JdbcMergeServiceClient.scala:62-91``).
 
-The split this class closes: CatalogTarget executes the generated MERGE
-for real but its MemCatalog store is in-memory; SnapshotParquetTarget is
-durable and maintainable but merges through merge_apply. Here every merge
-executes as real SQL AND commits a durable parquet snapshot that the
-X1-X4 maintenance family manages."""
+Every merge runs the M1-M3 semantics through merge_apply (checked against
+the generated MERGE SQL in test_mem_catalog_merge.py) and commits a
+durable parquet snapshot that the X1-X4 maintenance family manages; the
+partitioned and file-group paths rewrite only the touched group and
+carry the rest by hard link."""
 
 import os
 import uuid
@@ -42,22 +42,9 @@ WAVE2 = [
 ]
 
 
-def _mem_available(spark) -> bool:
-    try:
-        spark.sql("SHOW TABLES IN mem.itest").collect()
-        return True
-    except Exception:  # noqa: BLE001 — jar not on the session classpath
-        return False
-
-
 @pytest.fixture()
 def target(spark, tmp_path):
-    if not _mem_available(spark):
-        pytest.skip("mem catalog jar not loaded in this session")
-    name = f"mem.itest.dur_{uuid.uuid4().hex[:10]}"
-    t = DurableCatalogTarget(spark, str(tmp_path / "t"), name)
-    yield t
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    return DurableCatalogTarget(spark, str(tmp_path / "t"), "dur")
 
 
 def _rows(df):
@@ -87,17 +74,15 @@ def test_merge_commits_durable_snapshots(spark, target):
     assert target.versions() == [1, 2]
     final = target.read()
     assert _rows(final) == _expected_two_waves(spark)
-    # the catalog execution table mirrors the durable snapshot
-    assert _rows(spark.table(target.table)) == _rows(final)
     # time travel: v=1 is the bootstrapped wave-1 state (D never inserted)
     assert _rows(target.read_version(1)) == [("k1", 1, 1, 10), ("k2", 2, 2, 20)]
 
 
 def test_crash_between_merge_and_commit_loses_nothing(spark, target):
-    """Durable truth is the snapshot layout: a crash after the MERGE ran
+    """Durable truth is the snapshot layout: a crash after the merge ran
     but before the snapshot commit leaves _CURRENT at the old version,
-    and the retried batch replays onto it cleanly (the catalog table is
-    re-hydrated, never trusted)."""
+    and the retried batch replays onto it cleanly (every merge reads
+    _CURRENT; nothing is kept between merges)."""
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     sink.apply(spark.createDataFrame(WAVE1, BATCH_SCHEMA))
 
@@ -111,7 +96,7 @@ def test_crash_between_merge_and_commit_loses_nothing(spark, target):
         target.merge(
             spark.createDataFrame(WAVE2, BATCH_SCHEMA), SQL_SERVER_CHANGE_TRACKING
         )
-    # the MERGE mutated the catalog table, but durable state is untouched
+    # the merge ran, but durable state is untouched
     assert target.versions() == [1]
     assert _rows(target.read()) == [("k1", 1, 1, 10), ("k2", 2, 2, 20)]
 
@@ -120,18 +105,6 @@ def test_crash_between_merge_and_commit_loses_nothing(spark, target):
     sink.apply(spark.createDataFrame(WAVE2, BATCH_SCHEMA))
     assert target.versions() == [1, 2]
     assert _rows(target.read()) == _expected_two_waves(spark)
-
-
-def test_hydrate_never_trusts_a_leftover_catalog_table(spark, target):
-    """A catalog table left behind by a crashed run (or another session's
-    table of the same name) must not leak into the merged state."""
-    spark.createDataFrame(
-        [("junk", 99, 9, 9)],
-        "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, user_id long, score long",
-    ).writeTo(target.table).create()
-    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
-    sink.apply(spark.createDataFrame(WAVE1, BATCH_SCHEMA))
-    assert _rows(target.read()) == [("k1", 1, 1, 10), ("k2", 2, 2, 20)]
 
 
 def test_maintenance_runs_on_the_same_table(spark, target, tmp_path):
@@ -175,7 +148,7 @@ def test_watermark_survives_the_session(spark, target, tmp_path):
     store = target.watermark_store()
     store.commit(Watermark(version="2", timestamp="2026-08-15T00:00:00+00:00"))
 
-    reborn = DurableCatalogTarget(spark, str(tmp_path / "t"), target.table)
+    reborn = DurableCatalogTarget(spark, str(tmp_path / "t"), "dur")
     wm = reborn.watermark_store().read()
     assert wm is not None and wm.version == "2"
     assert remove_orphan_files(reborn.snapshots) == []
@@ -183,9 +156,9 @@ def test_watermark_survives_the_session(spark, target, tmp_path):
 
 
 def test_schema_drift_widens_the_durable_table(spark, target):
-    """T8 through the CoW cycle: a batch carrying a new column triggers
-    ALTER TABLE ADD COLUMNS on the execution table, and the widened
-    schema lands in the committed snapshot (old rows null-padded)."""
+    """T8 through the CoW cycle: a batch carrying a new column widens
+    the merged table, and the widened schema lands in the committed
+    snapshot (old rows null-padded)."""
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     sink.apply(spark.createDataFrame(WAVE1, BATCH_SCHEMA))
     drifted = spark.createDataFrame(
@@ -197,7 +170,7 @@ def test_schema_drift_widens_the_durable_table(spark, target):
     assert "region" in final.columns
     rows = {r["ARCANE_MERGE_KEY"]: r["region"] for r in final.collect()}
     assert rows["k4"] == "eu" and rows["k1"] is None
-    # the widened table keeps merging (hydrate handles the wider schema)
+    # the widened table keeps merging
     sink.apply(
         spark.createDataFrame(
             [("k1", 7, "U", 1, 12, "us")], BATCH_SCHEMA + ", region string"
@@ -224,66 +197,55 @@ def test_partitioned_snapshots_prune_on_read(spark, tmp_path):
     hive-partitioned snapshots, and a read with a partition predicate
     reaches the scan as a PartitionFilter (directory pruning — the
     Iceberg partition-spec equivalent)."""
-    import uuid as _uuid
-
     from arcane_framework_scala_spark.plans.audit import audit_plan
     from arcane_framework_scala_spark.sinks.maintenance import (
         expire_snapshots,
         optimize_snapshot,
     )
 
-    if not _mem_available(spark):
-        pytest.skip("mem catalog jar not loaded in this session")
-    name = f"mem.itest.part_{_uuid.uuid4().hex[:10]}"
     target = DurableCatalogTarget(
-        spark, str(tmp_path / "t"), name, partition_cols=["event_type"]
+        spark, str(tmp_path / "t"), "part", partition_cols=["event_type"]
     )
-    try:
-        wave1 = [
-            ("k1", 1, "U", 1, 10, "click"),
-            ("k2", 2, "U", 2, 20, "view"),
-            ("k3", 3, "U", 3, 30, "click"),
-        ]
-        wave2 = [
-            ("k1", 4, "U", 1, 11, "click"),
-            ("k4", 5, "U", 4, 40, "scroll"),
-        ]
-        schema = BATCH_SCHEMA.replace("score long", "score long, event_type string")
-        sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
-        sink.apply(spark.createDataFrame(wave1, schema))
-        sink.apply(spark.createDataFrame(wave2, schema))
+    wave1 = [
+        ("k1", 1, "U", 1, 10, "click"),
+        ("k2", 2, "U", 2, 20, "view"),
+        ("k3", 3, "U", 3, 30, "click"),
+    ]
+    wave2 = [
+        ("k1", 4, "U", 1, 11, "click"),
+        ("k4", 5, "U", 4, 40, "scroll"),
+    ]
+    schema = BATCH_SCHEMA.replace("score long", "score long, event_type string")
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    sink.apply(spark.createDataFrame(wave1, schema))
+    sink.apply(spark.createDataFrame(wave2, schema))
 
-        # hive layout on disk
-        assert os.path.isdir(tmp_path / "t" / "v=2" / "event_type=click")
-        # full state survives the partitioned round-trip
-        got = {r["ARCANE_MERGE_KEY"]: r["event_type"] for r in target.read().collect()}
-        assert got == {"k1": "click", "k2": "view", "k3": "click", "k4": "scroll"}
+    # hive layout on disk
+    assert os.path.isdir(tmp_path / "t" / "v=2" / "event_type=click")
+    # full state survives the partitioned round-trip
+    got = {r["ARCANE_MERGE_KEY"]: r["event_type"] for r in target.read().collect()}
+    assert got == {"k1": "click", "k2": "view", "k3": "click", "k4": "scroll"}
 
-        # partition predicate reaches the scan as a PartitionFilter
-        pruned = target.read().filter(F.col("event_type") == "click")
-        a = audit_plan(pruned)
-        assert a.partition_filter_scans >= 1, a.plan
-        assert any("event_type" in p for p in a.partition_filters), (
-            a.partition_filters
-        )
-        assert pruned.count() == 2
+    # partition predicate reaches the scan as a PartitionFilter
+    pruned = target.read().filter(F.col("event_type") == "click")
+    a = audit_plan(pruned)
+    assert a.partition_filter_scans >= 1, a.plan
+    assert any("event_type" in p for p in a.partition_filters), (
+        a.partition_filters
+    )
+    assert pruned.count() == 2
 
-        # maintenance still works on the partitioned layout
-        optimize_snapshot(target.snapshots, target_file_bytes=128 << 20)
-        assert {r["ARCANE_MERGE_KEY"] for r in target.read().collect()} == {
-            "k1", "k2", "k3", "k4",
-        }
-        assert expire_snapshots(target.snapshots, keep_last=1) == [1, 2]
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    # maintenance still works on the partitioned layout
+    optimize_snapshot(target.snapshots, target_file_bytes=128 << 20)
+    assert {r["ARCANE_MERGE_KEY"] for r in target.read().collect()} == {
+        "k1", "k2", "k3", "k4",
+    }
+    assert expire_snapshots(target.snapshots, keep_last=1) == [1, 2]
 
 
 def _partitioned_target(spark, tmp_path, tag):
-    if not _mem_available(spark):
-        pytest.skip("mem catalog jar not loaded in this session")
-    name = f"mem.itest.pr_{tag}_{uuid.uuid4().hex[:8]}"
     return DurableCatalogTarget(
-        spark, str(tmp_path / tag), name, partition_cols=["event_type"]
+        spark, str(tmp_path / tag), tag, partition_cols=["event_type"]
     )
 
 
@@ -313,58 +275,55 @@ def test_pruned_merge_leaves_untouched_partitions_byte_identical(
     group is pruned, untouched files are carried by hard link exactly
     as an Iceberg manifest carries them by reference."""
     target = _partitioned_target(spark, tmp_path, "pin")
-    try:
-        sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
-        sink.apply(
-            spark.createDataFrame(
-                [
-                    ("k1", 1, "U", 1, 10, "click"),
-                    ("k2", 2, "U", 2, 20, "view"),
-                    ("k3", 3, "U", 3, 30, "scroll"),
-                ],
-                PART_SCHEMA,
-            )
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    sink.apply(
+        spark.createDataFrame(
+            [
+                ("k1", 1, "U", 1, 10, "click"),
+                ("k2", 2, "U", 2, 20, "view"),
+                ("k3", 3, "U", 3, 30, "scroll"),
+            ],
+            PART_SCHEMA,
         )
-        v1 = _dir_hashes(os.path.join(target.snapshots.path, "v=1"))
-        # wave 2 touches ONLY the click partition
-        sink.apply(
-            spark.createDataFrame(
-                [("k1", 4, "U", 1, 11, "click")], PART_SCHEMA
-            )
+    )
+    v1 = _dir_hashes(os.path.join(target.snapshots.path, "v=1"))
+    # wave 2 touches ONLY the click partition
+    sink.apply(
+        spark.createDataFrame(
+            [("k1", 4, "U", 1, 11, "click")], PART_SCHEMA
         )
-        v2_dir = os.path.join(target.snapshots.path, "v=2")
-        v2 = _dir_hashes(v2_dir)
-        for part in ("event_type=view", "event_type=scroll"):
-            b = {k: h for k, h in v1.items() if k.startswith(part)}
-            a = {k: h for k, h in v2.items() if k.startswith(part)}
-            assert b and a == b, (part, b, a)
-            # carried by hard link: same inode, zero data movement
-            for rel in b:
-                assert os.path.samefile(
-                    os.path.join(target.snapshots.path, "v=1", rel),
-                    os.path.join(v2_dir, rel),
-                ), rel
-        # the touched partition WAS rewritten (new files)
-        clicks_before = {k for k in v1 if k.startswith("event_type=click")}
-        clicks_after = {k for k in v2 if k.startswith("event_type=click")}
-        assert not (clicks_before & clicks_after)
-        got = {
-            r["ARCANE_MERGE_KEY"]: r["score"] for r in target.read().collect()
-        }
-        assert got == {"k1": 11, "k2": 20, "k3": 30}
-        # hard links survive expiry of the source snapshot: the link
-        # count is the manifest refcount
-        from arcane_framework_scala_spark.sinks.maintenance import (
-            expire_snapshots,
-        )
+    )
+    v2_dir = os.path.join(target.snapshots.path, "v=2")
+    v2 = _dir_hashes(v2_dir)
+    for part in ("event_type=view", "event_type=scroll"):
+        b = {k: h for k, h in v1.items() if k.startswith(part)}
+        a = {k: h for k, h in v2.items() if k.startswith(part)}
+        assert b and a == b, (part, b, a)
+        # carried by hard link: same inode, zero data movement
+        for rel in b:
+            assert os.path.samefile(
+                os.path.join(target.snapshots.path, "v=1", rel),
+                os.path.join(v2_dir, rel),
+            ), rel
+    # the touched partition WAS rewritten (new files)
+    clicks_before = {k for k in v1 if k.startswith("event_type=click")}
+    clicks_after = {k for k in v2 if k.startswith("event_type=click")}
+    assert not (clicks_before & clicks_after)
+    got = {
+        r["ARCANE_MERGE_KEY"]: r["score"] for r in target.read().collect()
+    }
+    assert got == {"k1": 11, "k2": 20, "k3": 30}
+    # hard links survive expiry of the source snapshot: the link
+    # count is the manifest refcount
+    from arcane_framework_scala_spark.sinks.maintenance import (
+        expire_snapshots,
+    )
 
-        assert expire_snapshots(target.snapshots, keep_last=1) == [1]
-        still = {
-            r["ARCANE_MERGE_KEY"]: r["score"] for r in target.read().collect()
-        }
-        assert still == got
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {target.table}")
+    assert expire_snapshots(target.snapshots, keep_last=1) == [1]
+    still = {
+        r["ARCANE_MERGE_KEY"]: r["score"] for r in target.read().collect()
+    }
+    assert still == got
 
 
 def test_pruned_merge_rewrites_old_partition_of_a_moved_key(spark, tmp_path):
@@ -372,41 +331,38 @@ def test_pruned_merge_rewrites_old_partition_of_a_moved_key(spark, tmp_path):
     partition too (it holds a matched key), or the row would be
     resurrected from the carried-over files."""
     target = _partitioned_target(spark, tmp_path, "move")
-    try:
-        sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
-        sink.apply(
-            spark.createDataFrame(
-                [
-                    ("k1", 1, "U", 1, 10, "click"),
-                    ("k2", 2, "U", 2, 20, "view"),
-                ],
-                PART_SCHEMA,
-            )
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    sink.apply(
+        spark.createDataFrame(
+            [
+                ("k1", 1, "U", 1, 10, "click"),
+                ("k2", 2, "U", 2, 20, "view"),
+            ],
+            PART_SCHEMA,
         )
-        # k1 moves click -> view; the click partition must lose it
-        sink.apply(
-            spark.createDataFrame([("k1", 3, "U", 1, 11, "view")], PART_SCHEMA)
-        )
-        rows = {
-            r["ARCANE_MERGE_KEY"]: (r["event_type"], r["score"])
-            for r in target.read().collect()
-        }
-        assert rows == {"k1": ("view", 11), "k2": ("view", 20)}
-        # no stale k1 copy under the old partition dir
-        old = target.read().filter(
-            (F.col("event_type") == "click")
-        ).count()
-        assert old == 0
-        # a delete prunes to the partition holding the matched key even
-        # though the batch's own partition value is the row's old home
-        sink.apply(
-            spark.createDataFrame([("k2", 4, "D", 2, 20, "view")], PART_SCHEMA)
-        )
-        assert {
-            r["ARCANE_MERGE_KEY"] for r in target.read().collect()
-        } == {"k1"}
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {target.table}")
+    )
+    # k1 moves click -> view; the click partition must lose it
+    sink.apply(
+        spark.createDataFrame([("k1", 3, "U", 1, 11, "view")], PART_SCHEMA)
+    )
+    rows = {
+        r["ARCANE_MERGE_KEY"]: (r["event_type"], r["score"])
+        for r in target.read().collect()
+    }
+    assert rows == {"k1": ("view", 11), "k2": ("view", 20)}
+    # no stale k1 copy under the old partition dir
+    old = target.read().filter(
+        (F.col("event_type") == "click")
+    ).count()
+    assert old == 0
+    # a delete prunes to the partition holding the matched key even
+    # though the batch's own partition value is the row's old home
+    sink.apply(
+        spark.createDataFrame([("k2", 4, "D", 2, 20, "view")], PART_SCHEMA)
+    )
+    assert {
+        r["ARCANE_MERGE_KEY"] for r in target.read().collect()
+    } == {"k1"}
 
 
 def test_pruned_merge_schema_drift_falls_back_to_full_rewrite(
@@ -416,42 +372,39 @@ def test_pruned_merge_schema_drift_falls_back_to_full_rewrite(
     the full-table path: all partitions are rewritten with the new
     column and values stay right."""
     target = _partitioned_target(spark, tmp_path, "drift")
-    try:
-        sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
-        sink.apply(
-            spark.createDataFrame(
-                [
-                    ("k1", 1, "U", 1, 10, "click"),
-                    ("k2", 2, "U", 2, 20, "view"),
-                ],
-                PART_SCHEMA,
-            )
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    sink.apply(
+        spark.createDataFrame(
+            [
+                ("k1", 1, "U", 1, 10, "click"),
+                ("k2", 2, "U", 2, 20, "view"),
+            ],
+            PART_SCHEMA,
         )
-        sink.apply(
-            spark.createDataFrame(
-                [("k1", 3, "U", 1, 11, "click", "us")],
-                PART_SCHEMA + ", region string",
-            )
+    )
+    sink.apply(
+        spark.createDataFrame(
+            [("k1", 3, "U", 1, 11, "click", "us")],
+            PART_SCHEMA + ", region string",
         )
-        rows = {
-            r["ARCANE_MERGE_KEY"]: (r["score"], r["region"])
-            for r in target.read().collect()
-        }
-        assert rows == {"k1": (11, "us"), "k2": (20, None)}
-        # and the NEXT non-drifting merge prunes again on the widened table
-        v2 = _dir_hashes(os.path.join(target.snapshots.path, "v=2"))
-        sink.apply(
-            spark.createDataFrame(
-                [("k1", 5, "U", 1, 12, "click", "us")],
-                PART_SCHEMA + ", region string",
-            )
+    )
+    rows = {
+        r["ARCANE_MERGE_KEY"]: (r["score"], r["region"])
+        for r in target.read().collect()
+    }
+    assert rows == {"k1": (11, "us"), "k2": (20, None)}
+    # and the NEXT non-drifting merge prunes again on the widened table
+    v2 = _dir_hashes(os.path.join(target.snapshots.path, "v=2"))
+    sink.apply(
+        spark.createDataFrame(
+            [("k1", 5, "U", 1, 12, "click", "us")],
+            PART_SCHEMA + ", region string",
         )
-        v3 = _dir_hashes(os.path.join(target.snapshots.path, "v=3"))
-        view_b = {k: h for k, h in v2.items() if k.startswith("event_type=view")}
-        view_a = {k: h for k, h in v3.items() if k.startswith("event_type=view")}
-        assert view_b and view_a == view_b
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {target.table}")
+    )
+    v3 = _dir_hashes(os.path.join(target.snapshots.path, "v=3"))
+    view_b = {k: h for k, h in v2.items() if k.startswith("event_type=view")}
+    view_a = {k: h for k, h in v3.items() if k.startswith("event_type=view")}
+    assert view_b and view_a == view_b
 
 
 def test_pruned_merge_randomized_waves_match_ground_truth(spark, tmp_path):
@@ -467,52 +420,42 @@ def test_pruned_merge_randomized_waves_match_ground_truth(spark, tmp_path):
         merge_apply,
     )
 
-    if not _mem_available(spark):
-        pytest.skip("mem catalog jar not loaded in this session")
     rng = random.Random(42)
     target = _partitioned_target(spark, tmp_path, "fuzz")
-    plain = DurableCatalogTarget(
-        spark,
-        str(tmp_path / "plain"),
-        f"mem.itest.fuzzplain_{uuid.uuid4().hex[:8]}",
+    plain = DurableCatalogTarget(spark, str(tmp_path / "plain"), "plain")
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    plain_sink = MergeSink(
+        target=plain, dialect=SQL_SERVER_CHANGE_TRACKING
     )
-    try:
-        sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
-        plain_sink = MergeSink(
-            target=plain, dialect=SQL_SERVER_CHANGE_TRACKING
-        )
-        etypes = ["click", "view", "scroll"]
-        ver = 0
-        truth = None  # plain DataFrame ground truth via merge_apply
-        for wave in range(5):
-            rows = []
-            for _ in range(rng.randrange(4, 10)):
-                ver += 1
-                k = f"k{rng.randrange(12)}"
-                op = rng.choice(["U", "U", "U", "D"])
-                rows.append(
-                    (k, ver, op, rng.randrange(100),
-                     rng.randrange(1000), rng.choice(etypes))
-                )
-            batch = spark.createDataFrame(rows, PART_SCHEMA)
-            sink.apply(batch)
-            plain_sink.apply(batch)
-            if truth is None:
-                truth = target.read_version(1)  # bootstrap semantics
-            else:
-                truth = merge_apply(
-                    truth, batch, SQL_SERVER_CHANGE_TRACKING
-                ).localCheckpoint()
-            got = target.read()
-            d1 = got.exceptAll(truth).count()
-            d2 = truth.exceptAll(got).count()
-            assert d1 == 0 and d2 == 0, f"wave {wave}: {d1}/{d2} rows off"
-        p = plain.read()
-        assert p.exceptAll(got).count() == 0
-        assert got.exceptAll(p).count() == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {target.table}")
-        spark.sql(f"DROP TABLE IF EXISTS {plain.table}")
+    etypes = ["click", "view", "scroll"]
+    ver = 0
+    truth = None  # plain DataFrame ground truth via merge_apply
+    for wave in range(5):
+        rows = []
+        for _ in range(rng.randrange(4, 10)):
+            ver += 1
+            k = f"k{rng.randrange(12)}"
+            op = rng.choice(["U", "U", "U", "D"])
+            rows.append(
+                (k, ver, op, rng.randrange(100),
+                 rng.randrange(1000), rng.choice(etypes))
+            )
+        batch = spark.createDataFrame(rows, PART_SCHEMA)
+        sink.apply(batch)
+        plain_sink.apply(batch)
+        if truth is None:
+            truth = target.read_version(1)  # bootstrap semantics
+        else:
+            truth = merge_apply(
+                truth, batch, SQL_SERVER_CHANGE_TRACKING
+            ).localCheckpoint()
+        got = target.read()
+        d1 = got.exceptAll(truth).count()
+        d2 = truth.exceptAll(got).count()
+        assert d1 == 0 and d2 == 0, f"wave {wave}: {d1}/{d2} rows off"
+    p = plain.read()
+    assert p.exceptAll(got).count() == 0
+    assert got.exceptAll(p).count() == 0
 
 
 def test_file_group_pruned_merge_on_sorted_layout(spark, tmp_path):
@@ -521,135 +464,123 @@ def test_file_group_pruned_merge_on_sorted_layout(spark, tmp_path):
     file rewrites only that file — every unmatched file is carried by
     hard link, byte-identical; an insert-only batch carries ALL files;
     a drifting batch falls back to the full rewrite."""
-    if not _mem_available(spark):
-        pytest.skip("mem catalog jar not loaded in this session")
     from arcane_framework_scala_spark.sinks.maintenance import (
         optimize_snapshot,
     )
 
-    name = f"mem.itest.fg_{uuid.uuid4().hex[:8]}"
     target = DurableCatalogTarget(
-        spark, str(tmp_path / "fg"), name, file_group_pruning=True
+        spark, str(tmp_path / "fg"), "fg", file_group_pruning=True
     )
-    try:
-        sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
-        rows = [(f"k{i:03d}", 1, "U", i, i * 10) for i in range(60)]
-        sink.apply(spark.createDataFrame(rows, BATCH_SCHEMA))
-        # sort-compact on the merge key into several files (v=2)
-        optimize_snapshot(
-            target.snapshots,
-            target_file_bytes=1000,
-            sort_cols=["ARCANE_MERGE_KEY"],
-        )
-        v2_dir = os.path.join(target.snapshots.path, "v=2")
-        files = sorted(
-            f for f in os.listdir(v2_dir)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        assert len(files) >= 3, files
-        # manifest on the sorted layout: the probe scan itself is pruned
-        # at planning time to the key-range-overlapping files
-        from arcane_framework_scala_spark.sinks import manifest as mf
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    rows = [(f"k{i:03d}", 1, "U", i, i * 10) for i in range(60)]
+    sink.apply(spark.createDataFrame(rows, BATCH_SCHEMA))
+    # sort-compact on the merge key into several files (v=2)
+    optimize_snapshot(
+        target.snapshots,
+        target_file_bytes=1000,
+        sort_cols=["ARCANE_MERGE_KEY"],
+    )
+    v2_dir = os.path.join(target.snapshots.path, "v=2")
+    files = sorted(
+        f for f in os.listdir(v2_dir)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    assert len(files) >= 3, files
+    # manifest on the sorted layout: the probe scan itself is pruned
+    # at planning time to the key-range-overlapping files
+    from arcane_framework_scala_spark.sinks import manifest as mf
 
-        mf.build_manifest(target.snapshots, ["ARCANE_MERGE_KEY"])
-        # pick every key living in ONE file -> the rewrite group is it
-        one = spark.read.parquet(os.path.join(v2_dir, files[0]))
-        keys = [r["ARCANE_MERGE_KEY"] for r in one.collect()]
-        cand = mf.plan_files(
-            target.snapshots, "ARCANE_MERGE_KEY",
-            lo=min(keys), hi=max(keys),
-        )
-        assert len(cand) < len(files)  # planning pruned the probe itself
-        batch = spark.createDataFrame(
-            [(k, 2, "U", 0, 999) for k in keys], BATCH_SCHEMA
-        )
-        sink.apply(batch)
-        v3_dir = os.path.join(target.snapshots.path, "v=3")
-        for f in files[1:]:  # unmatched files carried: same inode
+    mf.build_manifest(target.snapshots, ["ARCANE_MERGE_KEY"])
+    # pick every key living in ONE file -> the rewrite group is it
+    one = spark.read.parquet(os.path.join(v2_dir, files[0]))
+    keys = [r["ARCANE_MERGE_KEY"] for r in one.collect()]
+    cand = mf.plan_files(
+        target.snapshots, "ARCANE_MERGE_KEY",
+        lo=min(keys), hi=max(keys),
+    )
+    assert len(cand) < len(files)  # planning pruned the probe itself
+    batch = spark.createDataFrame(
+        [(k, 2, "U", 0, 999) for k in keys], BATCH_SCHEMA
+    )
+    sink.apply(batch)
+    v3_dir = os.path.join(target.snapshots.path, "v=3")
+    for f in files[1:]:  # unmatched files carried: same inode
+        assert os.path.samefile(
+            os.path.join(v2_dir, f), os.path.join(v3_dir, f)
+        ), f
+    assert not os.path.exists(os.path.join(v3_dir, files[0]))
+    got = {
+        r["ARCANE_MERGE_KEY"]: r["score"] for r in target.read().collect()
+    }
+    assert all(got[k] == 999 for k in keys)
+    assert len(got) == 60
+
+    # insert-only batch: no matched keys -> ALL files carried
+    v3_files = set(os.listdir(v3_dir))
+    sink.apply(
+        spark.createDataFrame([("new1", 3, "U", 99, 1)], BATCH_SCHEMA)
+    )
+    v4_dir = os.path.join(target.snapshots.path, "v=4")
+    for f in v3_files:
+        if f.endswith(".parquet") and not f.startswith((".", "_")):
             assert os.path.samefile(
-                os.path.join(v2_dir, f), os.path.join(v3_dir, f)
+                os.path.join(v3_dir, f), os.path.join(v4_dir, f)
             ), f
-        assert not os.path.exists(os.path.join(v3_dir, files[0]))
-        got = {
-            r["ARCANE_MERGE_KEY"]: r["score"] for r in target.read().collect()
-        }
-        assert all(got[k] == 999 for k in keys)
-        assert len(got) == 60
+    assert target.read().count() == 61
 
-        # insert-only batch: no matched keys -> ALL files carried
-        v3_files = set(os.listdir(v3_dir))
-        sink.apply(
-            spark.createDataFrame([("new1", 3, "U", 99, 1)], BATCH_SCHEMA)
+    # schema drift falls back to the full rewrite and stays correct
+    sink.apply(
+        spark.createDataFrame(
+            [("k000", 4, "U", 0, 1000, "eu")],
+            BATCH_SCHEMA + ", region string",
         )
-        v4_dir = os.path.join(target.snapshots.path, "v=4")
-        for f in v3_files:
-            if f.endswith(".parquet") and not f.startswith((".", "_")):
-                assert os.path.samefile(
-                    os.path.join(v3_dir, f), os.path.join(v4_dir, f)
-                ), f
-        assert target.read().count() == 61
-
-        # schema drift falls back to the full rewrite and stays correct
-        sink.apply(
-            spark.createDataFrame(
-                [("k000", 4, "U", 0, 1000, "eu")],
-                BATCH_SCHEMA + ", region string",
-            )
-        )
-        rows2 = {
-            r["ARCANE_MERGE_KEY"]: (r["score"], r["region"])
-            for r in target.read().collect()
-        }
-        assert rows2["k000"] == (1000, "eu")
-        assert rows2["new1"] == (1, None)
-        assert target.versions() == [1, 2, 3, 4, 5]
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    )
+    rows2 = {
+        r["ARCANE_MERGE_KEY"]: (r["score"], r["region"])
+        for r in target.read().collect()
+    }
+    assert rows2["k000"] == (1000, "eu")
+    assert rows2["new1"] == (1, None)
+    assert target.versions() == [1, 2, 3, 4, 5]
 
 
 def test_file_group_hydration_has_no_file_name_in_literal(
     spark, tmp_path, monkeypatch
 ):
-    """The rewrite group is hydrated by READING the matched files
+    """The rewrite group is read by opening the matched files
     directly — never by filtering the full scan through an IN-literal
     of file-path strings. Under a uniformly-hashing merge key the
     matched set approaches |files|, and a 10^5-string IN list bloats
     the plan; a multi-path parquet scan stays O(1) plan nodes at any
     file count (VERDICT r7 'what's wrong' 1)."""
-    if not _mem_available(spark):
-        pytest.skip("mem catalog jar not loaded in this session")
-    from arcane_framework_scala_spark.sinks.merge_sink import CatalogTarget
+    from arcane_framework_scala_spark.sinks import merge_sink
 
-    name = f"mem.itest.fgplan_{uuid.uuid4().hex[:8]}"
     target = DurableCatalogTarget(
-        spark, str(tmp_path / "fgplan"), name, file_group_pruning=True,
+        spark, str(tmp_path / "fgplan"), "fgplan", file_group_pruning=True,
         max_rows_per_file=20,
     )
-    try:
-        sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
-        rows = [(f"k{i:03d}", 1, "U", i, i * 10) for i in range(60)]
-        sink.apply(spark.createDataFrame(rows, BATCH_SCHEMA))
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    rows = [(f"k{i:03d}", 1, "U", i, i * 10) for i in range(60)]
+    sink.apply(spark.createDataFrame(rows, BATCH_SCHEMA))
 
-        captured = []
-        real_overwrite = CatalogTarget.overwrite
+    captured = []
+    real_merge_apply = merge_sink.merge_apply
 
-        def spy(self, df):
-            captured.append(df)
-            return real_overwrite(self, df)
+    def spy(group, source, dialect):
+        captured.append(group)
+        return real_merge_apply(group, source, dialect)
 
-        monkeypatch.setattr(CatalogTarget, "overwrite", spy)
-        sink.apply(  # second merge takes the file-pruned path
-            spark.createDataFrame([("k001", 2, "U", 1, 999)], BATCH_SCHEMA)
-        )
-        assert captured, "pruned merge never hydrated the rewrite group"
-        plan = (
-            captured[-1]._jdf.queryExecution().optimizedPlan().toString()
-        )
-        for marker in ("__f", " IN (", "INSET", "input_file_name"):
-            assert marker not in plan, f"{marker!r} leaked into plan:\n{plan}"
-        assert target.read().count() == 60
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    monkeypatch.setattr(merge_sink, "merge_apply", spy)
+    sink.apply(  # second merge takes the file-pruned path
+        spark.createDataFrame([("k001", 2, "U", 1, 999)], BATCH_SCHEMA)
+    )
+    assert captured, "pruned merge never read the rewrite group"
+    plan = (
+        captured[-1]._jdf.queryExecution().optimizedPlan().toString()
+    )
+    for marker in ("__f", " IN (", "INSET", "input_file_name"):
+        assert marker not in plan, f"{marker!r} leaked into plan:\n{plan}"
+    assert target.read().count() == 60
 
 
 def test_pruned_merge_survives_glob_metachars_in_table_path(
@@ -662,31 +593,25 @@ def test_pruned_merge_survives_glob_metachars_in_table_path(
     metacharacters or spaces used to duplicate rows between the
     rewrite group and the linked carry set, or fail to resolve
     (ADVICE r8, merge_sink glob/percent hazard)."""
-    if not _mem_available(spark):
-        pytest.skip("mem catalog jar not loaded in this session")
-    name = f"mem.itest.fgmeta_{uuid.uuid4().hex[:8]}"
     evil = tmp_path / "fg [glob]{x} dir"
     target = DurableCatalogTarget(
-        spark, str(evil), name, file_group_pruning=True,
+        spark, str(evil), "fgmeta", file_group_pruning=True,
         max_rows_per_file=20,
     )
-    try:
-        sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
-        rows = [(f"k{i:03d}", 1, "U", i, i * 10) for i in range(60)]
-        sink.apply(spark.createDataFrame(rows, BATCH_SCHEMA))
-        # second merge takes the file-pruned path in the evil dir
-        sink.apply(
-            spark.createDataFrame([("k001", 2, "U", 1, 999)], BATCH_SCHEMA)
-        )
-        got = {
-            r["ARCANE_MERGE_KEY"]: r["score"]
-            for r in target.read().collect()
-        }
-        assert len(got) == 60  # no row duplicated into the new snapshot
-        assert target.read().count() == 60
-        assert got["k001"] == 999 and got["k002"] == 20
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    rows = [(f"k{i:03d}", 1, "U", i, i * 10) for i in range(60)]
+    sink.apply(spark.createDataFrame(rows, BATCH_SCHEMA))
+    # second merge takes the file-pruned path in the evil dir
+    sink.apply(
+        spark.createDataFrame([("k001", 2, "U", 1, 999)], BATCH_SCHEMA)
+    )
+    got = {
+        r["ARCANE_MERGE_KEY"]: r["score"]
+        for r in target.read().collect()
+    }
+    assert len(got) == 60  # no row duplicated into the new snapshot
+    assert target.read().count() == 60
+    assert got["k001"] == 999 and got["k002"] == 20
 
 
 def test_commit_time_is_stamped_at_the_pointer_flip(spark, tmp_path):
@@ -828,7 +753,7 @@ def test_rename_claim_detects_midflight_winner_and_crash_leftovers(
 
 def test_commit_conflict_retries_and_converges(spark, target):
     """MergeSink's retry policy treats the conflict as transient: the
-    retried merge re-hydrates from the winner's snapshot and lands the
+    retried merge re-reads the winner's snapshot and lands the
     batch — no lost update, Iceberg's optimistic-concurrency loop."""
     from arcane_framework_scala_spark.sinks.merge_sink import (
         CommitConflictError,
@@ -858,41 +783,90 @@ def test_commit_conflict_retries_and_converges(spark, target):
     assert _rows(target.read()) == _expected_two_waves(spark)
 
 
-def test_steady_state_merges_skip_the_rehydrate(spark, target):
-    """Consecutive merges from one process (the foreachBatch shape) must
-    not pay a full-table re-read per batch: the mirror property proves
-    the catalog already IS the current snapshot. Crash leftovers clear
-    the property, so the skip is never trusted blindly."""
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through the status tracker's job
+    group."""
+    sc = spark.sparkContext
+    group = f"merge-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "merge")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_after_maintenance_runs_the_same_jobs(spark, target):
+    """X1 compaction between two merges costs the next merge nothing
+    extra: every merge reads _CURRENT, so the merge right after
+    optimize_snapshot runs as many Spark jobs as the merge before it. A
+    target that kept a copy of the table between merges would have to
+    re-read all of it once compaction moved the pointer."""
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     sink.apply(spark.createDataFrame(WAVE1, BATCH_SCHEMA))
-
-    calls = {"overwrites": 0}
-    orig = target.catalog.overwrite
-
-    def counting(df):
-        calls["overwrites"] += 1
-        return orig(df)
-
-    target.catalog.overwrite = counting
-    sink.apply(spark.createDataFrame(WAVE2, BATCH_SCHEMA))
-    assert calls["overwrites"] == 0  # steady state: no rehydrate
-    assert _rows(target.read()) == _expected_two_waves(spark)
-
-    # another writer advances the durable truth behind our back -> the
-    # mirror is stale and the next merge MUST rehydrate
-    target.snapshots._commit(target.read().filter("ARCANE_MERGE_KEY != 'k4'"))
-    sink.apply(spark.createDataFrame([("k9", 9, "U", 9, 90)], BATCH_SCHEMA))
-    assert calls["overwrites"] == 1  # rehydrated from the foreign snapshot
+    wave2 = spark.createDataFrame(WAVE2, BATCH_SCHEMA)
+    before = _jobs_in_group(spark, lambda: sink.apply(wave2))
+    optimize_snapshot(target.snapshots, target_file_bytes=128 << 20)
+    wave3 = spark.createDataFrame([("k9", 9, "U", 9, 90)], BATCH_SCHEMA)
+    after = _jobs_in_group(spark, lambda: sink.apply(wave3))
+    assert before > 0 and after == before, (before, after)
     keys = {r["ARCANE_MERGE_KEY"] for r in target.read().collect()}
-    assert keys == {"k1", "k9"}  # k4 gone (foreign snapshot), k9 merged
+    assert keys == {"k1", "k4", "k9"}
+
+
+def test_partitioned_writes_one_file_per_touched_partition(spark, tmp_path):
+    """Merge results and overwrite input are hash-distributed by the
+    partition columns before the write, so a pruned merge and an
+    overwrite each leave ONE data file in every partition they touch,
+    however many tasks held its rows (shuffle-partition coalescing is
+    off here so the upstream tasks really are many)."""
+    etypes = ["click", "view", "scroll", "hover"]
+
+    def wave(ver, keys):
+        rows = [(f"k{i}", ver, "U", i, ver * i, etypes[i % 4]) for i in keys]
+        return spark.createDataFrame(rows, PART_SCHEMA).repartition(4)
+
+    def files(version):
+        vdir = os.path.join(target.snapshots.path, f"v={version}")
+        out = {}
+        for part in sorted(os.listdir(vdir)):
+            if part.startswith("event_type="):
+                out[part] = sorted(
+                    f for f in os.listdir(os.path.join(vdir, part))
+                    if f.endswith(".parquet")
+                )
+        return out
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        target = _partitioned_target(spark, tmp_path, "files")
+        sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+        sink.apply(wave(1, range(200)))
+        assert [len(f) for f in files(1).values()] == [1, 1, 1, 1]
+        # touches click (i % 4 == 0) and view (i % 4 == 1) only
+        sink.apply(wave(2, [i for i in range(200) if i % 4 < 2]))
+        v1, v2 = files(1), files(2)
+        assert [len(f) for f in v2.values()] == [1, 1, 1, 1], v2
+        for part in ("event_type=click", "event_type=view"):
+            assert v2[part] != v1[part]  # rewritten
+        for part in ("event_type=hover", "event_type=scroll"):
+            assert v2[part] == v1[part]  # carried
+        target.overwrite(wave(3, range(120)).drop("SYS_CHANGE_OPERATION"))
+        assert [len(f) for f in files(3).values()] == [1, 1, 1, 1]
+        assert target.read().count() == 120
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_polling_loop_with_inloop_maintenance_on_the_durable_table(
     spark, target, tmp_path
 ):
     """The complete production loop on ONE durable table: the T1 polling
-    runner merges each wave with real MERGE INTO (CoW snapshot per
-    batch), the T2 watermark lives in the snapshot layout, and the
+    runner merges each wave (CoW snapshot per batch), the T2 watermark lives in the snapshot layout, and the
     every-N maintenance hook compacts/expires the SAME files mid-stream —
     the reference's TargetMaintenanceProcessor wiring, jar-less."""
     import time
@@ -949,8 +923,8 @@ TIE_SCHEMA = "ARCANE_MERGE_KEY string, createdon long, name string, qty long"
 @pytest.mark.parametrize("case", ["bootstrap", "new_key", "matched_key"])
 def test_tied_versions_collapse_the_same_way_on_both_sinks(spark, target, tmp_path, case):
     """Two rows of one key tied at the max version (two blobs with one
-    creation second) become the same single row on the DataFrame merge
-    and on the catalog MERGE — never a cardinality violation on a
+    creation second) become the same single row on the snapshot target
+    and on the durable target — never a cardinality violation on a
     matched key, never a doubled insert of a new one."""
     from arcane_framework_scala_spark.queries.merge import UPSERT_BLOB
     from arcane_framework_scala_spark.sinks.merge_sink import SnapshotParquetTarget

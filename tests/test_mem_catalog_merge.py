@@ -15,14 +15,22 @@ import uuid
 import pyspark.sql.functions as F
 import pytest
 
-from arcane_framework_scala_spark.operators.merge_apply import merge_apply
+from arcane_framework_scala_spark.operators.merge_apply import (
+    _collapse_ties,
+    merge_apply,
+)
 from arcane_framework_scala_spark.queries.merge import (
     SQL_SERVER_CHANGE_TRACKING,
     SYNAPSE_LINK,
     UPSERT_BLOB,
     build_merge_query,
 )
-from arcane_framework_scala_spark.sinks.merge_sink import CatalogTarget, MergeSink
+from arcane_framework_scala_spark.schema.schema import MERGE_KEY_COLUMN
+from arcane_framework_scala_spark.sinks.merge_sink import (
+    CatalogTarget,
+    MergeSink,
+    _drift_fields,
+)
 
 
 def _mem_available(spark) -> bool:
@@ -47,38 +55,125 @@ def _table(mem, rows, schema):
     return name
 
 
-def _run_generated_merge(mem, dialect, target_rows, batch_rows, schema):
-    """Execute build_merge_query output on a real table; return (rows,
-    expected-from-merge_apply on the same target/batch)."""
-    tgt = _table(mem, target_rows, schema)
-    batch = mem.createDataFrame(batch_rows, schema)
+_BLOB_SCHEMA = "ARCANE_MERGE_KEY string, createdon long, payload string"
+
+#: each dialect's marker column added to a batch: (type, value for a
+#: deleted / live row). UPSERT_BLOB has none, so its "deleted" rows are
+#: plain upserts
+_SHAPES = {
+    "M1": (SQL_SERVER_CHANGE_TRACKING, "string", lambda d: "D" if d else "U"),
+    "M2": (SYNAPSE_LINK, "boolean", lambda d: d),
+    "M3": (UPSERT_BLOB, None, None),
+}
+
+#: target rows (key, version, payload, *target_extra) and batch rows
+#: (key, version, deleted, payload, *batch_extra); ``payload`` renames the
+#: batch's payload column, ``replay`` applies the batch twice
+_CASES = {
+    "upsert": dict(
+        target=[("k1", 10, "old1"), ("k2", 10, "old2")],
+        batch=[("k2", 11, False, "new2"), ("k3", 11, False, "new3"),
+               ("k3", 9, False, "stale")],
+    ),
+    "delete": dict(
+        target=[("k1", 10, "old1"), ("k2", 10, "old2")],
+        batch=[("k1", 11, True, "gone"), ("k2", 11, False, "new2"),
+               ("k3", 11, False, "new3")],
+    ),
+    "delete_absent_key": dict(
+        target=[("k1", 10, "old1")],
+        batch=[("k4", 11, True, "never"), ("k1", 9, False, "older")],
+    ),
+    "t8_drift_column": dict(
+        target=[("k1", 10, "old1"), ("k2", 10, "old2")],
+        batch=[("k1", 11, False, "new1", "eu"), ("k3", 11, False, "new3", "us")],
+        batch_extra=", region string",
+    ),
+    "column_differs_only_in_case": dict(
+        target=[("k1", 10, "old1"), ("k2", 10, "old2")],
+        batch=[("k1", 11, False, "new1"), ("k3", 11, False, "new3")],
+        payload="PAYLOAD",
+    ),
+    "target_column_absent_from_batch": dict(
+        target=[("k1", 10, "old1", "keep1"), ("k2", 10, "old2", "keep2")],
+        batch=[("k1", 11, False, "new1"), ("k3", 11, False, "new3")],
+        target_extra=", note string",
+    ),
+    "tie_at_max_version": dict(
+        target=[("k1", 10, "old1"), ("k2", 10, "old2")],
+        batch=[("k1", 11, False, "tied-b"), ("k1", 11, False, "tied-a"),
+               ("k2", 11, False, "tied-live"), ("k2", 11, True, "tied-dead"),
+               ("k3", 11, False, "tied-y"), ("k3", 11, False, "tied-x")],
+    ),
+    "replayed_batch": dict(
+        target=[("k1", 10, "old1"), ("k2", 10, "old2")],
+        batch=[("k1", 11, True, "gone"), ("k2", 11, False, "new2"),
+               ("k3", 11, False, "new3")],
+        replay=True,
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "shape,case",
+    [
+        pytest.param(shape, case, id=f"{shape}-{case}")
+        for shape in _SHAPES
+        for case in _CASES
+    ],
+)
+def test_generated_merge_sql_matches_merge_apply(mem, shape, case):
+    """Differential oracle: the generated MERGE SQL, staged and migrated
+    the way ``CatalogTarget`` runs it, and ``merge_apply`` on the same
+    target (widened by the same T8 check) give identical rows."""
+    dialect, marker_type, marker = _SHAPES[shape]
+    c = _CASES[case]
+    vcol = dialect.version_column
+    t_schema = (
+        f"ARCANE_MERGE_KEY string, {vcol} long, payload string"
+        + c.get("target_extra", "")
+    )
+    marker_col = (
+        f", {dialect.non_data_columns[0]} {marker_type}" if marker_type else ""
+    )
+    b_schema = (
+        f"ARCANE_MERGE_KEY string, {vcol} long{marker_col}, "
+        f"{c.get('payload', 'payload')} string" + c.get("batch_extra", "")
+    )
+    batch = mem.createDataFrame(
+        [
+            (k, v, *([marker(dead)] if marker else []), *rest)
+            for k, v, dead, *rest in c["batch"]
+        ],
+        b_schema,
+    )
+    times = 2 if c.get("replay") else 1
+
+    tgt = _table(mem, c["target"], t_schema)
+    staged = _collapse_ties(batch, dialect, MERGE_KEY_COLUMN, version_first=True)
     view = f"staged_{uuid.uuid4().hex[:10]}"
-    batch.createOrReplaceTempView(view)
+    staged.createOrReplaceTempView(view)
     try:
-        sql = build_merge_query(dialect, tgt, view, batch.columns, deduplicate=True)
-        mem.sql(sql)
+        CatalogTarget(mem, tgt)._migrate_schema(batch, dialect)
+        sql = build_merge_query(
+            dialect, tgt, view, staged.columns, deduplicate=False
+        )
+        for _ in range(times):
+            mem.sql(sql)
+        cols = mem.table(tgt).columns
         got = sorted(tuple(r) for r in mem.table(tgt).collect())
     finally:
         mem.catalog.dropTempView(view)
         mem.sql(f"DROP TABLE {tgt}")
-    target_df = mem.createDataFrame(target_rows, schema)
-    expected = sorted(
-        tuple(r) for r in merge_apply(target_df, batch, dialect).collect()
-    )
-    return got, expected
 
-
-_BLOB_SCHEMA = "ARCANE_MERGE_KEY string, createdon long, payload string"
-
-
-def test_upsert_blob_generated_sql_matches_merge_apply(mem):
-    target = [("k1", 10, "old1"), ("k2", 10, "old2")]
-    batch = [("k2", 11, "new2"), ("k3", 11, "new3"), ("k3", 9, "stale")]
-    got, expected = _run_generated_merge(
-        mem, UPSERT_BLOB, target, batch, _BLOB_SCHEMA
-    )
+    merged = mem.createDataFrame(c["target"], t_schema)
+    for f in _drift_fields(batch, merged.columns, dialect):
+        merged = merged.withColumn(f.name, F.lit(None).cast(f.dataType))
+    for _ in range(times):
+        merged = merge_apply(merged, batch, dialect)
+    expected = sorted(tuple(r) for r in merged.select(*cols).collect())
     assert got == expected
-    assert ("k2", 11, "new2") in got and ("k3", 11, "new3") in got
+    assert got
 
 
 _CT_SCHEMA = (

@@ -184,6 +184,25 @@ def test_merge_apply_upsert_blob(spark):
     assert got == {("k1", "new"), ("k2", "fresh")}
 
 
+
+def test_merge_apply_matches_columns_without_regard_to_case(spark):
+    """A batch column ``REGION`` is the target's ``region`` (Spark
+    resolves names case-insensitively, and so does the MERGE SQL): its
+    values land in that column instead of being replaced by NULL."""
+    target = spark.createDataFrame(
+        [("k1", 1, "eu"), ("k2", 1, "us")],
+        "ARCANE_MERGE_KEY string, createdon long, region string",
+    )
+    changes = spark.createDataFrame(
+        [("k1", 2, "apac"), ("k3", 2, "emea")],
+        "ARCANE_MERGE_KEY string, createdon long, REGION string",
+    )
+    out = merge_apply(target, changes, UPSERT_BLOB)
+    assert out.columns == ["ARCANE_MERGE_KEY", "createdon", "region"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("k1", 2, "apac"), ("k2", 1, "us"), ("k3", 2, "emea"),
+    ]
+
 def test_in_band_watermark_rows_roundtrip(spark):
     from arcane_framework_scala_spark.operators.watermark_rows import (
         attach_watermark_row,

@@ -60,3 +60,30 @@ def test_drifted_update_overwrites_matched_row(spark, tmp_path):
     )
     row = target.read().first()
     assert row["v"] == "v2" and row["flag"] is True and row["createdon"] == 5
+
+
+def test_drift_check_matches_columns_without_regard_to_case(spark, tmp_path):
+    """A batch column that differs from a target column only in case is
+    not drift: the target keeps its one ``region`` column and its
+    existing values, and the batch's ``REGION`` values merge into it."""
+    target = SnapshotParquetTarget(spark, str(tmp_path / "t"))
+    sink = MergeSink(target=target, dialect=UPSERT_BLOB)
+    sink.apply(
+        _batch(
+            spark,
+            [("k1", 1, "eu"), ("k2", 1, "us")],
+            "ARCANE_MERGE_KEY string, createdon long, region string",
+        )
+    )
+    sink.apply(
+        _batch(
+            spark,
+            [("k1", 2, "apac")],
+            "ARCANE_MERGE_KEY string, createdon long, REGION string",
+        )
+    )
+    out = target.read()
+    assert out.columns == ["ARCANE_MERGE_KEY", "createdon", "region"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("k1", 2, "apac"), ("k2", 1, "us"),
+    ]
