@@ -504,7 +504,7 @@ class DurableCatalogTarget:
     ``file_group_pruning=True`` extends the pruning BELOW partitions to
     Iceberg's real granularity on unpartitioned tables: the rewrite
     group is the set of FILES containing a matched merge key (found by
-    the same broadcast-semi-join planning scan, grouped by
+    a planning scan that semi-joins the broadcast batch keys, grouped by
     ``input_file_name``), every unmatched file is carried by hard link,
     and inserts land in the rewritten output. How much it prunes is the
     layout's property, exactly as on Iceberg: after
@@ -593,16 +593,16 @@ class DurableCatalogTarget:
         cannot gain columns — or lacks the partition columns), in which
         case the caller runs the full-table path.
 
-        The rewrite group = partitions the batch writes into (its own
-        partition values) ∪ base partitions holding a matched merge key
-        (an update may MOVE a row between partitions: the old partition
-        must be rewritten without it). The key probe is a broadcast
-        semi-join over a two-column pruned scan — the planning read
-        Iceberg CoW also performs to find matched files; what it never
-        does is rewrite unmatched ones. On a sort-compacted layout
-        (``optimize_snapshot(sort_cols)``) the same carry logic extends
-        below partitions to file-level key ranges; partition granularity
-        is what the layout guarantees without footer reads."""
+        The rewrite group = partitions the batch writes into ∪ base
+        partitions holding a matched merge key (an update may MOVE a row
+        between partitions: the old partition must be rewritten without
+        it). ONE planning query — the read Iceberg CoW also performs to
+        find matched files — groups the base rows (partition, leaf dir,
+        key matched in the broadcast batch or not) together with the
+        batch's own partition values by partition, so one row per
+        partition reaches the driver: in the group or not, and the leaf
+        dirs to carry, named by the engine (hive escaping, glob
+        metacharacters and NULL partitions stay safe)."""
         from urllib.parse import unquote, urlparse
 
         pcols = self.snapshots.partition_cols
@@ -612,38 +612,34 @@ class DurableCatalogTarget:
             return False  # T8 drift -> full rewrite
         if any(c not in source.columns for c in pcols):
             return False
-        src_parts = source.select(*pcols).distinct()
-        keys = source.select(MERGE_KEY_COLUMN).distinct()
-        matched_parts = (
-            base_df.join(F.broadcast(keys), MERGE_KEY_COLUMN, "leftsemi")
-            .select(*pcols)
-            .distinct()
+        # a repeated batch key only repeats rows inside a group: no distinct
+        matched = F.broadcast(source.select(MERGE_KEY_COLUMN, F.lit(True).alias("__m")))
+        base_side = (
+            base_df.select(
+                *pcols,
+                MERGE_KEY_COLUMN,
+                F.regexp_replace(F.input_file_name(), "/[^/]*$", "").alias("__d"),
+            )
+            .join(matched, MERGE_KEY_COLUMN, "left")
+            .drop(MERGE_KEY_COLUMN)
         )
-        touched = [
-            tuple(r)
-            for r in src_parts.unionByName(matched_parts).distinct().collect()
-        ]  # metadata-sized: bounded by the batch's partition spread
-        # untouched leaf dirs, named by the ENGINE (hive-escaping-proof):
-        # distinct parent dir per base data file, anti-joined null-safe
-        # against the touched tuples (a NULL partition value is still one
-        # partition). One row per leaf dir reaches the driver.
-        part_schema = source.select(*pcols).schema
-        tdf = self.spark.createDataFrame(touched, part_schema)
-        dirs = base_df.select(
-            *pcols,
-            F.regexp_replace(F.input_file_name(), "/[^/]*$", "").alias("__d"),
-        ).distinct()
-        cond = None
-        for c in pcols:
-            e = dirs[c].eqNullSafe(tdf[c])
-            cond = e if cond is None else cond & e
+        # batch values take the base's (inferred) partition types, so both
+        # sides group on the same key
+        source_side = source.select(
+            *[F.col(c).cast(base_df.schema[c].dataType) for c in pcols],
+            F.lit(None).cast("string").alias("__d"),
+            F.lit(True).alias("__m"),
+        )
+        plan = (
+            base_side.unionByName(source_side)
+            .groupBy(*pcols)
+            .agg(F.max("__m").alias("__m"), F.collect_set("__d").alias("__d"))
+            .collect()
+        )  # metadata-sized: one row per partition
+        touched = [tuple(r)[: len(pcols)] for r in plan if r["__m"]]
         carry = sorted(
-            {
-                os.path.relpath(unquote(urlparse(r["__d"]).path), base_dir)
-                for r in dirs.join(tdf, cond, "left_anti")
-                .select("__d")
-                .collect()
-            }
+            os.path.relpath(unquote(urlparse(d).path), base_dir)
+            for r in plan if not r["__m"] for d in r["__d"]
         )
         # the rewrite group is a partition filter — the scan prunes to
         # the touched directories
@@ -697,7 +693,8 @@ class DurableCatalogTarget:
         base_df = self.spark.read.parquet(glob_escape(base_dir))
         if _drift_fields(source, base_df.columns, dialect):
             return False  # T8 drift -> full rewrite
-        keys = source.select(MERGE_KEY_COLUMN).distinct()
+        # the semi-join ignores repeated keys: broadcast them as they come
+        keys = source.select(MERGE_KEY_COLUMN)
 
         # planning-time candidate pruning from the column-range manifest
         # (absent manifest -> every file is a candidate). deferred import:

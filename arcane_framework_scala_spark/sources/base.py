@@ -38,7 +38,9 @@ class CdcSource(Protocol):
 
     ``current_version()`` is the cheap probe (reference
     ``getCurrentVersion`` / blob max-createdOn); ``changes(since)`` yields
-    micro-batches strictly newer than the watermark."""
+    micro-batches strictly newer than the watermark. The listing sources
+    (blob, CDM) hand the probe's listing to the next ``changes()`` call,
+    so a poll that probes and then fetches lists once."""
 
     def current_version(self) -> dict: ...
 

@@ -62,22 +62,24 @@ class BlobListingSource:
     #: exclude files whose names start with any of these (commit markers etc.)
     exclude_prefixes: tuple[str, ...] = ("_", ".")
 
-    def _eligible(self, since_epoch: int | None) -> list[tuple[str, int]]:
+    #: the listing the last ``current_version()`` probe took, handed to
+    #: the next ``changes()`` call so one poll lists the bucket once
+    _probed: list[tuple[str, int]] | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    def _eligible(self) -> list[tuple[str, int]]:
         files = [
             (p, ts)
             for p, ts in _list_files(self.spark, self.path)
             if not p.rsplit("/", 1)[-1].startswith(self.exclude_prefixes)
         ]
-        if since_epoch is not None:
-            # reference filters createdOn >= watermark and relies on the
-            # version-guarded merge for replay idempotency
-            files = [(p, ts) for p, ts in files if ts >= since_epoch]
         return sorted(files, key=lambda x: (x[1], x[0]))
 
     def current_version(self) -> dict:
         """A2: max createdOn over the listing (driver-side fold)."""
-        files = self._eligible(None)
-        return {"version": max((ts for _, ts in files), default=0)}
+        self._probed = self._eligible()
+        return {"version": max((ts for _, ts in self._probed), default=0)}
 
     def _read(self, paths: list[str]) -> DataFrame:  # format-specific
         raise NotImplementedError
@@ -92,7 +94,15 @@ class BlobListingSource:
 
     def changes(self, since: dict | None) -> Iterator[MicroBatch]:
         since_epoch = (since or {}).get("version")
-        files = self._eligible(int(since_epoch) if since_epoch is not None else None)
+        files, self._probed = self._probed, None
+        if files is None:  # no probe before this call: list now
+            files = self._eligible()
+        if since_epoch is not None:
+            # reference filters createdOn >= watermark and relies on the
+            # version-guarded merge for replay idempotency; the watermark
+            # committed is the max over THIS listing, so a file landing
+            # after it is picked up by the next poll
+            files = [(p, ts) for p, ts in files if ts >= int(since_epoch)]
         for i in range(0, len(files), self.max_files_per_batch):
             chunk = files[i : i + self.max_files_per_batch]
             df = self._enrich(self._read([p for p, _ in chunk]))
@@ -117,7 +127,7 @@ class BlobListingSource:
         jvm = self.spark._jvm
         conf = self.spark._jsc.hadoopConfiguration()
         sized = []
-        for p, ts in self._eligible(None):
+        for p, ts in self._eligible():
             hp = jvm.org.apache.hadoop.fs.Path(p)
             sized.append((p, hp.getFileSystem(conf).getFileStatus(hp).getLen()))
         shards, group, group_bytes = [], [], 0

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import json
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,6 +84,12 @@ class SynapseCdmSource:
     spark: SparkSession
     container_path: str
     entity: str
+    #: the completed folders the last ``current_version()`` probe found,
+    #: handed to the next ``changes()`` call so one poll lists the
+    #: container and reads ``changelog.info`` once
+    _probed: list[str] | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
 
     # -- driver-side listing helpers (small metadata, never row data) ------
     def _fs(self):
@@ -135,8 +141,8 @@ class SynapseCdmSource:
         return folders
 
     def current_version(self) -> dict:
-        folders = self.completed_folders(None)
-        return {"version": folders[-1] if folders else ""}
+        self._probed = self.completed_folders(None)
+        return {"version": self._probed[-1] if self._probed else ""}
 
     # -- batch assembly ----------------------------------------------------
     def _typed(self, df: DataFrame, fields: list[tuple[str, T.DataType]]) -> DataFrame:
@@ -195,7 +201,12 @@ class SynapseCdmSource:
 
     def changes(self, since: dict | None) -> Iterator[MicroBatch]:
         since_folder = (since or {}).get("version") or None
-        for folder in self.completed_folders(since_folder):
+        folders, self._probed = self._probed, None
+        if folders is None:  # no probe before this call: list now
+            folders = self.completed_folders(None)
+        # the watermark committed is the last folder of THIS listing, so
+        # a folder completed after it is picked up by the next poll
+        for folder in [f for f in folders if not since_folder or f > since_folder]:
             df = self.read_batch(folder)
             wm = {"version": folder, "prefix": f"{folder}/"}
             if df is None:

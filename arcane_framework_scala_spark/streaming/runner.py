@@ -146,16 +146,21 @@ class StreamRunner:
         """One poll cycle; returns number of batches applied."""
         current = self.store.read()
         since = {"version": current.version} if current else None
+        head = None
         if current is not None:
             # T1: compare source head version against the stored watermark
             # before fetching (DefaultStreamDataProvider.scala:91-113) —
             # sources filter `version >= watermark` inclusively, so without
             # this probe an idle poll re-reads and re-merges the boundary
             # batch every cycle (a no-op data-wise, but wasted I/O at scale).
-            head = str(self.source.current_version().get("version", ""))
-            if head == current.version:
+            # The listing sources hand this probe's listing to the
+            # changes() call below: one listing per poll.
+            head = self.source.current_version()
+            if str(head.get("version", "")) == current.version:
                 if self.settings.advance_watermark_on_idle:
-                    self.store.commit(Watermark.now(version=head, prefix=current.prefix))
+                    self.store.commit(
+                        Watermark.now(version=current.version, prefix=current.prefix)
+                    )
                     self.metrics.watermark_updates += 1
                 self.metrics.last_watermark_age_seconds = 0.0
                 return 0
@@ -181,7 +186,8 @@ class StreamRunner:
             # Only when the changes() iterator genuinely yielded nothing —
             # a cancellation mid-iterator must leave the watermark at its
             # last merged position (merge-before-commit contract, T10/T2).
-            head = self.source.current_version()
+            if head is None:
+                head = self.source.current_version()
             wm = Watermark.now(
                 version=str(head.get("version", "")),
                 prefix=current.prefix if current else None,

@@ -101,3 +101,68 @@ def test_table_property_watermark_roundtrip(spark, tmp_path):
         assert store.read().version == "12346"
     finally:
         spark.sql("DROP TABLE IF EXISTS wm_target")
+
+
+def test_one_listing_per_poll(spark, tmp_path, monkeypatch):
+    """The runner's T1 head probe and the changes() call of the same
+    poll share one bucket listing; a changes() with no probe before it
+    lists on its own."""
+    import os
+
+    from arcane_framework_scala_spark.queries.merge import UPSERT_BLOB
+    from arcane_framework_scala_spark.sinks.merge_sink import (
+        MergeSink,
+        SnapshotParquetTarget,
+    )
+    from arcane_framework_scala_spark.sources import blob
+    from arcane_framework_scala_spark.streaming.runner import StreamRunner
+    from arcane_framework_scala_spark.streaming.watermark import (
+        FileWatermarkStore,
+    )
+
+    listings = []
+    real = blob._list_files
+
+    def counted(spark_, path):
+        listings.append(path)
+        return real(spark_, path)
+
+    monkeypatch.setattr(blob, "_list_files", counted)
+    bucket = tmp_path / "csv"
+    bucket.mkdir()
+
+    def land(name, rows, second):
+        p = bucket / name
+        p.write_text("id,name\n" + "\n".join(f"{i},{n}" for i, n in rows))
+        os.utime(p, (second, second))
+
+    source = BlobCsvSource(
+        spark=spark, path=str(bucket), primary_keys=["id"], schema="id long, name string"
+    )
+    runner = StreamRunner(
+        source=source,
+        sink=MergeSink(
+            target=SnapshotParquetTarget(spark, str(tmp_path / "target")),
+            dialect=UPSERT_BLOB,
+        ),
+        watermark_store=FileWatermarkStore(str(tmp_path / "wm.json")),
+    )
+    per_poll = []
+
+    def poll():
+        before = len(listings)
+        per_poll.append((runner.run_once(), len(listings) - before))
+
+    land("a.csv", [(1, "x"), (2, "y")], 1_000)
+    poll()  # no watermark yet: changes() lists on its own
+    land("b.csv", [(2, "z")], 2_000)
+    poll()  # probe sees a new head, changes() reuses its listing
+    poll()  # idle: the probe alone
+    assert per_poll == [(1, 1), (1, 1), (0, 1)]
+    assert runner.store.read().version == "2000"
+    rows = {r["id"]: r["name"] for r in runner.sink.target.read().collect()}
+    assert rows == {1: "x", 2: "z"}
+    # the idle probe's listing serves the next changes(); a changes()
+    # with no probe before it lists for itself
+    assert len(list(source.changes(None))) == 1 and len(listings) == 3
+    assert len(list(source.changes(None))) == 1 and len(listings) == 4

@@ -226,3 +226,51 @@ def test_read_batch_round_trips_do_not_grow_with_model_json(spark, tmp_path, mon
 
     round_trips(small)  # warm-up
     assert round_trips(big) == round_trips(small)
+
+
+def test_one_listing_per_poll(spark, cdm_container, tmp_path, monkeypatch):
+    """The runner's T1 head probe and the changes() call of the same
+    poll share one listing: each run_once lists the container and reads
+    changelog.info once, whether it merges, probes then merges, or
+    idles."""
+    from arcane_framework_scala_spark.streaming.runner import StreamRunner
+    from arcane_framework_scala_spark.streaming.watermark import (
+        FileWatermarkStore,
+    )
+
+    calls = {"list": 0, "changelog": 0}
+    for name, key in (("list_batch_folders", "list"), ("in_progress_folder", "changelog")):
+        real = getattr(SynapseCdmSource, name)
+
+        def counted(self, _real=real, _key=key):
+            calls[_key] += 1
+            return _real(self)
+
+        monkeypatch.setattr(SynapseCdmSource, name, counted)
+    src = SynapseCdmSource(spark=spark, container_path=cdm_container, entity="account")
+    runner = StreamRunner(
+        source=src,
+        sink=MergeSink(
+            target=SnapshotParquetTarget(spark, str(tmp_path / "target")),
+            dialect=SYNAPSE_LINK,
+        ),
+        watermark_store=FileWatermarkStore(str(tmp_path / "wm.json")),
+    )
+    per_poll = []
+
+    def poll():
+        before = dict(calls)
+        applied = runner.run_once()
+        per_poll.append(
+            (applied, calls["list"] - before["list"], calls["changelog"] - before["changelog"])
+        )
+
+    poll()  # no watermark yet: changes() lists on its own
+    # the in-progress folder completes: the probe sees a new head
+    (tmp_path / "cdm" / "Changelog" / "changelog.info").write_text(
+        "blobs/2025-09-01T03.00.00Z"
+    )
+    poll()
+    poll()  # idle: the probe alone
+    assert per_poll == [(2, 1, 1), (1, 1, 1), (0, 1, 1)]
+    assert runner.store.read().version == "2025-09-01T02.00.00Z"

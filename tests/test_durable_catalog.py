@@ -947,3 +947,111 @@ def test_tied_versions_collapse_the_same_way_on_both_sinks(spark, target, tmp_pa
     snapshot, durable = got
     assert snapshot == durable
     assert [(r["name"], r["qty"]) for r in snapshot] == [("tied-a", 1)]
+
+
+# (partition column DDL, wave-1 rows, wave-2 rows, leaf dirs wave 2 must
+# carry) per case; rows are (key, version, op, score, partition value).
+# Wave 1 fills four string partitions and the NULL one; the int case has
+# its own buckets.
+_BASE = [
+    ("k1", 1, "U", 10, "click"),
+    ("k2", 2, "U", 20, "view"),
+    ("k3", 3, "U", 30, "scroll"),
+    ("k4", 4, "U", 40, "hover"),
+    ("k5", 5, "U", 50, None),
+]
+_NULL_DIR = "event_type=__HIVE_DEFAULT_PARTITION__"
+_ALL = ["event_type=click", "event_type=view", "event_type=scroll",
+        "event_type=hover", _NULL_DIR]
+PLANNING_CASES = {
+    "null_partition_touched": (
+        "event_type string", _BASE, [("k5", 9, "U", 51, None)],
+        [d for d in _ALL if d != _NULL_DIR],
+    ),
+    "null_partition_carried": (
+        "event_type string", _BASE, [("k1", 9, "U", 11, "click")],
+        [d for d in _ALL if d != "event_type=click"],
+    ),
+    "int_partition": (
+        "bucket long",
+        [("k1", 1, "U", 10, 0), ("k2", 2, "U", 20, 1), ("k3", 3, "U", 30, 2)],
+        [("k2", 9, "U", 21, 1), ("k9", 9, "U", 90, 1)],
+        ["bucket=0", "bucket=2"],
+    ),
+    "only_new_partition": (
+        "event_type string", _BASE, [("k9", 9, "U", 90, "scrollback")], _ALL,
+    ),
+    "moved_key": (
+        "event_type string", _BASE, [("k1", 9, "U", 11, "view")],
+        ["event_type=scroll", "event_type=hover", _NULL_DIR],
+    ),
+    "duplicate_keys": (
+        "event_type string", _BASE,
+        [("k2", 8, "U", 21, "view"), ("k2", 9, "U", 22, "view"),
+         ("k3", 8, "U", 31, "scroll"), ("k3", 9, "D", 31, "scroll")],
+        ["event_type=click", "event_type=hover", _NULL_DIR],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PLANNING_CASES))
+def test_pruned_merge_planning_cases_match_ground_truth(spark, tmp_path, case):
+    """The one planning query finds the rewrite group and the carry list
+    together: every case lands where merge_apply on the whole base
+    snapshot lands, and exactly the expected leaf dirs are carried —
+    byte-identical, by hard link — while every other base dir is
+    rewritten."""
+    pcol_ddl, wave1, wave2, carried = PLANNING_CASES[case]
+    pcol = pcol_ddl.split()[0]
+    schema = (
+        "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, "
+        f"SYS_CHANGE_OPERATION string, score long, {pcol_ddl}"
+    )
+    target = DurableCatalogTarget(
+        spark, str(tmp_path / case), case, partition_cols=[pcol]
+    )
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    sink.apply(spark.createDataFrame(wave1, schema))
+    v1_dir = os.path.join(target.snapshots.path, "v=1")
+    v1 = _dir_hashes(v1_dir)
+    batch = spark.createDataFrame(wave2, schema)
+    sink.apply(batch)
+    assert target.versions() == [1, 2]
+
+    truth = merge_apply(target.read_version(1), batch, SQL_SERVER_CHANGE_TRACKING)
+    cols = sorted(truth.columns)
+    assert sorted(target.read().columns) == cols
+    assert _rows(target.read().select(*cols)) == _rows(truth.select(*cols))
+
+    v2_dir = os.path.join(target.snapshots.path, "v=2")
+    v2 = _dir_hashes(v2_dir)
+    for leaf in sorted({os.path.dirname(rel) for rel in v1}):
+        before = {k: h for k, h in v1.items() if os.path.dirname(k) == leaf}
+        after = {k: h for k, h in v2.items() if os.path.dirname(k) == leaf}
+        if leaf in carried:
+            assert after == before, (leaf, before, after)
+            for rel in before:
+                assert os.path.samefile(
+                    os.path.join(v1_dir, rel), os.path.join(v2_dir, rel)
+                ), rel
+        else:  # rewritten (or emptied): no base file survives as is
+            assert not set(before) & set(after), (leaf, before, after)
+
+
+def test_pruned_merge_plans_in_one_query(spark, tmp_path):
+    """A pruned merge runs one planning query before merge_apply — the
+    rewrite group and the carry list come from the same scan — so its
+    Spark job count stays at the measured floor."""
+    target = _partitioned_target(spark, tmp_path, "jobs")
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    sink.apply(spark.createDataFrame(
+        [("k1", 1, "U", 1, 10, "click"), ("k2", 2, "U", 2, 20, "view"),
+         ("k3", 3, "U", 3, 30, "scroll")],
+        PART_SCHEMA,
+    ))
+    wave2 = spark.createDataFrame(
+        [("k1", 4, "U", 1, 11, "view"), ("k4", 5, "U", 4, 40, "click")],
+        PART_SCHEMA,
+    )
+    jobs = _jobs_in_group(spark, lambda: sink.apply(wave2))
+    assert jobs == 8, jobs
