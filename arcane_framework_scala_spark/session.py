@@ -2,7 +2,7 @@
 
 The engine targets large clusters (100 TB-class inputs); the defaults here
 enable AQE (runtime re-planning, skew-join splitting, partition coalescing)
-and Arrow for the few pandas-UDF paths. Tests/bench run the same configs on
+and Arrow for the pandas-UDF operators. Tests/bench run the same configs on
 ``local[N]``.
 """
 
@@ -14,7 +14,7 @@ from pyspark.sql import SparkSession
 
 # Defaults chosen for scale: AQE fixes small/skewed shuffle partitions at
 # runtime, so a generous static shuffle partition count is safe; Arrow makes
-# the pandas-UDF fallback paths batch-transfer instead of pickling rows.
+# the pandas-UDF operators batch-transfer instead of pickling rows.
 SCALE_DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -54,3 +54,35 @@ def get_session(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+#: The javaext jar: the in-memory MERGE-capable catalog (``MemCatalog``)
+#: and the deletion-vector codec UDFs (``DvDiffUdf`` / ``DvBuildUdf``).
+#: It is read from ``javaext/`` in the checkout; ``javaext/build.sh``
+#: rebuilds it.
+JAVAEXT_JAR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "javaext",
+    "mem-catalog.jar",
+)
+
+
+def use_javaext(spark: SparkSession) -> None:
+    """Put :data:`JAVAEXT_JAR` on the session's classpath, once per
+    session: a jar already listed by the context (``spark.jars`` at
+    start-up, or an earlier call) is not added again. Raises
+    ``FileNotFoundError`` when the jar is missing."""
+    from urllib.parse import unquote
+
+    from arcane_framework_scala_spark.sources.paths import _sql_str_literal
+
+    jar = JAVAEXT_JAR
+    name = os.path.basename(jar)
+    listed = spark.sparkContext._jsc.sc().listJars().mkString("\n")
+    if any(unquote(u).rsplit("/", 1)[-1] == name for u in listed.split("\n")):
+        return
+    if not os.path.isfile(jar):
+        raise FileNotFoundError(
+            f"{jar} is missing; build it with javaext/build.sh"
+        )
+    spark.sql(f"ADD JAR {_sql_str_literal(jar)}")

@@ -1,4 +1,4 @@
-"""Delta CHANGE DATA FEED — jar-free read and write (r11).
+"""Delta CHANGE DATA FEED — read and write without a Delta jar (r11).
 
 The engine's core story is CDC (the reference ingests change feeds from
 external systems into lakehouse tables, ``docs/architecture.md``); since
@@ -25,11 +25,11 @@ Read semantics follow the public spec + Databricks CDF docs
   ``delete``, positions released are ``insert`` (never the whole file).
 
 Scale posture: per-version scans touch only the files the commit names
-(O(|delta|), the point of CDF); DV diffs decode EXECUTOR-side via
-``mapInPandas`` over one (file, old-descriptor, new-descriptor) row per
+(O(|delta|), the point of CDF); DV diffs decode EXECUTOR-side in the
+javaext ``DvDiffUdf`` over one (file, old-spec, new-spec) row per
 touched file, so the driver cost stays O(files) — the same discipline
-``delete_where`` adopted in r10. All row movement stays in Spark plans;
-nothing data-sized is collected.
+``delete_where``'s ``DvBuildUdf`` build keeps. All row movement stays in
+Spark plans; nothing data-sized is collected.
 
 The write half makes fixtures (and the engine's own tables) honest:
 ``update_where`` is a copy-on-write UPDATE that rewrites only touched
@@ -49,7 +49,6 @@ import os
 import time
 import uuid as uuid_mod
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from arcane_framework_scala_spark.sources import delta_reader as dr
@@ -415,48 +414,36 @@ _DV_DIFF_UDF = "arcane_dv_diff"
 _DV_BUILD_UDF = "arcane_dv_build"
 
 
-def _dv_diff_udf_ready(spark) -> bool:
-    """Register the JVM DV codec UDFs (javaext ``DvDiffUdf`` /
-    ``DvBuildUdf``) once per session; False when the jar is absent or
-    registration fails (callers keep the Python codec as the jar-less
-    fallback)."""
-    try:
-        if spark.catalog.functionExists(_DV_BUILD_UDF):
-            return True
-        jar = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__)
-            ))),
-            "javaext",
-            "mem-catalog.jar",
-        )
-        if not os.path.exists(jar):
-            return False
-        from pyspark.sql.types import (
-            ArrayType, BinaryType, LongType, StringType, StructField,
-            StructType,
-        )
+def _register_dv_udfs(spark) -> None:
+    """Register the javaext DV codec UDFs (``DvDiffUdf`` /
+    ``DvBuildUdf``) once per session. A missing jar or a failed
+    registration raises."""
+    if spark.catalog.functionExists(_DV_BUILD_UDF):
+        return
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, LongType, StringType, StructField,
+        StructType,
+    )
 
-        spark.sql(f"ADD JAR {jar}")
-        spark.udf.registerJavaFunction(
-            _DV_DIFF_UDF,
-            "arcanespark.dv.DvDiffUdf",
-            ArrayType(StructType([
-                StructField("pos", LongType()),
-                StructField("kind", StringType()),
-            ])),
-        )
-        spark.udf.registerJavaFunction(
-            _DV_BUILD_UDF,
-            "arcanespark.dv.DvBuildUdf",
-            StructType([
-                StructField("data", BinaryType()),
-                StructField("cardinality", LongType()),
-            ]),
-        )
-        return True
-    except Exception:
-        return False
+    from arcane_framework_scala_spark.session import use_javaext
+
+    use_javaext(spark)
+    spark.udf.registerJavaFunction(
+        _DV_DIFF_UDF,
+        "arcanespark.dv.DvDiffUdf",
+        ArrayType(StructType([
+            StructField("pos", LongType()),
+            StructField("kind", StringType()),
+        ])),
+    )
+    spark.udf.registerJavaFunction(
+        _DV_BUILD_UDF,
+        "arcanespark.dv.DvBuildUdf",
+        StructType([
+            StructField("data", BinaryType()),
+            StructField("cardinality", LongType()),
+        ]),
+    )
 
 
 def _dv_spec(path: str, desc: dict | None) -> str | None:
@@ -482,65 +469,30 @@ def _dv_spec(path: str, desc: dict | None) -> str | None:
 def _dv_positions_df(spark, path: str, pairs) -> DataFrame:
     """(rel, pos, kind) rows for same-path remove→add DV diffs, decoded
     EXECUTOR-side: input is one (rel, old-spec, new-spec) row per
-    touched file (driver O(files)); the JVM ``DvDiffUdf`` (r12) expands
-    each pair's roaring bitmaps and emits only the DIFF positions —
-    kind 'del' for newly-deleted, 'ins' for released (restored) rows.
-    No Python node in the feed plan (guide §4: the decode is pure byte
-    work, the worker round trip was the cost); jar-less installs fall
-    back to the r11 ``mapInPandas`` decode, bit-identical output.
+    touched file (driver O(files)); the JVM ``DvDiffUdf`` expands each
+    pair's roaring bitmaps and emits only the DIFF positions — kind
+    'del' for newly-deleted, 'ins' for released (restored) rows. No
+    Python node in the feed plan: the decode is pure byte work.
 
-    No repartition either way: the input is already ONE self-contained
-    row per touched file (createDataFrame spreads rows round-robin) and
-    the decode needs no grouping — a keyed repartition here only added
-    a shuffle stage to every DV-commit feed read (r11)."""
+    No repartition: the input is already ONE self-contained row per
+    touched file (createDataFrame spreads rows round-robin) and the
+    decode needs no grouping — a keyed repartition here only added a
+    shuffle stage to every DV-commit feed read."""
     import pyspark.sql.functions as F
 
-    if _dv_diff_udf_ready(spark):
-        rows = [
-            (rel, _dv_spec(path, o), _dv_spec(path, n))
-            for rel, o, n in pairs
-        ]
-        src = spark.createDataFrame(
-            rows, "rel string, old string, new string"
-        )
-        return src.select(
-            "rel",
-            F.explode(F.expr(f"{_DV_DIFF_UDF}(old, new)")).alias("__d"),
-        ).select(
-            "rel",
-            F.col("__d.pos").alias("pos"),
-            F.col("__d.kind").alias("kind"),
-        )
-
-    import pandas as pd
-
-    from arcane_framework_scala_spark.sources.delta_dv import read_dv
-
+    _register_dv_udfs(spark)
     rows = [
-        (rel, json.dumps(o) if o else None, json.dumps(n) if n else None)
-        for rel, o, n in pairs
+        (rel, _dv_spec(path, o), _dv_spec(path, n)) for rel, o, n in pairs
     ]
     src = spark.createDataFrame(rows, "rel string, old string, new string")
-
-    def gen(batches):
-        for pdf in batches:
-            rel_out, pos_out, kind_out = [], [], []
-            for rel, o, n in zip(pdf["rel"], pdf["old"], pdf["new"]):
-                empty = np.array([], dtype=np.int64)
-                old = read_dv(path, json.loads(o)) if o else empty
-                new = read_dv(path, json.loads(n)) if n else empty
-                newly = np.setdiff1d(new, old)
-                restored = np.setdiff1d(old, new)
-                rel_out.extend([rel] * (len(newly) + len(restored)))
-                pos_out.extend(newly.tolist())
-                pos_out.extend(restored.tolist())
-                kind_out.extend(["del"] * len(newly))
-                kind_out.extend(["ins"] * len(restored))
-            yield pd.DataFrame(
-                {"rel": rel_out, "pos": pos_out, "kind": kind_out}
-            )
-
-    return src.mapInPandas(gen, "rel string, pos long, kind string")
+    return src.select(
+        "rel",
+        F.explode(F.expr(f"{_DV_DIFF_UDF}(old, new)")).alias("__d"),
+    ).select(
+        "rel",
+        F.col("__d.pos").alias("pos"),
+        F.col("__d.kind").alias("kind"),
+    )
 
 
 def _additive_evolution(prev_meta: dict, new_meta: dict) -> bool:
@@ -894,10 +846,8 @@ class DeltaCdfTarget:
         return dr.read_delta(self.spark, self.path, version=version)
 
     def changes(self, v_from: int, v_to: int) -> DataFrame:
-        # localCheckpoint: Spark's row-level MERGE refuses a source
-        # whose lineage contains a Python map (the DV-diff
-        # mapInPandas is flagged non-deterministic); the feed is
-        # |delta|-sized, so materializing it is the cheap, correct cut
+        # localCheckpoint: the feed is |delta|-sized, so materializing
+        # it once cuts its per-commit lineage before the row-level MERGE
         return cdf_to_diff(
             delta_cdf(self.spark, self.path, v_from, v_to), self.keys
         ).localCheckpoint()
@@ -1002,9 +952,9 @@ class DeltaCdfSource:
         while lo < head:
             hi = min(lo + step, head)
             feed = delta_cdf(self.spark, self.path, lo, hi)
-            # localCheckpoint: the sink's row-level MERGE refuses a
-            # source with Python-map (DV-diff) lineage; the feed is
-            # |delta|-sized
+            # localCheckpoint: the feed is |delta|-sized, so
+            # materializing it once cuts its per-commit lineage before
+            # the sink's MERGE
             yield MicroBatch(
                 df=cdf_to_cdc_batch(feed, self.keys).localCheckpoint(),
                 watermark={"version": hi},

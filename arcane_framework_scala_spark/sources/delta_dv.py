@@ -1,8 +1,11 @@
-"""Delta Lake DELETION VECTORS, jar-free: the roaring-bitmap codec, DV
-file I/O, and descriptor resolution — from the PUBLIC formats only
-(delta.io PROTOCOL.md "Deletion Vectors" + the RoaringBitmap project's
-RoaringFormatSpec; the reference engine consumes Delta through its
-lakehouse runtime, this sandbox has no jar).
+"""Delta Lake DELETION VECTORS: the roaring-bitmap codec, DV file I/O,
+descriptor resolution and ``delete_where`` — from the PUBLIC formats
+only (delta.io PROTOCOL.md "Deletion Vectors" + the RoaringBitmap
+project's RoaringFormatSpec; the reference engine consumes Delta
+through its lakehouse runtime, no Delta jar is used here). The Python
+codec is the reference the javaext ``DvBuildUdf`` / ``DvDiffUdf`` are
+tested against, and the driver-side reader (:func:`read_dv`); the
+distributed build and decode run in those UDFs.
 
 Layers, bottom-up:
 
@@ -294,12 +297,11 @@ def delete_where(spark, table_path: str, predicate: str) -> int | None:
     rule: a file's new DV contains every previously deleted position)
     and the old entry removed — untouched files are never rewritten,
     the commit is metadata-sized. The bitmaps are built DISTRIBUTED
-    (r10): positions group by file executor-side and each file's
-    roaring bitmap serializes inside ``applyInPandas`` — the driver
-    collects one (file, bitmap-bytes) row per touched file, O(files ×
-    compressed-bitmap bytes), never O(deleted rows) (a 10⁹-row delete
-    used to be ~16 GB of driver pandas; now it is the DV bytes
-    themselves). The first DV commit upgrades the protocol by MERGING
+    (:func:`_build_dv_rows`): positions group by file executor-side and
+    each file's roaring bitmap serializes in the javaext ``DvBuildUdf``
+    — the driver collects one (file, bitmap-bytes) row per touched
+    file, O(files × compressed-bitmap bytes), never O(deleted rows).
+    The first DV commit upgrades the protocol by MERGING
     ``deletionVectors`` into the table's existing requirements
     (:func:`_merged_protocol`) — never clobbering legacy-implied
     features like columnMapping. Returns the new version, or None when
@@ -363,79 +365,55 @@ def delete_where(spark, table_path: str, predicate: str) -> int | None:
 
 def _build_dv_rows(spark, table_path: str, hits, old_descs: dict) -> list:
     """One ``(rel, data, cardinality)`` row per touched file — the
-    distributed bitmap build of :func:`delete_where`. JVM path (r12,
-    guide §4): positions group by file and the javaext ``DvBuildUdf``
-    unions the file's current DV (superset rule) and serializes the
-    roaring bitmap — byte-identical to the Python writer, pinned in
-    tests/test_dv_diff_jvm.py — so no Python node remains in the DV
-    WRITE path either. Jar-less installs (or >4096 pre-existing DVs,
-    past the literal-map cap) fall back to the r10 grouped-pandas
-    build. Either way the driver collects O(files × compressed-bitmap
-    bytes), never O(deleted rows)."""
+    distributed bitmap build of :func:`delete_where`. Positions group
+    by file; each file's current DV spec arrives through a
+    broadcast-joined ``(rel, spec)`` frame, and the javaext
+    ``DvBuildUdf`` unions it with the new positions (superset rule) and
+    serializes the roaring bitmap — byte-identical to
+    :func:`serialize_positions`, pinned in tests/test_dv_diff_jvm.py.
+    No Python node in the DV write path; the driver collects O(files ×
+    compressed-bitmap bytes), never O(deleted rows)."""
+    import pandas as pd
     import pyspark.sql.functions as F
 
     from arcane_framework_scala_spark.sources import delta_cdf as dcdf
-    from arcane_framework_scala_spark.sources.paths import (
-        PATH_MAP_LITERAL_MAX,
-        _sql_map_literal,
+
+    dcdf._register_dv_udfs(spark)
+    grouped = hits.groupBy("__dl_rel").agg(
+        F.array_sort(F.collect_list("__dl_pos")).alias("__pos")
     )
-
-    if len(old_descs) <= PATH_MAP_LITERAL_MAX and dcdf._dv_diff_udf_ready(
-        spark
-    ):
-        spec_rows = sorted(
-            (rel, dcdf._dv_spec(table_path, d))
-            for rel, d in old_descs.items()
+    if old_descs:
+        # an Arrow-built frame: a list-built one pickles its rows
+        # through a Python worker when the broadcast side runs
+        specs = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "__dl_rel": list(old_descs),
+                    "__old": [
+                        dcdf._dv_spec(table_path, d)
+                        for d in old_descs.values()
+                    ],
+                }
+            ),
+            "__dl_rel string, __old string",
         )
-        old_spec = (
-            F.try_element_at(
-                F.expr(_sql_map_literal(spec_rows)), F.col("__dl_rel")
-            )
-            if spec_rows
-            else F.lit(None).cast("string")
-        )
-        return (
-            hits.groupBy("__dl_rel")
-            .agg(F.array_sort(F.collect_list("__dl_pos")).alias("__pos"))
-            .select(
-                F.col("__dl_rel").alias("rel"),
-                F.call_udf(
-                    dcdf._DV_BUILD_UDF, old_spec, F.col("__pos")
-                ).alias("__b"),
-            )
-            .select(
-                "rel",
-                F.col("__b.data").alias("data"),
-                F.col("__b.cardinality").alias("cardinality"),
-            )
-            .collect()
-        )
-
-    bc = spark.sparkContext.broadcast((table_path, old_descs))
-
-    def _build(pdf):
-        import pandas as pd
-
-        rel = pdf["__dl_rel"].iloc[0]
-        pos = pdf["__dl_pos"].to_numpy(dtype=np.int64)
-        tpath, descs = bc.value
-        old = descs.get(rel)
-        if old is not None:
-            # superset rule: union with the file's current DV (read
-            # executor-side — same shared-storage reach as the scan)
-            pos = np.union1d(pos, read_dv(tpath, old))
-        data = serialize_positions(pos)
-        return pd.DataFrame(
-            {
-                "rel": [rel],
-                "data": [data],
-                "cardinality": [int(len(np.unique(pos)))],
-            }
-        )
-
+        grouped = grouped.join(F.broadcast(specs), "__dl_rel", "left")
+    else:
+        # no file holds a DV yet: an empty frame would still cost a
+        # broadcast job
+        grouped = grouped.withColumn("__old", F.lit(None).cast("string"))
     return (
-        hits.groupBy("__dl_rel")
-        .applyInPandas(_build, "rel string, data binary, cardinality long")
+        grouped.select(
+            F.col("__dl_rel").alias("rel"),
+            F.call_udf(
+                dcdf._DV_BUILD_UDF, F.col("__old"), F.col("__pos")
+            ).alias("__b"),
+        )
+        .select(
+            "rel",
+            F.col("__b.data").alias("data"),
+            F.col("__b.cardinality").alias("cardinality"),
+        )
         .collect()
     )
 

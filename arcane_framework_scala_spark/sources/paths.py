@@ -12,7 +12,6 @@ literal local paths itself and passes them through :func:`glob_escape`.
 
 from __future__ import annotations
 
-import os
 import re
 
 _GLOB_META = re.compile(r"([*?\[\]{}\\])")
@@ -29,7 +28,7 @@ def glob_escape(path: str) -> str:
 #: codegen'd map lookup removes a BroadcastExchange (and its fixed
 #: per-job cost) from every lineage scan, but a 10^5-file table would
 #: bloat the expression tree, so big maps keep the join.
-PATH_MAP_LITERAL_MAX = int(os.environ.get("ARCANE_PATH_MAP_LITERAL_MAX", "4096"))
+PATH_MAP_LITERAL_MAX = 4096
 
 
 def _sql_str_literal(s: str) -> str:

@@ -10,10 +10,6 @@ from collections.abc import Callable
 
 # repo root on sys.path: gates/__init__.py handles it on package import
 
-#: the repo root (gates/ lives one level below it) — __file__-relative
-#: artifact paths (javaext jar) must anchor HERE, not at this module
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
@@ -66,6 +62,7 @@ from arcane_framework_scala_spark.queries.merge import (
     UPSERT_BLOB,
 )
 from arcane_framework_scala_spark.schema.normalize import normalize_columns
+from arcane_framework_scala_spark.session import use_javaext
 
 
 def _harden_session(spark: SparkSession) -> None:
@@ -193,6 +190,15 @@ def _docs_with_urls(spark, sf_dir):
     return web.url_canonicalize(
         docs.withColumn("url", web.synthetic_url_column())
     )
+
+
+def _fresh_mem_table(spark, table: str) -> str:
+    """Load the javaext jar, register its MemCatalog as ``arcm`` and
+    drop ``table`` (an ``arcm.`` name) left by an earlier run."""
+    use_javaext(spark)
+    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    return table
 
 
 #: chained-star-import contract: export EVERYTHING (incl. _helpers)

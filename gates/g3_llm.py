@@ -437,18 +437,12 @@ def q_dedup_span_stats(spark, sf_dir):
 def q_m7_real_merge_vertical(spark, sf_dir):
     """Generated MERGE INTO executed for REAL against the javaext mem
     catalog (DSv2 SupportsRowLevelOperations — Iceberg's copy-on-write
-    surface), loaded into the driver's bare session via ADD JAR + lazy
-    catalog instantiation. Two sequential CT-dialect batches (bootstrap
+    surface), loaded into the driver's bare session by
+    ``_fresh_mem_table`` + lazy catalog instantiation. Two sequential CT-dialect batches (bootstrap
     inserts, then updates/deletes/inserts) over events; the oracle
     replays the same two-batch merge algebra in SQL."""
     _harden_session(spark)
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    table = "arcm.gate.m7"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    table = _fresh_mem_table(spark, "arcm.gate.m7")
     spark.sql(
         f"CREATE TABLE {table} (ARCANE_MERGE_KEY STRING, "
         "SYS_CHANGE_VERSION BIGINT, user_id BIGINT, event_type STRING, "
@@ -2371,13 +2365,7 @@ def q_t_ivm_state_merge(spark, sf_dir):
 
     target, sink, batch, waves = _web_ingest_setup(spark, sf_dir, "tivm")
     # the state table lives in the MERGE-capable catalog
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    state = "arcm.gate.tivm_state"
-    spark.sql(f"DROP TABLE IF EXISTS {state}")
+    state = _fresh_mem_table(spark, "arcm.gate.tivm_state")
     spark.sql(
         f"CREATE TABLE {state} "
         "(host STRING, docs BIGINT, sum_size BIGINT, nn_size BIGINT) "

@@ -494,13 +494,7 @@ def q_t2_crash_replay(spark, sf_dir):
 
     # twin run on the transactional DSv2 catalog: generated MERGE INTO
     # executes for real; the crash-replay convergence must be identical
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    cat_table = "arcm.gate.t2_crash"
-    spark.sql(f"DROP TABLE IF EXISTS {cat_table}")
+    cat_table = _fresh_mem_table(spark, "arcm.gate.t2_crash")
     cat_final = run_vertical(lambda: CatalogTarget(spark, cat_table))
     d1 = cat_final.exceptAll(final).count()
     d2 = final.exceptAll(cat_final).count()
@@ -623,13 +617,7 @@ def q_t1_polling_vertical(spark, sf_dir):
 
     # twin on the transactional DSv2 catalog: all six generated MERGE
     # INTO statements execute for real; convergence must be identical
-    jar = os.path.join(
-        REPO_ROOT, "javaext", "mem-catalog.jar"
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    cat_table = "arcm.gate.t1_poll"
-    spark.sql(f"DROP TABLE IF EXISTS {cat_table}")
+    cat_table = _fresh_mem_table(spark, "arcm.gate.t1_poll")
     cat_final = run_vertical(CatalogTarget(spark, cat_table))
     d1 = cat_final.exceptAll(final).count()
     d2 = final.exceptAll(cat_final).count()

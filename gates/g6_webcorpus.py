@@ -1277,14 +1277,7 @@ def q_t7_stream_merge_vertical(spark, sf_dir):
     # twin on the DSv2 catalog (r6, post clone-session fix): the CT
     # dialect's version-guarded MERGE INTO executes for real inside each
     # micro-batch; convergence must be identical to the snapshot run
-    jar = os.path.join(
-        REPO_ROOT,
-        "javaext", "mem-catalog.jar",
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    cat_table = "arcm.gate.t7_stream"
-    spark.sql(f"DROP TABLE IF EXISTS {cat_table}")
+    cat_table = _fresh_mem_table(spark, "arcm.gate.t7_stream")
     from arcane_framework_scala_spark.sinks.merge_sink import CatalogTarget
 
     cat_final = run_vertical(
@@ -1446,14 +1439,7 @@ def q_t1_stream_trigger_vertical(spark, sf_dir):
         )
         # twin on the transactional DSv2 catalog: both waves' MERGE INTO
         # execute for real inside their triggers
-        jar = os.path.join(
-            REPO_ROOT,
-            "javaext", "mem-catalog.jar",
-        )
-        spark.sql(f"ADD JAR {jar}")
-        spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-        cat_table = "arcm.gate.t1_stream"
-        spark.sql(f"DROP TABLE IF EXISTS {cat_table}")
+        cat_table = _fresh_mem_table(spark, "arcm.gate.t1_stream")
         cat_final = run_vertical(CatalogTarget(spark, cat_table))
         d1 = cat_final.exceptAll(final).count()
         d2 = final.exceptAll(cat_final).count()
@@ -1765,14 +1751,7 @@ def q_t_hll_state_merge(spark, sf_dir):
     from arcane_framework_scala_spark.functions import sketch as sk
 
     _harden_session(spark)
-    jar = os.path.join(
-        REPO_ROOT,
-        "javaext", "mem-catalog.jar",
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-    table = "arcm.gate.hll_state"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    table = _fresh_mem_table(spark, "arcm.gate.hll_state")
     spark.sql(f"CREATE TABLE {table} (idx BIGINT, r INT) USING mem")
 
     ev = _read(spark, sf_dir, "events").select("user_id")

@@ -5,7 +5,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from arcane_framework_scala_spark.session import get_session
+from arcane_framework_scala_spark.session import (
+    JAVAEXT_JAR,
+    get_session,
+    use_javaext,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -14,14 +18,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # of silently corrupting later plans in production
 os.environ.setdefault("SPARK_GRAFT_OCF_FREEZE", "1")
 
-#: In-memory DSv2 catalog with row-level-operation (MERGE INTO) support —
-#: the sandbox stand-in for Iceberg/Delta, compiled from javaext/.
-MEM_CATALOG_JAR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "javaext",
-    "mem-catalog.jar",
-)
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -29,15 +25,18 @@ def spark():
         "spark.sql.shuffle.partitions": "32",
         "spark.ui.enabled": "false",
         "spark.driver.memory": "8g",
+        # the javaext in-memory DSv2 catalog with MERGE INTO support, the
+        # stand-in for Iceberg/Delta, under both names the tests use
+        "spark.jars": JAVAEXT_JAR,
+        "spark.sql.catalog.mem": "arcanespark.mem.MemCatalog",
+        "spark.sql.catalog.arcm": "arcanespark.mem.MemCatalog",
     }
-    if os.path.exists(MEM_CATALOG_JAR):
-        extra["spark.jars"] = MEM_CATALOG_JAR
-        extra["spark.sql.catalog.mem"] = "arcanespark.mem.MemCatalog"
     spark = get_session(
         app_name="arcane-tests",
         master="local[*]",
         extra_conf=extra,
     )
+    use_javaext(spark)  # a missing jar fails the session here, loudly
     yield spark
     spark.stop()
 

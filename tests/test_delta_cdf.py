@@ -406,20 +406,8 @@ def test_streaming_maintainer_runs_off_a_delta_cdf_target(spark, tmp_path):
     crash-exactly-once state MERGE) drives off a CDF-enabled Delta
     table through DeltaCdfTarget — DV delete, CoW update and append
     all flow through the per-commit feed, O(|delta|) per sync."""
-    import os as _os
-
-    import pytest
 
     from arcane_framework_scala_spark.operators import ivm
-
-    jar = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not _os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
 
     out = _export(spark, tmp_path, BASE)
     cdf.enable_cdf(spark, out)
@@ -466,9 +454,6 @@ def test_stream_runner_polls_a_delta_cdf_source(spark, tmp_path):
     target: inserts, a CoW update, and a DV delete all arrive as CDC
     rows; an idle poll advances only the watermark; replaying a batch
     is a version-guarded no-op."""
-    import os as _os
-
-    import pytest
 
     from arcane_framework_scala_spark.queries.merge import (
         SQL_SERVER_CHANGE_TRACKING,
@@ -484,15 +469,6 @@ def test_stream_runner_polls_a_delta_cdf_source(spark, tmp_path):
     from arcane_framework_scala_spark.streaming.watermark import (
         FileWatermarkStore,
     )
-
-    jar = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not _os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
 
     src = _export(spark, tmp_path, BASE)
     cdf.enable_cdf(spark, src)

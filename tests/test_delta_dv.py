@@ -158,58 +158,63 @@ def test_delete_where_roundtrip_and_merge(spark, tmp_path):
 
 
 def test_distributed_build_pins_byte_identical_dv_files(spark, tmp_path):
-    """The r10 distributed delete_where (per-file applyInPandas bitmap
-    build) must produce byte-for-byte the files the driver-side build
-    produced: content-derived UUID names, serialize_positions payloads,
-    one DV per touched file."""
-    out = _export(spark, tmp_path, n=300)  # 3 partitions -> >= 3 files
-    assert dv.delete_where(spark, out, "id % 4 = 0") == 1
-    live, _ = dr._replay_full(out, None, spark)
-    touched = {
-        rel: a["deletionVector"]
-        for rel, a in live.items()
-        if a.get("deletionVector")
-    }
-    assert len(touched) >= 3, "expected a multi-file delete"
+    """delete_where's distributed build (``DvBuildUdf``) must produce
+    byte-for-byte the files the Python codec produces: content-derived
+    UUID names, serialize_positions payloads, one DV per touched file —
+    for a first delete, and for a second delete on files that already
+    hold a DV (the superset rule: the new DV holds both deletes)."""
+    import hashlib
+    import uuid as uuid_mod
     import zlib
 
-    for rel, desc in touched.items():
-        # reconstruct the expected positions for THIS file from a fresh
-        # lineage scan of the pre-delete version
-        frame = dr._scan_with_lineage(
-            spark, out, {rel: {**live[rel], "deletionVector": None}},
-            dr.table_schema(out),
-        )
-        pos = np.sort(
-            np.array(
-                [
-                    r["__dl_pos"]
-                    for r in frame.filter("id % 4 = 0")
-                    .select("__dl_pos")
-                    .collect()
-                ],
-                dtype=np.int64,
+    out = _export(spark, tmp_path, n=300)  # 3 partitions -> >= 3 files
+    schema = dr.table_schema(out)
+    for v, pred, deleted in (
+        (1, "id % 4 = 0", "id % 4 = 0"),
+        (2, "id % 5 = 0", "id % 4 = 0 OR id % 5 = 0"),
+    ):
+        assert dv.delete_where(spark, out, pred) == v
+        live, _ = dr._replay_full(out, None, spark)
+        touched = {
+            rel: a["deletionVector"]
+            for rel, a in live.items()
+            if a.get("deletionVector")
+        }
+        assert len(touched) >= 3, "expected a multi-file delete"
+        for rel, desc in touched.items():
+            # the expected positions for THIS file: a fresh lineage scan
+            # of the file with no DV applied
+            frame = dr._scan_with_lineage(
+                spark, out, {rel: {**live[rel], "deletionVector": None}},
+                schema,
             )
-        )
-        expected = dv.serialize_positions(pos)
-        # descriptor must carry the exact metadata of that payload
-        assert desc["sizeInBytes"] == len(expected)
-        assert desc["cardinality"] == len(pos)
-        # and the on-disk file must be the canonical blob byte-for-byte
-        path = dv.resolve_dv_path(out, desc)
-        blob = open(path, "rb").read()
-        assert blob == (
-            bytes([1])
-            + struct.pack(">i", len(expected))
-            + expected
-            + struct.pack(">I", zlib.crc32(expected) & 0xFFFFFFFF)
-        )
-        # content-derived name: md5 of the payload
-        import hashlib
-        import uuid as uuid_mod
-
-        uid = uuid_mod.UUID(bytes=hashlib.md5(expected).digest())
-        assert path.endswith(f"deletion_vector_{uid}.bin")
+            pos = np.sort(
+                np.array(
+                    [
+                        r["__dl_pos"]
+                        for r in frame.filter(deleted)
+                        .select("__dl_pos")
+                        .collect()
+                    ],
+                    dtype=np.int64,
+                )
+            )
+            expected = dv.serialize_positions(pos)
+            # descriptor must carry the exact metadata of that payload
+            assert desc["sizeInBytes"] == len(expected)
+            assert desc["cardinality"] == len(pos)
+            # and the on-disk file must be the canonical blob byte-for-byte
+            path = dv.resolve_dv_path(out, desc)
+            blob = open(path, "rb").read()
+            assert blob == (
+                bytes([1])
+                + struct.pack(">i", len(expected))
+                + expected
+                + struct.pack(">I", zlib.crc32(expected) & 0xFFFFFFFF)
+            )
+            # content-derived name: md5 of the payload
+            uid = uuid_mod.UUID(bytes=hashlib.md5(expected).digest())
+            assert path.endswith(f"deletion_vector_{uid}.bin")
 
 
 def test_second_dv_commit_omits_protocol_action(spark, tmp_path):

@@ -215,14 +215,6 @@ def test_export_delta_roundtrip_and_incremental(spark, tmp_path):
         MergeSink,
     )
 
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
     spark.sql("DROP TABLE IF EXISTS arcm.test.delta_export")
     dur = DurableCatalogTarget(
         spark, str(tmp_path / "t"), "arcm.test.delta_export",

@@ -1,10 +1,11 @@
-"""JVM DV-diff decode (r12): the javaext ``DvDiffUdf`` replaces the
-``mapInPandas`` round trip in the change-feed's deletion-vector diff
-(guide §4 — no Python node on the feed's hot path). These tests pin
-(a) bit-identity with the Python codec across every container shape the
-roaring format allows (array, bitmap, run, multi-key 64-bit), (b) that
-the feed plan actually engages the JVM path when the jar is present,
-and (c) that the file-integrity checks (size, CRC) still fail loudly.
+"""The javaext deletion-vector codec UDFs: ``DvDiffUdf`` decodes the
+change feed's DV diff and ``DvBuildUdf`` builds ``delete_where``'s
+vectors, with no Python node on either path. These tests pin (a)
+bit-identity with the Python codec (the reference) across every
+container shape the roaring format allows (array, bitmap, run,
+multi-key 64-bit), (b) that the feed plan and the build stay in the
+JVM, at any number of pre-existing vectors, (c) that the file-integrity
+checks (size, CRC) fail loudly, and (d) how the jar is loaded.
 """
 
 import base64
@@ -22,7 +23,7 @@ def _jvm_positions(spark, data: bytes) -> list[tuple[int, str]]:
     pair diff via the JVM UDF: every position comes back as 'del'."""
     import pyspark.sql.functions as F
 
-    assert dcdf._dv_diff_udf_ready(spark)
+    dcdf._register_dv_udfs(spark)
     spec = "I|" + base64.b64encode(data).decode()
     src = spark.createDataFrame(
         [("f", None, spec)], "rel string, old string, new string"
@@ -92,9 +93,8 @@ def test_pair_diff_matches_python_reference(spark, tmp_path):
 
 
 def test_feed_plan_has_no_python_node(spark, tmp_path):
-    """The point of the rewrite: a DV-commit feed plans with NO
-    BatchEvalPython/ArrowEvalPython/MapInPandas node (it would silently
-    fall back if registration broke)."""
+    """A DV-commit feed plans with NO BatchEvalPython/ArrowEvalPython/
+    MapInPandas node."""
     import pyspark.sql.functions as F
 
     tbl = str(tmp_path)
@@ -130,7 +130,7 @@ def test_size_mismatch_raises(spark, tmp_path):
 def _jvm_build(spark, old_spec, positions) -> tuple[bytes, int]:
     import pyspark.sql.functions as F
 
-    assert dcdf._dv_diff_udf_ready(spark)
+    dcdf._register_dv_udfs(spark)
     src = spark.createDataFrame(
         [(old_spec, [int(p) for p in positions])],
         "old string, pos array<bigint>",
@@ -177,8 +177,9 @@ def test_build_unions_old_vector(spark, tmp_path):
 
 def test_delete_where_jvm_matches_python(spark, tmp_path):
     """End-to-end: delete_where with the JVM build commits the same
-    descriptor (same content-derived UUID, size, cardinality) as the
-    pandas fallback on an identical table."""
+    descriptors (same content-derived UUID, size, cardinality) as the
+    Python codec writes for the same positions on an identical table —
+    for a first delete and for a second one that unions the first."""
     import json
     import os
 
@@ -189,7 +190,7 @@ def test_delete_where_jvm_matches_python(spark, tmp_path):
         SnapshotParquetTarget,
     )
 
-    descs = {}
+    tables = {}
     for variant in ("jvm", "py"):
         root = str(tmp_path / variant)
         st = SnapshotParquetTarget(spark, root + "/pub")
@@ -198,18 +199,15 @@ def test_delete_where_jvm_matches_python(spark, tmp_path):
                 F.col("id").alias("k"), (F.col("id") % 7).alias("v")
             )
         )
-        tbl = root + "/delta"
-        dr.export_delta(st, tbl)
-        if variant == "py":
-            orig = dcdf._dv_diff_udf_ready
-            dcdf._dv_diff_udf_ready = lambda s: False
-            try:
-                v = dv.delete_where(spark, tbl, "v = 3")
-            finally:
-                dcdf._dv_diff_udf_ready = orig
-        else:
-            v = dv.delete_where(spark, tbl, "v = 3")
-        assert v == 1
+        tables[variant] = root + "/delta"
+        dr.export_delta(st, tables[variant])
+
+    def descriptor(d):
+        return (d["pathOrInlineDv"], d["sizeInBytes"], d["cardinality"])
+
+    for v, pred, deleted in ((1, "v = 3", "v = 3"), (2, "v = 5", "v IN (3, 5)")):
+        tbl = tables["jvm"]
+        assert dv.delete_where(spark, tbl, pred) == v
         acts = [
             json.loads(line)
             for line in open(
@@ -219,13 +217,102 @@ def test_delete_where_jvm_matches_python(spark, tmp_path):
         # data-file NAMES are per-table random UUIDs; the DV descriptor
         # (content-md5 address, size, cardinality) is the determinism
         # contract — compare the sorted descriptor multiset
-        descs[variant] = sorted(
-            (
-                a["add"]["deletionVector"]["pathOrInlineDv"],
-                a["add"]["deletionVector"]["sizeInBytes"],
-                a["add"]["deletionVector"]["cardinality"],
-            )
-            for a in acts
-            if "add" in a
+        got = sorted(
+            descriptor(a["add"]["deletionVector"]) for a in acts if "add" in a
         )
-    assert descs["jvm"] == descs["py"]
+
+        ref = tables["py"]
+        live, _ = dr._replay_full(ref, None, spark)
+        bare = {rel: {**a, "deletionVector": None} for rel, a in live.items()}
+        frame = dr._scan_with_lineage(spark, ref, bare, dr.table_schema(ref))
+        by_file: dict[str, list[int]] = {}
+        for r in frame.filter(deleted).select("__dl_rel", "__dl_pos").collect():
+            by_file.setdefault(r["__dl_rel"], []).append(r["__dl_pos"])
+        expect = sorted(
+            descriptor(
+                dv.write_dv_file(ref, np.sort(np.array(p, dtype=np.int64)))
+            )
+            for p in by_file.values()
+        )
+        assert got == expect
+
+
+def test_build_past_the_old_literal_map_cap_stays_in_the_jvm(
+    spark, tmp_path, monkeypatch
+):
+    """4,097 files that already hold a DV, one new hit each: one more
+    old vector than the 4096-entry literal map the build used to fall
+    back to grouped pandas at. The old specs ride the broadcast-joined
+    frame and every file's bytes equal the Python codec's union."""
+    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+
+    def _no_pandas(*args, **kwargs):
+        raise AssertionError("pandas build path taken")
+
+    monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandas", _no_pandas)
+    n = 4097
+    old_descs = {}
+    for i in range(n):
+        data = dv.serialize_positions(np.array([2 * i], dtype=np.int64))
+        old_descs[f"f{i}"] = {
+            "storageType": "i",
+            "pathOrInlineDv": base64.b85encode(data).decode(),
+            "sizeInBytes": len(data),
+            "cardinality": 1,
+        }
+    hits = spark.createDataFrame(
+        [(f"f{i}", 2 * i + 1) for i in range(n)],
+        "__dl_rel string, __dl_pos bigint",
+    )
+    rows = dv._build_dv_rows(spark, str(tmp_path), hits, old_descs)
+    assert len(rows) == n
+    for r in rows:
+        i = int(r["rel"][1:])
+        expect = dv.serialize_positions(np.union1d([2 * i], [2 * i + 1]))
+        assert bytes(r["data"]) == expect, r["rel"]
+        assert r["cardinality"] == 2
+
+
+# ------------------------------------------------------- jar loading
+
+
+def test_missing_jar_raises_naming_the_build_script(spark, tmp_path, monkeypatch):
+    from arcane_framework_scala_spark import session
+
+    monkeypatch.setattr(session, "JAVAEXT_JAR", str(tmp_path / "absent.jar"))
+    with pytest.raises(FileNotFoundError, match="javaext/build.sh"):
+        session.use_javaext(spark)
+
+
+def test_jar_path_with_space_and_quote_loads_once(spark, tmp_path, monkeypatch):
+    import shutil
+    from urllib.parse import unquote
+
+    from arcane_framework_scala_spark import session
+
+    queries = []
+    real_sql = spark.sql
+
+    def spy_sql(query, *args, **kwargs):
+        queries.append(query)
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", spy_sql)
+    session.use_javaext(spark)  # already in spark.jars: nothing to add
+    assert queries == []
+
+    d = tmp_path / "a b'c"
+    d.mkdir()
+    jar = d / "javaext copy's.jar"
+    shutil.copy(session.JAVAEXT_JAR, jar)
+    monkeypatch.setattr(session, "JAVAEXT_JAR", str(jar))
+
+    def listed():
+        urls = spark.sparkContext._jsc.sc().listJars().mkString("\n")
+        return [u for u in urls.split("\n") if unquote(u).endswith(jar.name)]
+
+    assert listed() == []
+    session.use_javaext(spark)
+    session.use_javaext(spark)
+    assert len(listed()) == 1
+    assert len(queries) == 1

@@ -128,7 +128,6 @@ def test_stream_runner_polls_an_iceberg_cdc_source(spark, tmp_path):
     incremental changelog: first poll backfills the snapshot, an idle
     poll advances nothing, and a position-delete + append commit
     arrives as one CDC batch."""
-    import os as _os
 
     from arcane_framework_scala_spark.queries.merge import (
         SQL_SERVER_CHANGE_TRACKING,
@@ -144,15 +143,6 @@ def test_stream_runner_polls_an_iceberg_cdc_source(spark, tmp_path):
     from arcane_framework_scala_spark.streaming.watermark import (
         FileWatermarkStore,
     )
-
-    jar = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not _os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
 
     out = _table(spark, tmp_path)
     table = "arcm.test.ice_cdc_stream_tgt"
@@ -211,18 +201,8 @@ def test_streaming_maintainer_runs_off_an_iceberg_changelog_target(
     through IcebergChangelogTarget — position delete, equality delete
     and append all flow through the per-commit changelog feed,
     O(|delta|) per sync; versions are sequence numbers."""
-    import os as _os
 
     from arcane_framework_scala_spark.operators import ivm
-
-    jar = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not _os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
 
     out = _table(spark, tmp_path)
     state = "arcm.test.ice_changelog_state"

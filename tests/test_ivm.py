@@ -132,18 +132,7 @@ def test_group_state_merge_matches_dataframe_path(spark):
     """The MERGE-maintained state table must land exactly where
     apply_group_delta lands: additive update, delete-at-zero,
     insert-positive, retraction-for-unknown-group is a no-op."""
-    import os
 
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    import pytest
-
-    if not os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
     table = "arcm.test.ivm_state"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
@@ -185,18 +174,9 @@ def test_streaming_maintainer_state_table_branch(spark, tmp_path):
     """StreamingViewMaintainer with state_table persists through the
     generated MERGE instead of an in-memory frame — same landing as the
     DataFrame branch, durable across maintainer restarts."""
-    import os
 
     import pytest
 
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
     from arcane_framework_scala_spark.queries.merge import (
         SQL_SERVER_CHANGE_TRACKING,
     )
@@ -299,18 +279,9 @@ def test_streaming_maintainer_refuses_unversioned_populated_state(
 ):
     """A populated state table WITHOUT the recorded version must refuse
     to bootstrap (merging a bootstrap onto live rows doubles counts)."""
-    import os
 
     import pytest
 
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
     from arcane_framework_scala_spark.queries.merge import (
         SQL_SERVER_CHANGE_TRACKING,
     )
@@ -353,18 +324,9 @@ def test_versioned_state_table_survives_crash_between_merge_and_record(
     is IDEMPOTENT — a crash BETWEEN the merged delta and its recorded
     synced version re-applies that delta as a no-op on restart, so the
     old one-delta double-count window is closed, not just narrowed."""
-    import os
 
     import pytest
 
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
     from arcane_framework_scala_spark.queries.merge import (
         SQL_SERVER_CHANGE_TRACKING,
     )
@@ -460,18 +422,7 @@ def test_null_last_v_rows_pass_the_version_guard(spark, tmp_path):
     is NULL→false, so every MATCHED clause would skip those groups
     FOREVER (silent maintenance freeze). The guard must treat NULL as
     "never stamped" and apply the delta, stamping the row."""
-    import os
 
-    import pytest
-
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
     from arcane_framework_scala_spark.queries.merge import (
         SQL_SERVER_CHANGE_TRACKING,
     )

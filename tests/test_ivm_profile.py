@@ -199,19 +199,6 @@ def test_histogram_randomized_multiwave_and_quantiles(spark):
     assert got_q == want_q and got_q
 
 
-def _mem_ready(spark):
-    import os
-
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    if not os.path.exists(jar):
-        pytest.skip("mem-catalog.jar not built")
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
-
-
 def _run_merge(spark, sql_fn, table, delta):
     delta.createOrReplaceTempView("__ivmp_delta")
     try:
@@ -225,7 +212,6 @@ def test_state_merge_twins_match_dataframe_paths(spark):
     land exactly where the DataFrame applies land — additive update,
     delete-at-zero, insert-positive — through two waves of mixed churn
     including a NULL-returning sum and a vanishing bucket."""
-    _mem_ready(spark)
     before = [(1, "a", 10), (2, "a", 10), (3, "b", 5000), (4, "a", None)]
     mid = [(2, "a", 10), (3, "b", 7), (4, "a", None), (5, "c", 12)]
     after = [(3, "b", 7), (4, "a", None), (5, "c", 13)]
@@ -299,7 +285,6 @@ def test_all_spec_families_ride_the_view_maintainer(spark, tmp_path):
     apply reads the base snapshot AS OF each delta's version) all
     bootstrap once, catch up a MULTI-commit gap in one sync, and land
     exactly on a fresh recompute of the final table."""
-    _mem_ready(spark)
     from arcane_framework_scala_spark.operators import ivm, ivm_minmax
     from arcane_framework_scala_spark.queries.merge import (
         SQL_SERVER_CHANGE_TRACKING,
@@ -424,7 +409,6 @@ def test_moments_spec_rides_the_maintainer_state_table(spark, tmp_path):
     """MomentsSpec + state_table: the maintainer bootstraps the moments
     TABLE via the spec's MERGE form, resumes from the recorded version
     after a restart, and lands on a fresh recompute."""
-    _mem_ready(spark)
     from arcane_framework_scala_spark.operators import ivm
     from arcane_framework_scala_spark.queries.merge import (
         SQL_SERVER_CHANGE_TRACKING,
@@ -482,7 +466,6 @@ def test_histogram_spec_rides_the_maintainer_state_table(spark, tmp_path):
     """HistogramSpec + state_table: bucket counts maintained by the
     spec's MERGE form land exactly on a fresh log_histogram, and
     quantile_view over the state TABLE equals the batch estimator."""
-    _mem_ready(spark)
     from arcane_framework_scala_spark.operators import ivm
     from arcane_framework_scala_spark.queries.merge import (
         SQL_SERVER_CHANGE_TRACKING,

@@ -158,16 +158,9 @@ def test_foreachbatch_merge_into_catalog_target(spark, sf_dir, tmp_path):
     to land there while the MERGE ran on the outer session and failed
     with view-not-found. The streaming pipeline must merge into a real
     DSv2 catalog table (generated MERGE INTO per micro-batch)."""
-    import os
 
     from arcane_framework_scala_spark.sinks.merge_sink import CatalogTarget
 
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "javaext", "mem-catalog.jar",
-    )
-    spark.sql(f"ADD JAR {jar}")
-    spark.conf.set("spark.sql.catalog.arcm", "arcanespark.mem.MemCatalog")
     spark.sql("DROP TABLE IF EXISTS arcm.test.stream_merge")
 
     src_dir = str(tmp_path / "incoming")
