@@ -16,16 +16,27 @@ Scale notes:
   IN-lists) is what production uses; this operator is the semantic ground
   truth and the local-test executor.
 
+Plan building: the plan is a handful of DataFrame calls over SQL text —
+one ``selectExpr`` holding the tie-collapsing ``row_number() OVER (…)``
+window, one full-outer join on an ``F.expr`` key condition, one ``where``
+with the dialect's clause conditions (the generated MERGE SQL's own
+fragments) and one ``selectExpr`` of ``CASE WHEN`` projections. Every
+column name is backtick-quoted (``schema.sql_types.quote_ident``); no
+value is ever spliced into the text. Building it costs about one py4j
+round trip per column (the projection list), where a tree of ``Column``
+calls cost one JVM call per node plus a captured call site per call.
+
 Tie handling: after the W1 ``rank()==1`` dedup a key can still carry several
 rows at the max version (delete marker kept next to the final data row —
 reference comment at ``models/batches/SynapseLink.scala:77``). SQL MERGE
 would reject multi-matches, so this operator collapses ties
-deterministically: a delete marker wins, then a stable hash tiebreak.
+deterministically: a delete marker wins, then the remaining columns in
+ascending order (see ``_collapse_ties``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from arcane_framework_scala_spark.queries.merge import (
@@ -34,6 +45,13 @@ from arcane_framework_scala_spark.queries.merge import (
     TARGET_ALIAS,
 )
 from arcane_framework_scala_spark.schema.schema import MERGE_KEY_COLUMN
+from arcane_framework_scala_spark.schema.sql_types import quote_ident as q
+
+
+def _cond(sql: str | None, default: str) -> str:
+    """A dialect clause condition as a parenthesized SQL fragment, or
+    ``default`` when the clause is unconditional."""
+    return f"({sql})" if sql else default
 
 
 def _collapse_ties(
@@ -52,29 +70,23 @@ def _collapse_ties(
     surviving row is identical to rank()==1-then-collapse (within the max
     version group the two orderings coincide), but Spark runs ONE
     partition sort instead of two over the same key."""
-    s = source.alias(SOURCE_ALIAS)
-    delete_flag = (
-        F.expr(dialect.delete_condition) if dialect.delete_condition else F.lit(False)
-    )
     special = {merge_key.lower(), dialect.version_column.lower()}
     primary = [
-        F.desc(F.coalesce(delete_flag.cast("int"), F.lit(0))),
-        F.desc(dialect.version_column),
+        f"coalesce(CAST({_cond(dialect.delete_condition, 'false')} AS INT), 0) DESC",
+        f"{q(dialect.version_column)} DESC",
     ]
     if version_first:
         primary.reverse()
-    order_cols = [
-        *primary,
-        *[
-            F.asc_nulls_first(c)
-            for c in source.columns
-            if c.lower() not in special
-        ],
-    ]
-    w = Window.partitionBy(merge_key).orderBy(*order_cols)
+    order = ", ".join(
+        [*primary, *(f"{q(c)} ASC NULLS FIRST" for c in source.columns if c.lower() not in special)]
+    )
     return (
-        s.withColumn("__arcane_rn", F.row_number().over(w))
-        .filter(F.col("__arcane_rn") == 1)
+        source.alias(SOURCE_ALIAS)
+        .selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY {q(merge_key)} ORDER BY {order}) AS __arcane_rn",
+        )
+        .where("__arcane_rn = 1")
         .drop("__arcane_rn")
     )
 
@@ -97,54 +109,43 @@ def merge_apply(
     semantics, column resolution included (``tests/test_mem_catalog_
     merge.py`` compares the two row for row).
     """
-    out_fields = target.schema.fields
+    # columns match by name without regard to case, as the MERGE SQL
+    # resolves them
+    source_cols = {c.lower(): c for c in source.columns}
     # W1 dedup + tie collapse fuse into one window pass (version-first
     # ordering); see _collapse_ties. latest_version_per_key stays the
     # standalone W1 operator for pipelines that want WITH-TIES semantics.
     source = _collapse_ties(source, dialect, merge_key, version_first=deduplicate)
 
-    t = target.alias(TARGET_ALIAS)
-    s = source.alias(SOURCE_ALIAS)
-    t_key = F.col(f"{TARGET_ALIAS}.{merge_key}")
-    s_key = F.col(f"{SOURCE_ALIAS}.{merge_key}")
-    joined = t.join(s, t_key == s_key, "full_outer")
-
-    matched = t_key.isNotNull() & s_key.isNotNull()
-    source_only = t_key.isNull() & s_key.isNotNull()
-    target_only = s_key.isNull()
-
-    delete_c = (
-        F.expr(dialect.delete_condition) if dialect.delete_condition else F.lit(False)
+    t_key = f"{TARGET_ALIAS}.{q(merge_key)}"
+    s_key = f"{SOURCE_ALIAS}.{q(merge_key)}"
+    matched = f"({t_key} IS NOT NULL AND {s_key} IS NOT NULL)"
+    source_only = f"({t_key} IS NULL AND {s_key} IS NOT NULL)"
+    delete_c = _cond(dialect.delete_condition, "false")
+    update_c = _cond(dialect.update_condition, "true")
+    insert_c = _cond(dialect.insert_condition, "true")
+    kept = (
+        f"{s_key} IS NULL"
+        f" OR ({matched} AND NOT coalesce({delete_c}, false))"
+        f" OR ({source_only} AND coalesce({insert_c}, true))"
     )
-    update_c = (
-        F.expr(dialect.update_condition) if dialect.update_condition else F.lit(True)
-    )
-    insert_c = (
-        F.expr(dialect.insert_condition) if dialect.insert_condition else F.lit(True)
-    )
-
-    kept = joined.filter(
-        target_only
-        | (matched & ~F.coalesce(delete_c, F.lit(False)))
-        | (source_only & F.coalesce(insert_c, F.lit(True)))
-    )
-
-    use_source = (matched & F.coalesce(update_c, F.lit(False))) | source_only
-    # columns match by name without regard to case, as the MERGE SQL
-    # resolves them; a target column the batch lacks keeps its value on
-    # update (MERGE never assigns it) and is NULL on insert (the target
-    # side of a source-only row is all NULL)
-    source_cols = {c.lower(): c for c in source.columns}
+    use_source = f"({matched} AND coalesce({update_c}, false)) OR {source_only}"
+    # a target column the batch lacks keeps its value on update (MERGE
+    # never assigns it) and is NULL on insert (the target side of a
+    # source-only row is all NULL)
     projection = []
-    for f in out_fields:
-        t_val = F.col(f"{TARGET_ALIAS}.{f.name}")
-        s_name = source_cols.get(f.name.lower())
-        if s_name is None:
-            projection.append(t_val.alias(f.name))
-            continue
-        projection.append(
-            F.when(use_source, F.col(f"{SOURCE_ALIAS}.{s_name}"))
-            .otherwise(t_val)
-            .alias(f.name)
+    for name in target.columns:
+        t_val = f"{TARGET_ALIAS}.{q(name)}"
+        s_name = source_cols.get(name.lower())
+        value = (
+            t_val
+            if s_name is None
+            else f"CASE WHEN {use_source} THEN {SOURCE_ALIAS}.{q(s_name)} ELSE {t_val} END"
         )
-    return kept.select(*projection)
+        projection.append(f"{value} AS {q(name)}")
+    return (
+        target.alias(TARGET_ALIAS)
+        .join(source.alias(SOURCE_ALIAS), F.expr(f"{t_key} = {s_key}"), "full_outer")
+        .where(kept)
+        .selectExpr(*projection)
+    )

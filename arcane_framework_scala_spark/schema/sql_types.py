@@ -17,6 +17,13 @@ from __future__ import annotations
 
 import pyspark.sql.types as T
 
+def quote_ident(name: str) -> str:
+    """A column name as a Spark SQL identifier: backtick-quoted, embedded
+    backticks doubled, so any name survives a ``selectExpr``/``F.expr``
+    string. Only names go through here; values stay ``F.lit``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # java.sql.Types constants → Spark types (SqlUtils.scala:71-129)
 _JDBC_TYPES: dict[int, T.DataType] = {
     -5: T.LongType(),            # BIGINT

@@ -28,6 +28,7 @@ merge — ``SchemaMigrationProcessor.scala:24-50``).
 from __future__ import annotations
 
 import os
+import posixpath
 import shutil
 import time
 import uuid
@@ -35,12 +36,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
-from pyspark.sql.types import StructField
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from arcane_framework_scala_spark.operators.merge_apply import _collapse_ties, merge_apply
 from arcane_framework_scala_spark.sources.paths import glob_escape
 from arcane_framework_scala_spark.queries.merge import MergeDialect, build_merge_query
 from arcane_framework_scala_spark.schema.schema import MERGE_KEY_COLUMN
+from arcane_framework_scala_spark.schema.sql_types import quote_ident as q
 
 
 @dataclass(frozen=True)
@@ -100,6 +102,20 @@ def _drift_fields(
     return [f for f in source.schema.fields if f.name.lower() not in have]
 
 
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable, as a parquet
+    read reports it (Spark's ``asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
 class SnapshotParquetTarget:
     """Versioned-parquet table: ``<path>/v=N`` snapshot dirs + ``_CURRENT``
     pointer (atomic rename commit). Readers always see a complete snapshot.
@@ -107,7 +123,19 @@ class SnapshotParquetTarget:
     ``max_rows_per_file`` maps the reference's ``maxRowsPerFile`` staging
     knob onto Spark's ``maxRecordsPerFile`` write option (file writes are
     parallel per partition either way, matching the reference's
-    ``ZIO.collectAllPar`` file fan-out)."""
+    ``ZIO.collectAllPar`` file fan-out).
+
+    Remembered schema: after a commit succeeds the target keeps the read
+    schema of the version it just committed — the written frame's data
+    fields, then the partition fields with the types a reader infers
+    from the directory names (a driver-side listing, no Spark job), all
+    nullable: exactly what ``spark.read.parquet(v=N).schema`` reports.
+    ``read()`` and the merge base reads of that version pass it to
+    ``spark.read.schema(...)``, so opening the snapshot the last commit
+    wrote runs no footer-inference job. Any other version (older ones,
+    one another writer committed, or every version after a restart)
+    infers as before, and so does a pruned commit whose rewritten files
+    do not carry the carried files' data types."""
 
     def __init__(
         self,
@@ -127,6 +155,9 @@ class SnapshotParquetTarget:
         #: don't look numeric, or genuine numerics) — the same contract
         #: hive layouts always had.
         self.partition_cols = list(partition_cols or [])
+        #: (version, read schema) of the last snapshot this target
+        #: committed; see the class docstring
+        self._schema: tuple[int, StructType] | None = None
 
     def _pointer(self) -> str:
         return os.path.join(self.path, "_CURRENT")
@@ -145,7 +176,15 @@ class SnapshotParquetTarget:
         v = self.current_version()
         if v is None:
             return None
-        return self.spark.read.parquet(glob_escape(os.path.join(self.path, f"v={v}")))
+        return self._open(v)
+
+    def _open(self, v: int) -> DataFrame:
+        """Read snapshot ``v``: with the remembered schema when this
+        target committed it, by footer inference otherwise."""
+        reader = self.spark.read
+        if self._schema is not None and self._schema[0] == v:
+            reader = reader.schema(self._schema[1])
+        return reader.parquet(glob_escape(os.path.join(self.path, f"v={v}")))
 
     def versions(self) -> list[int]:
         """Committed snapshot versions, oldest first — the readable
@@ -175,7 +214,7 @@ class SnapshotParquetTarget:
                 f"snapshot v={version} not available under {self.path} "
                 f"(have {self.versions()})"
             )
-        return self.spark.read.parquet(glob_escape(os.path.join(self.path, f"v={version}")))
+        return self._open(version)
 
     def version_as_of(self, timestamp: float) -> int:
         """Iceberg ``TIMESTAMP AS OF`` resolution: the newest snapshot
@@ -251,7 +290,7 @@ class SnapshotParquetTarget:
         if expected_base is None:
             expected_base = self.current_version() or 0
         staging = self._write_staging(df, expected_base + 1)
-        self._finalize(staging, expected_base)
+        self._finalize(staging, expected_base, self._data_schema(df.schema))
 
     def _write_staging(self, df: DataFrame, v: int) -> str:
         """Write ``df`` as the candidate ``v`` snapshot into a
@@ -265,9 +304,22 @@ class SnapshotParquetTarget:
         writer.parquet(staging)
         return staging
 
-    def _finalize(self, staging: str, expected_base: int) -> None:
+    def _data_schema(self, schema: StructType) -> StructType:
+        """The data fields a snapshot written from ``schema`` holds in its
+        files (partition columns live in the directory names), as a
+        parquet read reports them: nullable."""
+        parts = {c.lower() for c in self.partition_cols}
+        return _nullable(
+            StructType([f for f in schema.fields if f.name.lower() not in parts])
+        )
+
+    def _finalize(
+        self, staging: str, expected_base: int, data: StructType | None
+    ) -> None:
         """Claim ``v=expected_base+1`` with one atomic rename of the
-        staging dir, then flip the pointer."""
+        staging dir, then flip the pointer, and remember the committed
+        version's read schema (``data`` = its files' data fields; None
+        when they are not known, and the version will infer)."""
         v = expected_base + 1
         out = os.path.join(self.path, f"v={v}")
         if (self.current_version() or 0) != expected_base:
@@ -299,9 +351,19 @@ class SnapshotParquetTarget:
         with open(tmp, "w") as f:
             f.write(str(v))
         os.replace(tmp, self._pointer())
+        if data is not None and self.partition_cols:
+            # partition types as every reader infers them from the
+            # directory names: the file listing runs on the driver, and
+            # the given data fields leave no footer to open
+            data = self.spark.read.schema(data).parquet(glob_escape(out)).schema
+        self._schema = None if data is None else (v, data)
 
     def _commit_pruned(
-        self, df: DataFrame, carry: list[str], expected_base: int
+        self,
+        df: DataFrame,
+        carry: list[str],
+        expected_base: int,
+        base_schema: StructType,
     ) -> None:
         """CoW commit of a PRUNED rewrite group: ``df`` holds only the
         rewritten rows, and every base-snapshot-relative path in ``carry``
@@ -309,7 +371,10 @@ class SnapshotParquetTarget:
         files) or a single data file — is carried into the new snapshot
         by HARD LINK: byte-identical by construction (same inodes, zero
         data movement), the file-level reuse an Iceberg manifest
-        expresses by reference. Snapshots stay self-contained (every
+        expresses by reference. ``base_schema`` is the base snapshot's
+        read schema: the new version's is remembered only when the
+        rewritten files hold the same data fields as the carried ones.
+        Snapshots stay self-contained (every
         version dir lists the full table) and expiry stays a plain
         ``rmtree``: the filesystem's link count is the manifest refcount,
         so shared files survive until the last referencing snapshot is
@@ -337,7 +402,12 @@ class SnapshotParquetTarget:
                     raise
                 except OSError:  # EXDEV/EPERM: links refused, copy
                     shutil.copy2(s, d)
-        self._finalize(staging, expected_base)
+        data = self._data_schema(df.schema)
+        self._finalize(
+            staging,
+            expected_base,
+            data if data == self._data_schema(base_schema) else None,
+        )
 
     def _distributed(self, df: DataFrame) -> DataFrame:
         """Hash-distribute ``df`` by the partition columns before a write,
@@ -356,11 +426,7 @@ class SnapshotParquetTarget:
         # function of this snapshot, so the commit must verify the pointer
         # has not moved off it (otherwise the intervening batch is lost).
         base = self.current_version()
-        target = (
-            self.spark.read.parquet(glob_escape(os.path.join(self.path, f"v={base}")))
-            if base is not None
-            else None
-        )
+        target = self._open(base) if base is not None else None
         if target is None:
             # bootstrap: first batch becomes the target minus delete markers
             insert_ok = (
@@ -478,11 +544,17 @@ class DurableCatalogTarget:
     the versioned-parquet layout the X1–X4 maintenance family already
     manages: compaction, snapshot expiry, orphan removal, ANALYZE and
     time travel all operate on the same files every merge commits.
-    Nothing is held between merges: each one reads ``_CURRENT``, so a
-    crash before the snapshot commit loses nothing — the retried batch
-    replays onto the last durable snapshot (T9 version guards make the
-    replay idempotent) — and maintenance between merges costs the next
-    merge nothing extra.
+    No table data is held between merges: each one reads ``_CURRENT``,
+    so a crash before the snapshot commit loses nothing — the retried
+    batch replays onto the last durable snapshot (T9 version guards make
+    the replay idempotent) — and maintenance between merges costs the
+    next merge nothing extra. What is held is the read schema of the
+    snapshot this target last committed (``SnapshotParquetTarget``'s
+    remembered schema): the next merge opens its base, and plans its
+    pruned group, with it and runs no footer-inference job. A base this
+    target did not commit — another writer's, or any after a restart —
+    and a pruned commit whose rewritten files changed a data type fall
+    back to inference.
 
     On a hive-partitioned table (``partition_cols``) the rewrite group is
     PRUNED to the touched partitions, exactly as Iceberg CoW prunes the
@@ -597,50 +669,53 @@ class DurableCatalogTarget:
         partitions holding a matched merge key (an update may MOVE a row
         between partitions: the old partition must be rewritten without
         it). ONE planning query — the read Iceberg CoW also performs to
-        find matched files — groups the base rows (partition, leaf dir,
+        find matched files — groups the base rows (partition, data file,
         key matched in the broadcast batch or not) together with the
         batch's own partition values by partition, so one row per
-        partition reaches the driver: in the group or not, and the leaf
-        dirs to carry, named by the engine (hive escaping, glob
-        metacharacters and NULL partitions stay safe)."""
+        partition reaches the driver: in the group or not, and its data
+        files, named by the engine. The driver turns each file URI into
+        its leaf dir — one entry per file, never a per-row string op —
+        so hive escaping, glob metacharacters and NULL partitions stay
+        safe. The query is SQL text over backtick-quoted names."""
         from urllib.parse import unquote, urlparse
 
         pcols = self.snapshots.partition_cols
         base_dir = os.path.join(self.snapshots.path, f"v={base}")
-        base_df = self.spark.read.parquet(glob_escape(base_dir))
-        if _drift_fields(source, base_df.columns, dialect):
+        base_df = self.snapshots._open(base)
+        base_schema = base_df.schema
+        if _drift_fields(source, base_schema.names, dialect):
             return False  # T8 drift -> full rewrite
         if any(c not in source.columns for c in pcols):
             return False
+        key = q(MERGE_KEY_COLUMN)
         # a repeated batch key only repeats rows inside a group: no distinct
-        matched = F.broadcast(source.select(MERGE_KEY_COLUMN, F.lit(True).alias("__m")))
+        matched = source.selectExpr(key, "true AS __m").hint("broadcast")
         base_side = (
-            base_df.select(
-                *pcols,
-                MERGE_KEY_COLUMN,
-                F.regexp_replace(F.input_file_name(), "/[^/]*$", "").alias("__d"),
-            )
+            base_df.selectExpr(*map(q, pcols), key, "input_file_name() AS __f")
             .join(matched, MERGE_KEY_COLUMN, "left")
             .drop(MERGE_KEY_COLUMN)
         )
         # batch values take the base's (inferred) partition types, so both
         # sides group on the same key
-        source_side = source.select(
-            *[F.col(c).cast(base_df.schema[c].dataType) for c in pcols],
-            F.lit(None).cast("string").alias("__d"),
-            F.lit(True).alias("__m"),
+        source_side = source.selectExpr(
+            *[
+                f"CAST({q(c)} AS {base_schema[c].dataType.simpleString()}) AS {q(c)}"
+                for c in pcols
+            ],
+            "CAST(NULL AS STRING) AS __f",
+            "true AS __m",
         )
         plan = (
             base_side.unionByName(source_side)
             .groupBy(*pcols)
-            .agg(F.max("__m").alias("__m"), F.collect_set("__d").alias("__d"))
+            .agg(F.expr("max(__m) AS __m"), F.expr("collect_set(__f) AS __f"))
             .collect()
         )  # metadata-sized: one row per partition
         touched = [tuple(r)[: len(pcols)] for r in plan if r["__m"]]
-        carry = sorted(
-            os.path.relpath(unquote(urlparse(d).path), base_dir)
-            for r in plan if not r["__m"] for d in r["__d"]
-        )
+        carry = sorted({
+            os.path.relpath(posixpath.dirname(unquote(urlparse(f).path)), base_dir)
+            for r in plan if not r["__m"] for f in r["__f"]
+        })
         # the rewrite group is a partition filter — the scan prunes to
         # the touched directories
         terms = []
@@ -658,7 +733,7 @@ class DurableCatalogTarget:
         group = base_df.filter(terms[0] if terms else F.lit(False))
         merged = merge_apply(group, source, dialect)
         self.snapshots._commit_pruned(
-            self.snapshots._distributed(merged), carry, expected_base=base
+            self.snapshots._distributed(merged), carry, base, base_schema
         )
         return True
 
@@ -690,9 +765,13 @@ class DurableCatalogTarget:
         from urllib.parse import unquote, urlparse
 
         base_dir = os.path.join(self.snapshots.path, f"v={base}")
-        base_df = self.spark.read.parquet(glob_escape(base_dir))
-        if _drift_fields(source, base_df.columns, dialect):
+        base_df = self.snapshots._open(base)
+        base_schema = base_df.schema
+        if _drift_fields(source, base_schema.names, dialect):
             return False  # T8 drift -> full rewrite
+        # the probe and the group read files of the base snapshot: they
+        # take its schema instead of inferring it again
+        read_files = self.spark.read.schema(base_schema).parquet
         # the semi-join ignores repeated keys: broadcast them as they come
         keys = source.select(MERGE_KEY_COLUMN)
 
@@ -718,9 +797,7 @@ class DurableCatalogTarget:
             base_df
             if candidates is None
             else (
-                self.spark.read.parquet(
-                    *[glob_escape(c) for c in candidates]
-                )
+                read_files(*[glob_escape(c) for c in candidates])
                 if candidates
                 else base_df.filter(F.lit(False))
             )
@@ -756,15 +833,13 @@ class DurableCatalogTarget:
         # Hadoop glob-expands read paths, so feeding them back raw can
         # duplicate rows between group and carry (ADVICE r8).
         group = (
-            self.spark.read.parquet(
-                *[glob_escape(os.path.join(base_dir, r)) for r in matched_rel]
-            )
+            read_files(*[glob_escape(os.path.join(base_dir, r)) for r in matched_rel])
             if matched_rel
             else base_df.filter(F.lit(False))
         )
         merged = merge_apply(group, source, dialect)
         # unmatched files are carried FLAT at their base-relative path
-        self.snapshots._commit_pruned(merged, carry, expected_base=base)
+        self.snapshots._commit_pruned(merged, carry, base, base_schema)
         return True
 
     def changes(self, v_from: int, v_to: int, keys: list[str] | None = None):

@@ -8,6 +8,16 @@ with ``ARCANE_MERGE_KEY`` (base64 SHA-256 of lower-cased concatenated PKs,
 ``models/batches/BlobBatchCommons.scala:21-51``) and a ``createdon``
 version column (blob creation epoch).
 
+No re-merge at the boundary: the reference's inclusive filter re-reads
+every file of the watermark's own second on each poll (a no-op merge by
+the version guard, but a full read, shuffle and rewrite). Here each
+batch's watermark also names the files of its boundary second
+(``Watermark.boundary``: ``name@mtime_ms``), and the next poll takes
+files newer than the watermark plus the files of that second it does not
+name — a late arrival, or a file rewritten in place. A watermark without
+a boundary (an older one, or the reference's) falls back to the
+inclusive re-read.
+
 Spark-first design: the listing runs on the driver through Hadoop's
 FileSystem API (works for s3a/abfss/local URIs alike), but rows never touch
 the driver — files are handed to ``spark.read`` in watermark-ascending
@@ -33,22 +43,35 @@ from arcane_framework_scala_spark.schema.schema import (
 from arcane_framework_scala_spark.sources.base import MicroBatch
 
 
-def _list_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
-    """(uri, modification_epoch_seconds) for every file under ``path``,
-    via the JVM Hadoop FileSystem so s3a/abfss/file URIs all work."""
+def _list_files(spark: SparkSession, path: str) -> list[tuple[str, str, int]]:
+    """(uri, name relative to ``path``, modification epoch millis) for
+    every file under ``path``, via the JVM Hadoop FileSystem so
+    s3a/abfss/file URIs all work."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(conf)
     if not fs.exists(hpath):
         return []
+    root = fs.makeQualified(hpath).toString().rstrip("/") + "/"
     out = []
     it = fs.listFiles(hpath, True)
     while it.hasNext():
         st = it.next()
         if st.isFile():
-            out.append((st.getPath().toString(), st.getModificationTime() // 1000))
+            uri = st.getPath().toString()
+            name = uri[len(root):] if uri.startswith(root) else uri
+            out.append((uri, name, st.getModificationTime()))
     return out
+
+
+@dataclass(frozen=True)
+class _Blob:
+    uri: str
+    #: creation epoch second: the version the watermark orders by
+    ts: int
+    #: ``name@mtime_ms``: the file's identity in a watermark boundary
+    tag: str
 
 
 @dataclass
@@ -64,22 +87,22 @@ class BlobListingSource:
 
     #: the listing the last ``current_version()`` probe took, handed to
     #: the next ``changes()`` call so one poll lists the bucket once
-    _probed: list[tuple[str, int]] | None = field(
+    _probed: list[_Blob] | None = field(
         default=None, init=False, repr=False, compare=False
     )
 
-    def _eligible(self) -> list[tuple[str, int]]:
+    def _eligible(self) -> list[_Blob]:
         files = [
-            (p, ts)
-            for p, ts in _list_files(self.spark, self.path)
-            if not p.rsplit("/", 1)[-1].startswith(self.exclude_prefixes)
+            _Blob(uri, ms // 1000, f"{name}@{ms}")
+            for uri, name, ms in _list_files(self.spark, self.path)
+            if not uri.rsplit("/", 1)[-1].startswith(self.exclude_prefixes)
         ]
-        return sorted(files, key=lambda x: (x[1], x[0]))
+        return sorted(files, key=lambda b: (b.ts, b.uri))
 
     def current_version(self) -> dict:
         """A2: max createdOn over the listing (driver-side fold)."""
         self._probed = self._eligible()
-        return {"version": max((ts for _, ts in self._probed), default=0)}
+        return {"version": max((b.ts for b in self._probed), default=0)}
 
     def _read(self, paths: list[str]) -> DataFrame:  # format-specific
         raise NotImplementedError
@@ -93,22 +116,40 @@ class BlobListingSource:
         )
 
     def changes(self, since: dict | None) -> Iterator[MicroBatch]:
-        since_epoch = (since or {}).get("version")
+        since = since or {}
+        since_epoch = since.get("version")
+        boundary = since.get("boundary")
         files, self._probed = self._probed, None
         if files is None:  # no probe before this call: list now
             files = self._eligible()
+        seen: set[str] = set()
         if since_epoch is not None:
-            # reference filters createdOn >= watermark and relies on the
-            # version-guarded merge for replay idempotency; the watermark
-            # committed is the max over THIS listing, so a file landing
-            # after it is picked up by the next poll
-            files = [(p, ts) for p, ts in files if ts >= int(since_epoch)]
+            since_epoch = int(since_epoch)
+            if boundary is None:
+                # no boundary: the reference's createdOn >= watermark,
+                # which relies on the version-guarded merge for replay
+                # idempotency
+                files = [b for b in files if b.ts >= since_epoch]
+            else:
+                seen = set(boundary)
+                files = [
+                    b for b in files
+                    if b.ts > since_epoch or (b.ts == since_epoch and b.tag not in seen)
+                ]
+        # the watermark committed is the max over THIS listing, so a file
+        # landing after it is picked up by the next poll
         for i in range(0, len(files), self.max_files_per_batch):
             chunk = files[i : i + self.max_files_per_batch]
-            df = self._enrich(self._read([p for p, _ in chunk]))
+            top = chunk[-1].ts  # sorted by (ts, uri)
+            # every file of the top second merged once this chunk is: its
+            # own, earlier chunks', and the boundary's if it is that second
+            done = {b.tag for b in files[: i + len(chunk)] if b.ts == top}
+            if top == since_epoch:
+                done |= seen
+            df = self._enrich(self._read([b.uri for b in chunk]))
             yield MicroBatch(
                 df=df,
-                watermark={"version": max(ts for _, ts in chunk)},
+                watermark={"version": top, "boundary": sorted(done)},
                 units=len(chunk),
             )
 
@@ -127,9 +168,9 @@ class BlobListingSource:
         jvm = self.spark._jvm
         conf = self.spark._jsc.hadoopConfiguration()
         sized = []
-        for p, ts in self._eligible():
-            hp = jvm.org.apache.hadoop.fs.Path(p)
-            sized.append((p, hp.getFileSystem(conf).getFileStatus(hp).getLen()))
+        for b in self._eligible():
+            hp = jvm.org.apache.hadoop.fs.Path(b.uri)
+            sized.append((b.uri, hp.getFileSystem(conf).getFileStatus(hp).getLen()))
         shards, group, group_bytes = [], [], 0
         for p, size in sized:
             if group and (

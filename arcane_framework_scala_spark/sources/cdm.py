@@ -37,10 +37,10 @@ from dataclasses import dataclass, field
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
 from arcane_framework_scala_spark.schema.schema import MERGE_KEY_COLUMN
+from arcane_framework_scala_spark.schema.sql_types import quote_ident as q
 from arcane_framework_scala_spark.sources.base import MicroBatch
 
 _FOLDER_RE = re.compile(r"^\d{4}-\d{2}-\d{2}T\d{2}\.\d{2}\.\d{2}Z$")
@@ -145,23 +145,29 @@ class SynapseCdmSource:
         return {"version": self._probed[-1] if self._probed else ""}
 
     # -- batch assembly ----------------------------------------------------
-    def _typed(self, df: DataFrame, fields: list[tuple[str, T.DataType]]) -> DataFrame:
-        cols = []
+    @staticmethod
+    def _typed(fields: list[tuple[str, T.DataType]]) -> list[str]:
+        """The typed projection of the string-read CSV columns, plus the
+        merge key (the typed ``Id`` as a string), as SQL expressions for
+        one ``selectExpr``: one py4j round trip per column, no tree of
+        ``Column`` calls."""
+        typed = {}
         for name, dtype in fields:
-            c = F.col(name)
+            c = q(name)
             if name in ("SinkCreatedOn", "SinkModifiedOn"):
-                c = F.to_timestamp(c, _SYSTEM_TS_FORMAT)
+                c = f"to_timestamp({c}, '{_SYSTEM_TS_FORMAT}')"
             elif name == "CreatedOn":
                 # reference converts CreatedOn to the *system default zone*
                 # (SynapseLinkStreamingSource.scala:229-251) — session TZ is
                 # pinned UTC, preserving the behavior deterministically
-                c = F.to_timestamp(c)
+                c = f"to_timestamp({c})"
             elif isinstance(dtype, (T.TimestampNTZType, T.TimestampType)):
-                c = F.to_timestamp(c).cast(dtype)
+                c = f"CAST(to_timestamp({c}) AS {dtype.simpleString()})"
             elif not isinstance(dtype, T.StringType):
-                c = c.cast(dtype)
-            cols.append(c.alias(name))
-        return df.select(*cols)
+                c = f"CAST({c} AS {dtype.simpleString()})"
+            typed[name] = c
+        key = f"CAST({typed.get('Id', q('Id'))} AS STRING) AS {q(MERGE_KEY_COLUMN)}"
+        return [f"{c} AS {q(name)}" for name, c in typed.items()] + [key]
 
     def read_batch(self, folder: str) -> DataFrame | None:
         """One folder → one typed DataFrame with merge key + delete-last
@@ -186,7 +192,7 @@ class SynapseCdmSource:
         if model is None:
             raise FileNotFoundError(f"{folder}/model.json missing")
         fields = parse_cdm_model(model, self.entity)
-        # CSVs are read as strings; typed conversion happens in _typed()
+        # CSVs are read as strings; _typed() converts them
         schema = T.StructType([T.StructField(n, T.StringType(), True) for n, _ in fields])
         raw = (
             self.spark.read.schema(schema)
@@ -196,8 +202,7 @@ class SynapseCdmSource:
             .option("escape", '"')
             .csv(csvs)
         )
-        typed = self._typed(raw, fields)
-        return typed.withColumn(MERGE_KEY_COLUMN, F.col("Id").cast("string"))
+        return raw.selectExpr(*self._typed(fields))
 
     def changes(self, since: dict | None) -> Iterator[MicroBatch]:
         since_folder = (since or {}).get("version") or None

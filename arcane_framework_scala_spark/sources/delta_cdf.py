@@ -472,19 +472,26 @@ def _dv_positions_df(spark, path: str, pairs) -> DataFrame:
     touched file (driver O(files)); the JVM ``DvDiffUdf`` expands each
     pair's roaring bitmaps and emits only the DIFF positions — kind
     'del' for newly-deleted, 'ins' for released (restored) rows. No
-    Python node in the feed plan: the decode is pure byte work.
+    Python node in the feed plan, and none in its lineage: the input
+    frame is built from pandas through Arrow (a frame built from a
+    Python list pickles its rows through a Python worker when it runs),
+    and the decode is pure byte work.
 
     No repartition: the input is already ONE self-contained row per
-    touched file (createDataFrame spreads rows round-robin) and the
-    decode needs no grouping — a keyed repartition here only added a
+    touched file (the Arrow-built local relation spreads its rows over
+    the default parallelism) and the decode needs no grouping — a keyed repartition here only added a
     shuffle stage to every DV-commit feed read."""
+    import pandas as pd
     import pyspark.sql.functions as F
 
     _register_dv_udfs(spark)
     rows = [
         (rel, _dv_spec(path, o), _dv_spec(path, n)) for rel, o, n in pairs
     ]
-    src = spark.createDataFrame(rows, "rel string, old string, new string")
+    src = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["rel", "old", "new"], dtype=object),
+        "rel string, old string, new string",
+    )
     return src.select(
         "rel",
         F.explode(F.expr(f"{_DV_DIFF_UDF}(old, new)")).alias("__d"),

@@ -127,6 +127,7 @@ class StreamRunner:
         wm = Watermark.now(
             version=str(batch.watermark.get("version", "")),
             prefix=batch.watermark.get("prefix"),
+            boundary=batch.watermark.get("boundary"),
         )
         # monotonic guard: a replayed/out-of-order batch (crash replay,
         # source retry) must never move the watermark BACKWARDS — the
@@ -145,21 +146,30 @@ class StreamRunner:
     def run_once(self) -> int:
         """One poll cycle; returns number of batches applied."""
         current = self.store.read()
-        since = {"version": current.version} if current else None
+        since = None
+        if current is not None:
+            since = {"version": current.version}
+            if current.boundary is not None:
+                since["boundary"] = current.boundary
         head = None
         if current is not None:
             # T1: compare source head version against the stored watermark
             # before fetching (DefaultStreamDataProvider.scala:91-113) —
-            # sources filter `version >= watermark` inclusively, so without
-            # this probe an idle poll re-reads and re-merges the boundary
-            # batch every cycle (a no-op data-wise, but wasted I/O at scale).
+            # an idle poll then reads nothing, even from a source that
+            # filters `version >= watermark` inclusively (a blob
+            # watermark without a boundary). A file landing late in the
+            # boundary second waits for the next newer head.
             # The listing sources hand this probe's listing to the
             # changes() call below: one listing per poll.
             head = self.source.current_version()
             if str(head.get("version", "")) == current.version:
                 if self.settings.advance_watermark_on_idle:
                     self.store.commit(
-                        Watermark.now(version=current.version, prefix=current.prefix)
+                        Watermark.now(
+                            version=current.version,
+                            prefix=current.prefix,
+                            boundary=current.boundary,
+                        )
                     )
                     self.metrics.watermark_updates += 1
                 self.metrics.last_watermark_age_seconds = 0.0

@@ -9,7 +9,17 @@ source (F7):
 
 - MSSQL:   ``{"version": "<ct_version>", "timestamp": "<iso>"}``
 - Synapse: ``{"version": "<folder>", "timestamp": ..., "prefix": "<folder>/"}``
-- Blob:    ``{"version": "<epoch_seconds>", "timestamp": ...}``
+- Blob:    ``{"version": "<epoch_seconds>", "timestamp": ...,
+  "boundary": ["<name>@<mtime_ms>", ...]}``
+
+``boundary`` names every file of the ``version`` second that has been
+merged (path relative to the bucket root, ``@`` its modification time in
+milliseconds), so the next poll skips exactly those and still takes a
+late file landing in that same second, or a file rewritten in place.
+It is written only when set: the MSSQL and Synapse JSON is unchanged,
+and a blob watermark without it (an older one, or the reference's) makes
+the source re-read the boundary second inclusively, as the reference
+does — a no-op merge by the version guard.
 
 Two stores: ``TablePropertyWatermarkStore`` (catalog tables —
 ``ALTER TABLE ... SET TBLPROPERTIES``, the production path, same
@@ -26,7 +36,7 @@ import os
 import tempfile
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from typing import Protocol
+from typing import Iterable, Protocol
 
 from pyspark.sql import SparkSession
 
@@ -40,19 +50,29 @@ class Watermark:
     version: str
     timestamp: str = ""
     prefix: str | None = None
+    #: blob sources: ``name@mtime_ms`` of each file at the ``version``
+    #: second already merged (see the module docstring)
+    boundary: tuple[str, ...] | None = None
 
     @staticmethod
-    def now(version: str, prefix: str | None = None) -> "Watermark":
+    def now(
+        version: str,
+        prefix: str | None = None,
+        boundary: Iterable[str] | None = None,
+    ) -> "Watermark":
         return Watermark(
             version=version,
             timestamp=datetime.now(timezone.utc).isoformat(),
             prefix=prefix,
+            boundary=None if boundary is None else tuple(sorted(boundary)),
         )
 
     def to_json(self) -> str:
         d = {"version": self.version, "timestamp": self.timestamp}
         if self.prefix is not None:
             d["prefix"] = self.prefix
+        if self.boundary is not None:
+            d["boundary"] = list(self.boundary)
         return json.dumps(d, sort_keys=True)
 
     @staticmethod
@@ -65,10 +85,12 @@ class Watermark:
             return None
         if "version" not in d:
             return None
+        boundary = d.get("boundary")
         return Watermark(
             version=str(d["version"]),
             timestamp=str(d.get("timestamp", "")),
             prefix=d.get("prefix"),
+            boundary=tuple(boundary) if isinstance(boundary, list) else None,
         )
 
     def _order_key(self) -> tuple:

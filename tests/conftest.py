@@ -1,5 +1,6 @@
 import os
 import sys
+import threading
 
 import pytest
 
@@ -44,3 +45,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def py4j_round_trips(spark, monkeypatch):
+    """``round_trips(fn)``: runs ``fn`` and returns the py4j round trips
+    it sent, counted at the gateway client's ``send_command`` and only
+    from the calling thread (another thread's calls are not the code
+    under test)."""
+    client = type(spark.sparkContext._gateway._gateway_client)
+    original = client.send_command
+    me = threading.get_ident()
+    calls = [0]
+
+    def counted(self, *a, **kw):
+        if threading.get_ident() == me:
+            calls[0] += 1
+        return original(self, *a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counted)
+
+    def round_trips(fn) -> int:
+        calls[0] = 0
+        fn()
+        return calls[0]
+
+    return round_trips

@@ -3,7 +3,6 @@ multiline CSV, typed conversion, merge key, watermark-driven incremental,
 and the driver-side small-file reads (one JVM call per file)."""
 
 import json
-import threading
 
 import pytest
 
@@ -191,7 +190,7 @@ def _padded_model(pad_entities: int) -> dict:
     return {**MODEL, "entities": MODEL["entities"] + pad}
 
 
-def test_read_batch_round_trips_do_not_grow_with_model_json(spark, tmp_path, monkeypatch):
+def test_read_batch_round_trips_do_not_grow_with_model_json(spark, tmp_path, py4j_round_trips):
     """The py4j round trips of one read_batch, counted at the gateway
     client, are the same for a 4 KB and a 26 KB model.json: the file is
     read in one call, and parsed once."""
@@ -206,25 +205,13 @@ def test_read_batch_round_trips_do_not_grow_with_model_json(spark, tmp_path, mon
     small, big = sorted(sizes)
     assert 4_000 < sizes[small] < 5_000 and 24_000 < sizes[big] < 28_000
 
-    client = type(spark.sparkContext._gateway._gateway_client)
-    original = client.send_command
-    me = threading.get_ident()
-    calls = [0]
-
-    def counted(self, *a, **kw):
-        if threading.get_ident() == me:  # this test's calls only
-            calls[0] += 1
-        return original(self, *a, **kw)
-
-    monkeypatch.setattr(client, "send_command", counted)
     src = SynapseCdmSource(spark=spark, container_path=str(root), entity="account")
 
     def round_trips(folder):
-        calls[0] = 0
-        assert src.read_batch(folder) is not None
-        return calls[0]
+        return py4j_round_trips(lambda: src.read_batch(folder))
 
-    round_trips(small)  # warm-up
+    assert src.read_batch(small) is not None  # warm-up
+    assert src.read_batch(big) is not None
     assert round_trips(big) == round_trips(small)
 
 

@@ -1040,8 +1040,9 @@ def test_pruned_merge_planning_cases_match_ground_truth(spark, tmp_path, case):
 
 def test_pruned_merge_plans_in_one_query(spark, tmp_path):
     """A pruned merge runs one planning query before merge_apply — the
-    rewrite group and the carry list come from the same scan — so its
-    Spark job count stays at the measured floor."""
+    rewrite group and the carry list come from the same scan — and opens
+    the base snapshot with the schema its commit remembered, so its Spark
+    job count stays at the measured floor."""
     target = _partitioned_target(spark, tmp_path, "jobs")
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     sink.apply(spark.createDataFrame(
@@ -1054,4 +1055,88 @@ def test_pruned_merge_plans_in_one_query(spark, tmp_path):
         PART_SCHEMA,
     )
     jobs = _jobs_in_group(spark, lambda: sink.apply(wave2))
-    assert jobs == 8, jobs
+    assert jobs == 7, jobs
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["whole_table", "pruned"])
+def test_merge_on_a_version_it_committed_infers_no_schema(spark, tmp_path, partitioned):
+    """A merge onto the snapshot this target committed opens it with the
+    remembered schema: it runs exactly one Spark job fewer (the parquet
+    footer inference) than the same merge through a fresh target over an
+    identical table, and lands on the same rows."""
+    pcols = ["event_type"] if partitioned else None
+
+    def table(name):
+        t = DurableCatalogTarget(spark, str(tmp_path / name), name, partition_cols=pcols)
+        MergeSink(target=t, dialect=SQL_SERVER_CHANGE_TRACKING).apply(
+            spark.createDataFrame(
+                [("k1", 1, "U", 1, 10, "click"), ("k2", 2, "U", 2, 20, "view"),
+                 ("k3", 3, "U", 3, 30, "scroll")],
+                PART_SCHEMA,
+            )
+        )
+        return t
+
+    remembered = table("remembered")
+    fresh = DurableCatalogTarget(
+        spark, table("fresh").snapshots.path, "fresh", partition_cols=pcols
+    )
+    assert fresh.snapshots._schema is None
+
+    def merge(t):
+        wave2 = spark.createDataFrame(
+            [("k1", 4, "U", 1, 11, "view"), ("k4", 5, "U", 4, 40, "click")],
+            PART_SCHEMA,
+        )
+        return _jobs_in_group(
+            spark, lambda: MergeSink(target=t, dialect=SQL_SERVER_CHANGE_TRACKING).apply(wave2)
+        )
+
+    fresh_jobs = merge(fresh)
+    assert merge(remembered) == fresh_jobs - 1, fresh_jobs
+    assert _rows(remembered.read()) == _rows(fresh.read())
+
+
+def test_remembered_schema_matches_inference(spark, tmp_path):
+    """After every kind of commit the remembered read schema is what a
+    footer-inferring read of that version reports: a partitioned bootstrap
+    (long partition values a reader infers as int), a pruned merge, a T8
+    drift merge, an overwrite and X1 compaction on a partitioned table,
+    and the same with a whole-table merge on an unpartitioned one. Nested
+    data types come back nullable, as a parquet read reports them."""
+    from decimal import Decimal as D
+
+    schema = (
+        "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, "
+        "SYS_CHANGE_OPERATION string, amount decimal(10,2), "
+        "tags array<string>, bucket long"
+    )
+
+    def check(t):
+        v = t.snapshots.current_version()
+        inferred = spark.read.parquet(os.path.join(t.snapshots.path, f"v={v}")).schema
+        assert t.snapshots._schema == (v, inferred)
+
+    def batch(rows, ddl=schema):
+        return spark.createDataFrame(rows, ddl)
+
+    for pcols in (["bucket"], None):
+        t = DurableCatalogTarget(
+            spark, str(tmp_path / f"t{bool(pcols)}"), "t", partition_cols=pcols
+        )
+        sink = MergeSink(target=t, dialect=SQL_SERVER_CHANGE_TRACKING)
+        sink.apply(batch([("k1", 1, "U", D("1.50"), ["a"], 0), ("k2", 1, "U", D("2.50"), [], 1),
+                          ("k3", 1, "U", None, None, 2)]))
+        check(t)  # bootstrap
+        sink.apply(batch([("k1", 2, "U", D("3.50"), ["b"], 0), ("k9", 2, "U", D("9.50"), ["z"], 0)]))
+        check(t)  # pruned (partitioned) or whole-table merge
+        sink.apply(batch(
+            [("k2", 3, "U", D("4.50"), ["c"], 1, "new")], schema + ", note string"
+        ))
+        assert "note" in t.read().columns
+        check(t)  # T8 drift: full rewrite
+        t.overwrite(t.read().filter("ARCANE_MERGE_KEY != 'k3'"))
+        check(t)
+        optimize_snapshot(t.snapshots, target_file_bytes=128 << 20)
+        check(t)
+        assert t.read().count() == 3

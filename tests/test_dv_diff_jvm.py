@@ -108,6 +108,20 @@ def test_feed_plan_has_no_python_node(spark, tmp_path):
         assert marker not in plan, plan
 
 
+def test_feed_input_lineage_has_no_python_rdd(spark, tmp_path):
+    """The (rel, old, new) input frame is built from pandas through Arrow:
+    a frame built from a Python list pickles its rows through a Python
+    worker (a PythonRDD in the lineage) on every DV-commit feed read."""
+    tbl = str(tmp_path)
+    d = dv.write_dv_file(tbl, np.array([1, 3], dtype=np.int64))
+    pos = dcdf._dv_positions_df(spark, tbl, [("f", None, d), ("g", d, None)])
+    lineage = pos._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert sorted((r.rel, r.pos, r.kind) for r in pos.collect()) == [
+        ("f", 1, "del"), ("f", 3, "del"), ("g", 1, "ins"), ("g", 3, "ins"),
+    ]
+
+
 def test_corrupt_crc_raises(spark, tmp_path):
     tbl = str(tmp_path)
     d = dv.write_dv_file(tbl, np.array([7, 9], dtype=np.int64))
