@@ -5,7 +5,7 @@ of recomputing from the full table.
 The reference framework re-reads merged tables to compute statistics
 (`sinks/table_stats.py` ports that); at 100 TB a per-crawl-wave full
 recompute of a host-level profile is a full-table scan per wave. With
-the CoW target's derived change feed (``DurableCatalogTarget.changes``,
+the CoW target's derived change feed (``SnapshotParquetTarget.changes``,
 Delta-CDF/Iceberg-changes shape: key, op, old_*/new_* images), the
 same aggregate is maintainable from just the wave's changed rows —
 O(|delta|) work per wave, one hash shuffle on the group key, never a
@@ -323,7 +323,7 @@ class StreamingViewMaintainer:
 
     def sync(self) -> None:
         """Catch the view up to the target's current snapshot."""
-        cur = self.target.snapshots.current_version()
+        cur = self.target.current_version()
         if cur is None:
             return
         if self.synced_version is not None and self.synced_version > cur:

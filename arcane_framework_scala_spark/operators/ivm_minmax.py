@@ -95,7 +95,7 @@ def minmax_bootstrap(
 
 def minmax_delta(cdf: DataFrame, group_col: str, size_col: str) -> DataFrame:
     """Collapse a CDF batch (op + old_*/new_* images, the
-    ``DurableCatalogTarget.changes`` shape) into per-group minmax
+    ``SnapshotParquetTarget.changes`` shape) into per-group minmax
     deltas: ``(group, d_docs, ins_top2, ins_bot2, del_max, del_min)``.
     Updates contribute their post-image as an insert and their pre-image
     as a delete (group moves included)."""

@@ -2,7 +2,6 @@ from arcane_framework_scala_spark.sinks.merge_sink import (
     MergeSink,
     SnapshotParquetTarget,
     CatalogTarget,
-    DurableCatalogTarget,
     REFERENCE_MAX_ROWS_PER_FILE,
 )
 from arcane_framework_scala_spark.sinks.table_stats import (
@@ -18,7 +17,6 @@ __all__ = [
     "MergeSink",
     "SnapshotParquetTarget",
     "CatalogTarget",
-    "DurableCatalogTarget",
     "REFERENCE_MAX_ROWS_PER_FILE",
     "TableStats",
     "table_stats",

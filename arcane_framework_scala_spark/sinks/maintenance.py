@@ -86,10 +86,11 @@ def optimize_snapshot(
     else:
         df = df.coalesce(n_files)
     # the per-file row cap is a staging-write knob; compaction's whole point
-    # is larger files, so bypass it for this commit
+    # is larger files, so bypass it for this commit. The commit is the
+    # undistributed one: ``overwrite`` would add a shuffle by partition
     cap, target.max_rows_per_file = target.max_rows_per_file, None
     try:
-        target.overwrite(df)
+        target._commit(df)
     finally:
         target.max_rows_per_file = cap
     return n_files
@@ -170,7 +171,7 @@ def remove_orphan_files(
         if current is not None and v <= current
     }
     # metadata sidecars are never orphans: the pointer, the X4 stats
-    # file, and the T2 watermark (DurableCatalogTarget.watermark_store)
+    # file, and the T2 watermark (SnapshotParquetTarget.watermark_store)
     live.update(
         {os.path.basename(target._pointer()), _STATS_FILE, "_WATERMARK.json"}
     )

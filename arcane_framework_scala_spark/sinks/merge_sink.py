@@ -1,24 +1,21 @@
 """Merge sinks (K2/K3 + T8 schema migration).
 
-Three target flavors behind one interface:
+Two target kinds behind one interface:
 
 - ``CatalogTarget``: a catalog table (Iceberg/Delta). The generated MERGE
   SQL from :mod:`queries.merge` executes via ``spark.sql`` — storage-side
   file pruning, snapshots and ``TBLPROPERTIES`` watermarks come free. This
   is the production path at 100 TB.
-- ``SnapshotParquetTarget``: a plain parquet directory managed as
-  versioned snapshots (``v=N`` subdirs + a ``_CURRENT`` pointer committed
-  by atomic rename). Merge semantics execute through
-  :func:`operators.merge_apply`. This makes the full pipeline runnable and
-  testable on any filesystem with zero catalog dependencies — the local
-  stand-in for Iceberg, not a scale recommendation.
-- ``DurableCatalogTarget``: the copy-on-write lakehouse table on that
-  snapshot layout — partition- or file-group-pruned rewrites carried by
-  hard link, X1–X4 maintenance, time travel and a derived change feed,
-  all on the files each merge commits. Merges execute through
-  :func:`operators.merge_apply` as well.
+- ``SnapshotParquetTarget``: the copy-on-write lakehouse table on a plain
+  parquet directory managed as versioned snapshots (``v=N`` subdirs + a
+  ``_CURRENT`` pointer committed by atomic rename) — partition- or
+  file-group-pruned rewrites carried by hard link, X1–X4 maintenance,
+  time travel and a derived change feed, all on the files each merge
+  commits. Merge semantics execute through :func:`operators.merge_apply`.
+  This makes the full pipeline runnable and testable on any filesystem
+  with zero catalog dependencies — the local stand-in for Iceberg.
 
-``MergeSink`` applies the reference's merge-retry policy to all three
+``MergeSink`` applies the reference's merge-retry policy to both
 (exponential backoff with an error-message allowlist, ``services/merging/
 JdbcMergeServiceClient.scala:38-58``), and each target handles per-batch
 schema drift (T8: missing columns are added to the target before the
@@ -116,9 +113,76 @@ def _nullable(dt: DataType) -> DataType:
     return dt
 
 
+def _bootstrap_frame(source: DataFrame, dialect: MergeDialect) -> DataFrame:
+    """The first batch as the table it creates: one row per key under the
+    tie policy ``merge_apply`` uses, the insert condition applied to the
+    batch's own columns, and the marker columns (``SYS_CHANGE_OPERATION``,
+    ``IsDelete``, ...) dropped — later batches merge onto the schema this
+    one created."""
+    boot = _collapse_ties(source, dialect, MERGE_KEY_COLUMN, version_first=True)
+    if dialect.insert_condition:
+        boot = boot.filter(dialect.insert_condition.replace("t_s.", ""))
+    return boot.drop(*[c for c in dialect.non_data_columns if c in boot.columns])
+
+
 class SnapshotParquetTarget:
-    """Versioned-parquet table: ``<path>/v=N`` snapshot dirs + ``_CURRENT``
-    pointer (atomic rename commit). Readers always see a complete snapshot.
+    """Copy-on-write lakehouse table: merges, durable snapshot commits
+    and maintenance, all on ONE versioned-parquet table — ``<path>/v=N``
+    snapshot dirs + a ``_CURRENT`` pointer (atomic rename commit), so
+    readers always see a complete snapshot.
+
+    Iceberg's copy-on-write MERGE performs exactly this sequence per
+    commit (``JdbcMergeServiceClient.scala:62-91`` drives it through
+    Trino): (1) read the current snapshot's files, (2) rewrite them with
+    the batch applied, (3) commit the rewritten files as a new snapshot.
+    Here step 2 is :func:`operators.merge_apply` — the M1-M3 dialect
+    semantics of the generated MERGE SQL, checked row for row against
+    that SQL (``tests/test_mem_catalog_merge.py``) — and steps 1/3 run on
+    the snapshot layout the X1–X4 maintenance family
+    (:mod:`sinks.maintenance`) manages: compaction, snapshot expiry,
+    orphan removal, ANALYZE and time travel all operate on the same
+    files every merge commits. No table data is held between merges:
+    each one reads ``_CURRENT``, so a crash before the snapshot commit
+    loses nothing — the retried batch replays onto the last durable
+    snapshot (T9 version guards make the replay idempotent).
+
+    Each merge takes one of these paths:
+
+    - no committed snapshot: the batch bootstraps the table;
+    - T8 schema drift (the batch carries columns the table lacks): the
+      whole table is rewritten with the new columns added as nulls —
+      carried-over files cannot gain columns;
+    - ``partition_cols`` (hive partitioning, the 100 TB requirement and
+      Iceberg's partition spec equivalent): the rewrite group is PRUNED
+      to the touched partitions, exactly as Iceberg CoW prunes the
+      rewrite to files whose key ranges intersect the source (the same
+      partition-scoped merge the reference's ``ON … IN (…)`` lists buy —
+      ``models/queries/MergeQuerySegment.scala:54-71``). The merge reads
+      only the partitions the batch writes into or holds a matched merge
+      key in, rewrites just that group, and the commit carries every
+      untouched partition directory over by hard link (byte-identical,
+      zero data movement, :meth:`_commit_pruned`). A batch that lacks a
+      partition column rewrites the whole table;
+    - ``file_group_pruning=True`` (unpartitioned tables): the rewrite
+      group is the set of FILES containing a matched merge key —
+      Iceberg's real granularity — found by a planning scan that
+      semi-joins the broadcast batch keys, grouped by
+      ``input_file_name``; every unmatched file is carried by hard link
+      and inserts land in the rewritten output. How much it prunes is
+      the layout's property, exactly as on Iceberg: after
+      ``optimize_snapshot(sort_cols=[...])`` a key-clustered batch
+      touches few files; a uniformly-hashing merge key touches most. It
+      stays opt-in because the probe is an extra scan job per merge that
+      pays off only on a multi-file layout;
+    - otherwise: the whole table is rewritten.
+
+    Every merge result and every ``overwrite`` input is distributed by
+    the partition columns before the write, so each touched partition
+    gets one file per commit (Iceberg's ``write.distribution-mode=hash``).
+    Partition values must be type-inference-stable (strings that don't
+    look numeric, or genuine numerics) — the same contract hive layouts
+    always had; reads with a partition predicate prune to the matching
+    directories (PartitionFilters in the scan, pinned by test_plan_audit).
 
     ``max_rows_per_file`` maps the reference's ``maxRowsPerFile`` staging
     knob onto Spark's ``maxRecordsPerFile`` write option (file writes are
@@ -130,12 +194,13 @@ class SnapshotParquetTarget:
     fields, then the partition fields with the types a reader infers
     from the directory names (a driver-side listing, no Spark job), all
     nullable: exactly what ``spark.read.parquet(v=N).schema`` reports.
-    ``read()`` and the merge base reads of that version pass it to
-    ``spark.read.schema(...)``, so opening the snapshot the last commit
-    wrote runs no footer-inference job. Any other version (older ones,
-    one another writer committed, or every version after a restart)
-    infers as before, and so does a pruned commit whose rewritten files
-    do not carry the carried files' data types."""
+    ``read()``, the merge base and the pruned group reads of that
+    version pass it to ``spark.read.schema(...)``, so opening the
+    snapshot the last commit wrote runs no footer-inference job. Any
+    other version (older ones, one another writer committed, or every
+    version after a restart) infers as before, and so does a pruned
+    commit whose rewritten files do not carry the carried files' data
+    types."""
 
     def __init__(
         self,
@@ -143,18 +208,13 @@ class SnapshotParquetTarget:
         path: str,
         max_rows_per_file: int | None = None,
         partition_cols: list[str] | None = None,
+        file_group_pruning: bool = False,
     ):
         self.spark = spark
         self.path = path
         self.max_rows_per_file = max_rows_per_file
-        #: hive-partition every committed snapshot by these columns — the
-        #: 100 TB requirement (Iceberg partition spec equivalent): reads
-        #: with a partition predicate prune to the matching directories
-        #: (PartitionFilters in the scan, pinned by test_plan_audit).
-        #: Partition values must be type-inference-stable (strings that
-        #: don't look numeric, or genuine numerics) — the same contract
-        #: hive layouts always had.
         self.partition_cols = list(partition_cols or [])
+        self.file_group_pruning = file_group_pruning
         #: (version, read schema) of the last snapshot this target
         #: committed; see the class docstring
         self._schema: tuple[int, StructType] | None = None
@@ -419,251 +479,42 @@ class SnapshotParquetTarget:
         return df.hint("rebalance", *self.partition_cols)
 
     def overwrite(self, df: DataFrame) -> None:
-        self._commit(df)
+        self._commit(self._distributed(df))
 
     def merge(self, source: DataFrame, dialect: MergeDialect) -> None:
         # capture the base version BEFORE reading: the merge result is a
         # function of this snapshot, so the commit must verify the pointer
         # has not moved off it (otherwise the intervening batch is lost).
         base = self.current_version()
-        target = self._open(base) if base is not None else None
-        if target is None:
-            # bootstrap: first batch becomes the target minus delete markers
-            insert_ok = (
-                F.expr(dialect.insert_condition.replace("t_s.", ""))
-                if dialect.insert_condition
-                else F.lit(True)
-            )
-            boot = _collapse_ties(
-                source, dialect, MERGE_KEY_COLUMN, version_first=True
-            ).filter(insert_ok)
-            drop = [c for c in dialect.non_data_columns if c in boot.columns]
-            self._commit(self._distributed(boot.drop(*drop)), expected_base=0)
+        if base is None:
+            boot = _bootstrap_frame(source, dialect)
+            self._commit(self._distributed(boot), expected_base=0)
             return
-        # T8 schema drift: add source-only columns to the target as nulls
-        for f in _drift_fields(source, target.columns, dialect):
+        target = self._open(base)
+        drift = _drift_fields(source, target.columns, dialect)
+        if not drift:
+            # names match without regard to case, as _drift_fields does
+            have = {c.lower() for c in source.columns}
+            pcols = [c.lower() for c in self.partition_cols]
+            if pcols and all(c in have for c in pcols):
+                return self._merge_pruned(source, dialect, base, target)
+            if self.file_group_pruning and not self.partition_cols:
+                return self._merge_pruned_files(source, dialect, base, target)
+        # whole-table rewrite; T8 schema drift adds the source-only
+        # columns to the target as nulls
+        for f in drift:
             target = target.withColumn(f.name, F.lit(None).cast(f.dataType))
         merged = merge_apply(target, source, dialect)
         self._commit(self._distributed(merged), expected_base=base)
 
-
-class CatalogTarget:
-    """Catalog-table target driven by generated MERGE SQL (Iceberg/Delta).
-
-    The bootstrapped table carries only data columns (markers like
-    ``SYS_CHANGE_OPERATION``/``IsDelete`` stay in the staged batch;
-    :func:`queries.merge.build_merge_query` likewise never assigns them),
-    so every later batch merges onto the same schema it would have created.
-
-    On catalogs whose tables don't accept ``MERGE INTO`` (vanilla Spark's
-    v1 session catalog), the same dialect semantics execute through
-    :func:`operators.merge_apply` + ``replace`` — one code path per
-    semantic, two physical strategies, chosen per table at runtime."""
-
-    def __init__(self, spark: SparkSession, table: str):
-        self.spark = spark
-        self.table = table
-
-    def exists(self) -> bool:
-        return self.spark.catalog.tableExists(self.table)
-
-    def read(self) -> DataFrame | None:
-        return self.spark.table(self.table) if self.exists() else None
-
-    def overwrite(self, df: DataFrame) -> None:
-        try:
-            df.writeTo(self.table).createOrReplace()
-        except Exception as e:  # noqa: BLE001 — v1 catalogs lack RTAS
-            if "REPLACE TABLE" not in str(e):
-                raise
-            df.write.mode("overwrite").saveAsTable(self.table)
-
-    def _migrate_schema(self, source: DataFrame, dialect: MergeDialect) -> None:
-        """T8 drift: add source-only data columns to the target before the
-        merge (``SchemaMigrationProcessor.scala:24-50``). ADD COLUMNS is a
-        metadata-only operation on Iceberg/Delta/v1 alike."""
-        missing = _drift_fields(
-            source, self.spark.table(self.table).columns, dialect
-        )
-        if missing:
-            cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in missing)
-            self.spark.sql(f"ALTER TABLE {self.table} ADD COLUMNS ({cols})")
-
-    def merge(self, source: DataFrame, dialect: MergeDialect) -> None:
-        # one staged row per key, under the same tie policy merge_apply
-        # uses: rank() = 1 alone keeps every row tied at the max version,
-        # which the MERGE rejects on a matched key and inserts twice on a
-        # new one
-        staged = _collapse_ties(source, dialect, MERGE_KEY_COLUMN, version_first=True)
-        if not self.exists():
-            df = staged
-            if dialect.insert_condition:
-                df = df.filter(F.expr(dialect.insert_condition.replace("t_s.", "")))
-            df = df.drop(*[c for c in dialect.non_data_columns if c in df.columns])
-            df.writeTo(self.table).create()
-            return
-        self._migrate_schema(source, dialect)
-        view = f"__arcane_staged_{abs(hash(self.table)) % 10_000_000}"
-        # run the MERGE on the SOURCE DataFrame's session, not the one the
-        # target was constructed with: inside a foreachBatch callback the
-        # batch frame belongs to a per-stream CLONED session, and a temp
-        # view registered there is invisible to the outer session (the
-        # catalog itself is safe — MemCatalog/Iceberg state is JVM-global,
-        # and clones inherit the spark.sql.catalog.* conf).
-        sess = source.sparkSession
-        staged.createOrReplaceTempView(view)
-        try:
-            sql = build_merge_query(
-                dialect, self.table, view, staged.columns, deduplicate=False
-            )
-            try:
-                sess.sql(sql)
-            except Exception as e:  # noqa: BLE001 — inspect & re-raise below
-                if "MERGE INTO" not in str(e):
-                    raise
-                # catalog has no MERGE support: same semantics, DataFrame
-                # execution. Materialize before replace — the plan reads
-                # the table being replaced.
-                merged = merge_apply(sess.table(self.table), source, dialect)
-                self.overwrite(merged.localCheckpoint(eager=True))
-        finally:
-            sess.catalog.dropTempView(view)
-
-
-class DurableCatalogTarget:
-    """Copy-on-write lakehouse table: merges, durable snapshot commits
-    and maintenance, all on ONE table.
-
-    Iceberg's copy-on-write MERGE performs exactly this sequence per
-    commit (``JdbcMergeServiceClient.scala:62-91`` drives it through
-    Trino): (1) read the current snapshot's files, (2) rewrite them with
-    the batch applied, (3) commit the rewritten files as a new snapshot.
-    Here step 2 is :func:`operators.merge_apply` — the M1-M3 dialect
-    semantics of the generated MERGE SQL, checked row for row against
-    that SQL (``tests/test_mem_catalog_merge.py``) — and steps 1/3 run on
-    the versioned-parquet layout the X1–X4 maintenance family already
-    manages: compaction, snapshot expiry, orphan removal, ANALYZE and
-    time travel all operate on the same files every merge commits.
-    No table data is held between merges: each one reads ``_CURRENT``,
-    so a crash before the snapshot commit loses nothing — the retried
-    batch replays onto the last durable snapshot (T9 version guards make
-    the replay idempotent) — and maintenance between merges costs the
-    next merge nothing extra. What is held is the read schema of the
-    snapshot this target last committed (``SnapshotParquetTarget``'s
-    remembered schema): the next merge opens its base, and plans its
-    pruned group, with it and runs no footer-inference job. A base this
-    target did not commit — another writer's, or any after a restart —
-    and a pruned commit whose rewritten files changed a data type fall
-    back to inference.
-
-    On a hive-partitioned table (``partition_cols``) the rewrite group is
-    PRUNED to the touched partitions, exactly as Iceberg CoW prunes the
-    rewrite to files whose key ranges intersect the source (the same
-    partition-scoped merge the reference's ``ON … IN (…)`` lists buy —
-    ``models/queries/MergeQuerySegment.scala:54-71``): the merge reads
-    only the partitions the batch writes into or holds a matched merge
-    key in, rewrites just that group, and the snapshot commit carries
-    every untouched partition directory over by hard link —
-    byte-identical, zero data movement
-    (:meth:`SnapshotParquetTarget._commit_pruned`). Unpartitioned tables
-    keep the whole-table group (there is nothing to prune by), and a
-    schema-drift batch falls back to the full rewrite (carried-over files
-    cannot gain columns). Merge results and ``overwrite`` input are
-    distributed by the partition columns before the write, so each
-    touched partition gets one file per commit (Iceberg's
-    ``write.distribution-mode=hash``).
-
-    ``file_group_pruning=True`` extends the pruning BELOW partitions to
-    Iceberg's real granularity on unpartitioned tables: the rewrite
-    group is the set of FILES containing a matched merge key (found by
-    a planning scan that semi-joins the broadcast batch keys, grouped by
-    ``input_file_name``), every unmatched file is carried by hard link,
-    and inserts land in the rewritten output. How much it prunes is the
-    layout's property, exactly as on Iceberg: after
-    ``optimize_snapshot(sort_cols=[...])`` a key-clustered batch touches
-    few files; a uniformly-hashing merge key touches most. It stays
-    opt-in because the probe is an extra scan job per merge that pays
-    off only on a multi-file layout: a table kept at one file (as
-    compaction leaves it) has nothing to carry, and none of the
-    ``perfbench`` workloads has a multi-file layout to measure it on.
-
-    ``table`` is accepted for call-site compatibility and unused: the
-    snapshot layout under ``path`` is the whole table.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        table: str,
-        max_rows_per_file: int | None = None,
-        partition_cols: list[str] | None = None,
-        file_group_pruning: bool = False,
-    ):
-        self.spark = spark
-        self.snapshots = SnapshotParquetTarget(
-            spark, path, max_rows_per_file, partition_cols
-        )
-        self.file_group_pruning = file_group_pruning
-
-    # -- durable truth: reads delegate to the snapshot layout ---------
-
-    def exists(self) -> bool:
-        return self.snapshots.exists()
-
-    def read(self) -> DataFrame | None:
-        return self.snapshots.read()
-
-    def versions(self) -> list[int]:
-        return self.snapshots.versions()
-
-    def read_version(self, version: int) -> DataFrame:
-        return self.snapshots.read_version(version)
-
-    def read_as_of(self, timestamp: float) -> DataFrame:
-        return self.snapshots.read_as_of(timestamp)
-
-    def read_range(
-        self, col: str, lo=None, hi=None, version: int | None = None
-    ) -> DataFrame:
-        return self.snapshots.read_range(col, lo, hi, version)
-
-    def history(self) -> list[tuple[int, float]]:
-        return self.snapshots.history()
-
-    # -- CoW write path ------------------------------------------------
-
-    def overwrite(self, df: DataFrame) -> None:
-        self.snapshots.overwrite(self.snapshots._distributed(df))
-
-    def merge(self, source: DataFrame, dialect: MergeDialect) -> None:
-        # the pruned paths read and commit against this base version; the
-        # whole-table path captures its own inside snapshots.merge
-        base = self.snapshots.current_version() or 0
-        if (
-            base
-            and self.snapshots.partition_cols
-            and self._merge_pruned(source, dialect, base)
-        ):
-            return
-        if (
-            base
-            and self.file_group_pruning
-            and not self.snapshots.partition_cols
-            and self._merge_pruned_files(source, dialect, base)
-        ):
-            return
-        self.snapshots.merge(source, dialect)
-
     def _merge_pruned(
-        self, source: DataFrame, dialect: MergeDialect, base: int
-    ) -> bool:
-        """Partition-scoped CoW merge: rewrite ONLY the touched rewrite
-        group; carry every other partition's data files into the new
-        snapshot byte-identically. Returns False when the pruned path
-        does not apply (the batch drifts the schema — carried-over files
-        cannot gain columns — or lacks the partition columns), in which
-        case the caller runs the full-table path.
+        self, source: DataFrame, dialect: MergeDialect, base: int, base_df: DataFrame
+    ) -> None:
+        """Partition-scoped CoW merge of ``source`` onto snapshot ``base``
+        (opened as ``base_df``): rewrite ONLY the touched rewrite group;
+        carry every other partition's data files into the new snapshot
+        byte-identically. The caller has checked that the batch neither
+        drifts the schema nor lacks a partition column.
 
         The rewrite group = partitions the batch writes into ∪ base
         partitions holding a matched merge key (an update may MOVE a row
@@ -679,14 +530,9 @@ class DurableCatalogTarget:
         safe. The query is SQL text over backtick-quoted names."""
         from urllib.parse import unquote, urlparse
 
-        pcols = self.snapshots.partition_cols
-        base_dir = os.path.join(self.snapshots.path, f"v={base}")
-        base_df = self.snapshots._open(base)
+        pcols = self.partition_cols
+        base_dir = os.path.join(self.path, f"v={base}")
         base_schema = base_df.schema
-        if _drift_fields(source, base_schema.names, dialect):
-            return False  # T8 drift -> full rewrite
-        if any(c not in source.columns for c in pcols):
-            return False
         key = q(MERGE_KEY_COLUMN)
         # a repeated batch key only repeats rows inside a group: no distinct
         matched = source.selectExpr(key, "true AS __m").hint("broadcast")
@@ -732,21 +578,18 @@ class DurableCatalogTarget:
             ]
         group = base_df.filter(terms[0] if terms else F.lit(False))
         merged = merge_apply(group, source, dialect)
-        self.snapshots._commit_pruned(
-            self.snapshots._distributed(merged), carry, base, base_schema
-        )
-        return True
+        self._commit_pruned(self._distributed(merged), carry, base, base_schema)
 
     def _merge_pruned_files(
-        self, source: DataFrame, dialect: MergeDialect, base: int
-    ) -> bool:
-        """File-granular CoW merge (Iceberg's real rewrite unit): the
+        self, source: DataFrame, dialect: MergeDialect, base: int, base_df: DataFrame
+    ) -> None:
+        """File-granular CoW merge (Iceberg's real rewrite unit) of
+        ``source`` onto snapshot ``base`` (opened as ``base_df``): the
         rewrite group is the set of base data FILES holding a matched
         merge key; unmatched files are carried into the new snapshot by
-        hard link, byte-identical. Returns False when the pruned path
-        does not apply (schema drift — carried files cannot gain
-        columns). Inserts need no file: they land in the rewritten
-        output alongside the group's surviving rows.
+        hard link, byte-identical. The caller has checked that the batch
+        does not drift the schema. Inserts need no file: they land in
+        the rewritten output alongside the group's surviving rows.
 
         The matched-file probe is the planning scan Iceberg CoW also
         runs (a broadcast semi-join over two columns, here key +
@@ -764,11 +607,8 @@ class DurableCatalogTarget:
         (the link raises instead of clobbering)."""
         from urllib.parse import unquote, urlparse
 
-        base_dir = os.path.join(self.snapshots.path, f"v={base}")
-        base_df = self.snapshots._open(base)
+        base_dir = os.path.join(self.path, f"v={base}")
         base_schema = base_df.schema
-        if _drift_fields(source, base_schema.names, dialect):
-            return False  # T8 drift -> full rewrite
         # the probe and the group read files of the base snapshot: they
         # take its schema instead of inferring it again
         read_files = self.spark.read.schema(base_schema).parquet
@@ -781,13 +621,13 @@ class DurableCatalogTarget:
         from arcane_framework_scala_spark.sinks.manifest import plan_files
 
         lo_hi = None
-        candidates = plan_files(self.snapshots, MERGE_KEY_COLUMN, version=base)
+        candidates = plan_files(self, MERGE_KEY_COLUMN, version=base)
         if candidates is not None:
             lo_hi = source.agg(
                 F.min(MERGE_KEY_COLUMN), F.max(MERGE_KEY_COLUMN)
             ).first()
             candidates = plan_files(
-                self.snapshots,
+                self,
                 MERGE_KEY_COLUMN,
                 lo=lo_hi[0],
                 hi=lo_hi[1],
@@ -839,8 +679,7 @@ class DurableCatalogTarget:
         )
         merged = merge_apply(group, source, dialect)
         # unmatched files are carried FLAT at their base-relative path
-        self.snapshots._commit_pruned(merged, carry, base, base_schema)
-        return True
+        self._commit_pruned(merged, carry, base, base_schema)
 
     def changes(self, v_from: int, v_to: int, keys: list[str] | None = None):
         """Change data feed between two committed snapshots (Delta CDF /
@@ -867,8 +706,117 @@ class DurableCatalogTarget:
         )
 
         return FileWatermarkStore(
-            path=os.path.join(self.snapshots.path, "_WATERMARK.json")
+            path=os.path.join(self.path, "_WATERMARK.json")
         )
+
+
+class CatalogTarget:
+    """Catalog-table target driven by generated MERGE SQL (Iceberg/Delta).
+
+    The bootstrapped table carries only data columns (markers like
+    ``SYS_CHANGE_OPERATION``/``IsDelete`` stay in the staged batch;
+    :func:`queries.merge.build_merge_query` likewise never assigns them),
+    so every later batch merges onto the same schema it would have created.
+
+    On catalogs whose tables don't accept ``MERGE INTO`` (vanilla Spark's
+    v1 session catalog), the same dialect semantics execute through
+    :func:`operators.merge_apply` + ``replace`` — one code path per
+    semantic, two physical strategies, chosen per table at runtime."""
+
+    def __init__(self, spark: SparkSession, table: str):
+        self.spark = spark
+        self.table = table
+
+    def exists(self) -> bool:
+        return self.spark.catalog.tableExists(self.table)
+
+    def read(self) -> DataFrame | None:
+        return self.spark.table(self.table) if self.exists() else None
+
+    def overwrite(self, df: DataFrame) -> None:
+        try:
+            df.writeTo(self.table).createOrReplace()
+        except Exception as e:  # noqa: BLE001 — v1 catalogs lack RTAS
+            if "REPLACE TABLE" not in str(e):
+                raise
+            df.write.mode("overwrite").saveAsTable(self.table)
+
+    def _migrate_schema(self, source: DataFrame, dialect: MergeDialect) -> None:
+        """T8 drift: add source-only data columns to the target before the
+        merge (``SchemaMigrationProcessor.scala:24-50``). ADD COLUMNS is a
+        metadata-only operation on Iceberg/Delta/v1 alike."""
+        missing = _drift_fields(
+            source, self.spark.table(self.table).columns, dialect
+        )
+        if missing:
+            cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in missing)
+            self.spark.sql(f"ALTER TABLE {self.table} ADD COLUMNS ({cols})")
+
+    def merge(self, source: DataFrame, dialect: MergeDialect) -> None:
+        if not self.exists():
+            _bootstrap_frame(source, dialect).writeTo(self.table).create()
+            return
+        self._migrate_schema(source, dialect)
+        # one staged row per key, under the same tie policy merge_apply
+        # uses: rank() = 1 alone keeps every row tied at the max version,
+        # which the MERGE rejects on a matched key and inserts twice on a
+        # new one
+        staged = _collapse_ties(source, dialect, MERGE_KEY_COLUMN, version_first=True)
+        view = f"__arcane_staged_{abs(hash(self.table)) % 10_000_000}"
+        # run the MERGE on the SOURCE DataFrame's session, not the one the
+        # target was constructed with: inside a foreachBatch callback the
+        # batch frame belongs to a per-stream CLONED session, and a temp
+        # view registered there is invisible to the outer session (the
+        # catalog itself is safe — MemCatalog/Iceberg state is JVM-global,
+        # and clones inherit the spark.sql.catalog.* conf).
+        sess = source.sparkSession
+        staged.createOrReplaceTempView(view)
+        try:
+            sql = build_merge_query(
+                dialect, self.table, view, staged.columns, deduplicate=False
+            )
+            try:
+                sess.sql(sql)
+            except Exception as e:  # noqa: BLE001 — inspect & re-raise below
+                if "MERGE INTO" not in str(e):
+                    raise
+                # catalog has no MERGE support: same semantics, DataFrame
+                # execution. Materialize before replace — the plan reads
+                # the table being replaced.
+                merged = merge_apply(sess.table(self.table), source, dialect)
+                self.overwrite(merged.localCheckpoint(eager=True))
+        finally:
+            sess.catalog.dropTempView(view)
+
+
+class DurableCatalogTarget(SnapshotParquetTarget):
+    """``SnapshotParquetTarget`` under the constructor ``perfbench``'s
+    workloads call — the only reason this class exists. They pass a
+    positional, unused ``table`` name and hand ``target.snapshots`` to
+    maintenance, and the perfbench tracer patches and then restores
+    ``merge``/``overwrite`` on this class and on its parent by name:
+    the class's own attributes below are what it restores here, so the
+    parent's span wrapper is never left installed on this class."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        table: str,
+        max_rows_per_file: int | None = None,
+        partition_cols: list[str] | None = None,
+        file_group_pruning: bool = False,
+    ):
+        super().__init__(
+            spark, path, max_rows_per_file, partition_cols, file_group_pruning
+        )
+
+    @property
+    def snapshots(self) -> SnapshotParquetTarget:
+        return self
+
+    merge = SnapshotParquetTarget.merge
+    overwrite = SnapshotParquetTarget.overwrite
 
 
 @dataclass
@@ -877,7 +825,7 @@ class MergeSink:
     audit-parity staging — the reference always stages to Iceberg first;
     Spark can merge straight from the batch DataFrame, K1/K5 elided)."""
 
-    target: SnapshotParquetTarget | CatalogTarget | DurableCatalogTarget
+    target: SnapshotParquetTarget | CatalogTarget
     dialect: MergeDialect
     retry: RetryPolicy = field(default_factory=RetryPolicy)
 

@@ -829,7 +829,7 @@ def cdf_to_diff(cdf: DataFrame, keys: list[str]) -> DataFrame:
 class DeltaCdfTarget:
     """A CDF-enabled Delta table as an IVM maintenance TARGET (r11):
     adapts the feed to the interface ``StreamingViewMaintainer``
-    drives (``snapshots.current_version()`` / ``read_version`` /
+    drives (``current_version()`` / ``read_version`` /
     ``changes``), so a maintainer — state table, durable synced
     version, crash-exactly-once ``last_v`` MERGE and all — runs
     unchanged against a Delta table this engine only READS.
@@ -840,7 +840,6 @@ class DeltaCdfTarget:
         self.spark = spark
         self.path = path
         self.keys = list(keys)
-        self.snapshots = self  # current_version() lives on the target
 
     def current_version(self) -> int | None:
         head = _head(self.path)

@@ -203,7 +203,7 @@ def vacuum(
     # tombstone deletionTimestamp (ms) keyed by resolved path — a
     # remove that carried its DV descriptor covers the DV file too
     removed_at_ms: dict[str, int] = {}
-    for rel, a in st["tombstones"].items():
+    for (rel, _), a in st["tombstones"].items():
         ts = a.get("deletionTimestamp")
         if ts is None:
             continue

@@ -283,6 +283,19 @@ def _replay_full(
     return st["live"], st["meta"]
 
 
+def _dv_id(action: dict) -> str:
+    """The protocol's ``deletionVector.uniqueId`` of a file action
+    (storage type + path or inline bitmap, ``@offset`` when set); empty
+    for a file without a DV."""
+    d = action.get("deletionVector")
+    if not d:
+        return ""
+    off = d.get("offset")
+    return f"{d['storageType']}{d['pathOrInlineDv']}" + (
+        "" if off is None else f"@{off}"
+    )
+
+
 def _replay_state(
     path: str, version: int | None = None, spark: SparkSession | None = None
 ) -> dict:
@@ -290,8 +303,12 @@ def _replay_state(
     ``version`` (default: latest) → ``{"live": {rel -> full add-action
     dict, deletionVector descriptor included}, "meta": newest metaData
     action, "protocol": newest protocol action (None if the log never
-    carried one), "tombstones": {rel -> newest remove action for files
-    NOT currently live}}``. Every public reader builds on this so the
+    carried one), "tombstones": {(rel, DV id) -> newest remove action
+    for file actions NOT currently live}}``. A file action is keyed by
+    its path and its deletion vector's id, as the protocol keys it: a
+    DV update removes ``(rel, old DV)`` and adds ``(rel, new DV)``, so
+    the old DV file keeps a tombstone of its own while ``rel`` stays
+    live. Every public reader builds on this so the
     log and any checkpoint parquet are parsed exactly once per call.
     Tombstones power retention decisions (vacuum gates deletion on the
     remove's ``deletionTimestamp``, not the data file's mtime); the
@@ -330,7 +347,11 @@ def _replay_state(
     def apply_remove(action: dict) -> None:
         rel = unquote(action["path"])
         live.pop(rel, None)
-        tombstones[rel] = action
+        tombstones[(rel, _dv_id(action))] = action
+
+    def current_tombstones() -> dict[tuple[str, str], dict]:
+        live_keys = {(rel, _dv_id(a)) for rel, a in live.items()}
+        return {k: a for k, a in tombstones.items() if k not in live_keys}
 
     def scan_commit(v: int, meta_only: bool = False) -> None:
         nonlocal meta, protocol
@@ -401,9 +422,7 @@ def _replay_state(
                 "live": live,
                 "meta": meta,
                 "protocol": protocol,
-                "tombstones": {
-                    r: a for r, a in tombstones.items() if r not in live
-                },
+                "tombstones": current_tombstones(),
             }
 
         ck = spark.read.parquet(
@@ -442,9 +461,7 @@ def _replay_state(
                 .collect()
             ):
                 a = r["remove"].asDict(recursive=True)
-                rel = unquote(a["path"])
-                if rel not in live:
-                    tombstones[rel] = a
+                tombstones[(unquote(a["path"]), _dv_id(a))] = a
         start = ckpt + 1
     for v in versions:
         if start <= v <= head:
@@ -459,9 +476,7 @@ def _replay_state(
         "live": live,
         "meta": meta,
         "protocol": protocol,
-        "tombstones": {
-            r: a for r, a in tombstones.items() if r not in live
-        },
+        "tombstones": current_tombstones(),
     }
 
 
@@ -1548,7 +1563,7 @@ def export_checkpoint(spark: SparkSession, out_dir: str) -> int:
         + [add_row(rel) for rel in rels]
         + [
             remove_row(rel, a)
-            for rel, a in sorted(st["tombstones"].items())
+            for (rel, _), a in sorted(st["tombstones"].items())
         ]
     )
     ck = spark.createDataFrame(

@@ -1117,7 +1117,7 @@ class IcebergChangelogTarget:
     Iceberg twin of ``delta_cdf.DeltaCdfTarget``, completing the
     {Delta, Iceberg} × {polling source, IVM target} matrix: adapts
     snapshots + :func:`iceberg_changelog` to the interface
-    ``StreamingViewMaintainer`` drives (``snapshots.current_version()``
+    ``StreamingViewMaintainer`` drives (``current_version()``
     / ``read_version`` / ``changes``), so a maintainer — state table,
     durable synced version, crash-exactly-once ``last_v`` MERGE — runs
     unchanged against an Iceberg table this engine only READS.
@@ -1132,7 +1132,6 @@ class IcebergChangelogTarget:
         self.spark = spark
         self.path = path
         self.keys = list(keys)
-        self.snapshots = self  # current_version() lives on the target
 
     def _meta_by_seq(self) -> tuple[dict, dict[int, dict]]:
         meta = ir.table_metadata(self.path)

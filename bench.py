@@ -15,109 +15,142 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "m3_merge_upsert",
-    "m1_merge_sqlserver",
-    "w1_dedup_latest",
-    "m4_overwrite_backfill",
-    "tpch_q1",
-    "tpch_q3",
-    "tpch_q5ish",
-    "dedup_exact",
-    "dedup_minhash_lsh_pairs",
-    "dedup_simhash",
-    "text_quality",
-    "doc_fingerprint",
-    "sim_cosine_topk",
-    "sim_lsh_neighbors",
-    "sim_ivf_topk",
-    "dedup_embedding_cosine",
-    "t_window_agg",
-    "mm_image_features",
+#: The bench's query sections, in order. Section 1's wall-time total is
+#: the record's ``value`` (with ``queries``/``query_stats``); section
+#: n >= 2 reports as ``headline{n}_total``/``_queries``/``_query_stats``.
+#: Later rounds add sections rather than queries to earlier ones, so each
+#: total stays comparable round over round.
+SECTIONS = [
+    # 1: the headline queries
+    [
+        "m3_merge_upsert",
+        "m1_merge_sqlserver",
+        "w1_dedup_latest",
+        "m4_overwrite_backfill",
+        "tpch_q1",
+        "tpch_q3",
+        "tpch_q5ish",
+        "dedup_exact",
+        "dedup_minhash_lsh_pairs",
+        "dedup_simhash",
+        "text_quality",
+        "doc_fingerprint",
+        "sim_cosine_topk",
+        "sim_lsh_neighbors",
+        "sim_ivf_topk",
+        "dedup_embedding_cosine",
+        "t_window_agg",
+        "mm_image_features",
+    ],
+    # 2 (r3+): the heaviest formerly-ungated queries
+    [
+        "corpus_pack",
+        "t_rollup_cascade",
+        "sim_ivf_trained_topk",
+        # r3-continuation additions (heaviest of the new operator families)
+        "sim_pq_topk",
+        "sim_ivfpq_topk",
+        "corpus_bpe_merges",
+        "dedup_bloom_probe",
+    ],
+    # 3 (r4): the round-4 operators — fit-included by design (SemDeDup's
+    # Lloyd cells, the classifier's GD rounds), so these price the full
+    # train+apply verticals
+    [
+        "dedup_semantic",
+        "corpus_dsir_select",
+        "corpus_quality_classifier",
+    ],
+    # 4 (r5): the persisted-IVF-PQ vertical (build: encode +
+    # cell-partitioned write, then partition-pruned search in one gate)
+    # and search-only SemDeDup against a session-cached prefit codebook —
+    # the reclaim section 3's fit-included dedup_semantic leaves on the
+    # table, the same fit-once story the r4 PQ prefit switch told
+    [
+        "sim_ivfpq_index_topk",
+        "dedup_semantic_prefit",
+        "sim_ivfpq_index_rerank",
+        # r6: the persisted-band-index dedup vertical (build once + probe
+        # a batch against the stored index) — the dedup sibling of the
+        # IVF-PQ build+search story above (VERDICT r5 item 7)
+        "dedup_index_pairs",
+    ],
+    # 5 (r6): the engine-exact sketch family — the "aggregate without
+    # shuffling raw values" story priced end-to-end (each gate includes
+    # its exact-count comparison columns, so these times are sketch +
+    # exact side by side)
+    [
+        "a17_hll_distinct",
+        "a18_cms_heavy_hitters",
+        "a19_kmv_overlap",
+        "a20_log_hist_quantiles",
+    ],
+    # 6 (r6): the unified lakehouse lifecycle priced end-to-end — three
+    # copy-on-write merge commits + compaction + ANALYZE + orphan sweep +
+    # snapshot expiry + an idempotent replay, all on one durable table (a
+    # lifecycle vertical, not a single-operator throughput number)
+    [
+        "m8_lakehouse_vertical",
+    ],
+    # 7 (late-r6): the web-curation family — URL canonicalization is the
+    # zero-shuffle narrow-projection story (its time IS scan + codegen'd
+    # regexp algebra), the others price one host/URL-keyed shuffle each;
+    # line-dedup prices the explode→count→join→reassemble chain
+    [
+        "web_url_canonical",
+        "web_url_dedup",
+        "web_host_cap",
+        "corpus_line_dedup_clean",
+        "corpus_top_ngrams",
+    ],
+    # 8 (r11): the cross-format CDC verticals — each builds a real
+    # lakehouse table, mutates it through DV/CoW/MoR commits and consumes
+    # the per-commit change feed end-to-end (IVM maintenance off Delta
+    # CDF and the Iceberg changelog; the full polling pipeline with an
+    # Iceberg table in the CHANGETABLE seat). Lifecycle verticals like
+    # m8, not single-operator numbers
+    [
+        "t_ivm_delta_feed",
+        "t_ivm_iceberg_changelog",
+        "t_iceberg_cdc_poll",
+    ],
 ]
 
-#: second section (r3+): the heaviest formerly-ungated queries. Kept
-#: separate so HEADLINE's total stays comparable across every round.
-HEADLINE2 = [
-    "corpus_pack",
-    "t_rollup_cascade",
-    "sim_ivf_trained_topk",
-    # r3-continuation additions (heaviest of the new operator families)
-    "sim_pq_topk",
-    "sim_ivfpq_topk",
-    "corpus_bpe_merges",
-    "dedup_bloom_probe",
-]
+#: the run's own fields the compact stdout line repeats, in order
+_COMPACT_RUN_KEYS = (
+    "calibration_scan_sec",
+    "calibration_cpu_sec",
+    "runs_per_query",
+    "load_before_1m",
+    "cpus",
+    "sf",
+)
 
-#: third section (r4): the round-4 operators — fit-included by design
-#: (SemDeDup's Lloyd cells, the classifier's GD rounds), so these price
-#: the full train+apply verticals. Separate section keeps both earlier
-#: totals round-over-round comparable.
-HEADLINE3 = [
-    "dedup_semantic",
-    "corpus_dsir_select",
-    "corpus_quality_classifier",
-]
 
-#: fourth section (r5): the persisted-IVF-PQ vertical (build: encode +
-#: cell-partitioned write, then partition-pruned search in one gate) and
-#: search-only SemDeDup against a session-cached prefit codebook — the
-#: reclaim headline3's fit-included dedup_semantic leaves on the table,
-#: the same fit-once story the r4 PQ prefit switch told.
-HEADLINE4 = [
-    "sim_ivfpq_index_topk",
-    "dedup_semantic_prefit",
-    "sim_ivfpq_index_rerank",
-    # r6: the persisted-band-index dedup vertical (build once + probe a
-    # batch against the stored index) — the dedup sibling of the IVF-PQ
-    # build+search story above (VERDICT r5 item 7)
-    "dedup_index_pairs",
-]
+def build_reports(
+    results: list[tuple[dict[str, float], dict[str, dict]]], run: dict
+) -> tuple[dict, dict]:
+    """The ``BENCH_DETAIL.json`` record and the compact stdout line.
 
-#: fifth section (r6): the engine-exact sketch family — the
-#: "aggregate without shuffling raw values" story priced end-to-end
-#: (each gate includes its exact-count comparison columns, so these
-#: times are sketch + exact side by side).
-HEADLINE5 = [
-    "a17_hll_distinct",
-    "a18_cms_heavy_hitters",
-    "a19_kmv_overlap",
-    "a20_log_hist_quantiles",
-]
-
-#: sixth section (r6): the unified lakehouse lifecycle priced end-to-end —
-#: three real MERGE INTO CoW commits + compaction + ANALYZE + orphan
-#: sweep + snapshot expiry + an idempotent replay, all on one durable
-#: table (the m8 gate runs the whole thing; this is a lifecycle vertical,
-#: not a single-operator throughput number).
-HEADLINE6 = [
-    "m8_lakehouse_vertical",
-]
-
-#: seventh section (late-r6): the web-curation family — URL
-#: canonicalization is the zero-shuffle narrow-projection story (its
-#: time IS scan + codegen'd regexp algebra), the others price one
-#: host/URL-keyed shuffle each; line-dedup prices the
-#: explode→count→join→reassemble chain.
-HEADLINE7 = [
-    "web_url_canonical",
-    "web_url_dedup",
-    "web_host_cap",
-    "corpus_line_dedup_clean",
-    "corpus_top_ngrams",
-]
-
-#: eighth section (r11): the cross-format CDC verticals — each builds a
-#: real lakehouse table, mutates it through DV/CoW/MoR commits and
-#: consumes the per-commit change feed end-to-end (IVM maintenance off
-#: Delta CDF and the Iceberg changelog; the full polling pipeline with
-#: an Iceberg table in the CHANGETABLE seat). Lifecycle verticals like
-#: m8, not single-operator numbers.
-HEADLINE8 = [
-    "t_ivm_delta_feed",
-    "t_ivm_iceberg_changelog",
-    "t_iceberg_cdc_poll",
-]
+    ``results`` holds each section's ``(medians, stats)`` in ``SECTIONS``
+    order; ``run`` holds the run's calibration and environment fields
+    (``_COMPACT_RUN_KEYS`` plus ``load_after_1m`` and ``host_cpus``)."""
+    detail = {"metric": "headline_queries_total_wall"}
+    compact = dict(detail)
+    for n, (timings, stats) in enumerate(results, start=1):
+        total = round(sum(timings.values()), 3)
+        if n == 1:
+            detail.update(value=total, unit="sec", queries=timings, query_stats=stats)
+            compact.update(value=total, unit="sec", queries=timings)
+            continue
+        detail[f"headline{n}_total"] = total
+        detail[f"headline{n}_queries"] = timings
+        detail[f"headline{n}_query_stats"] = stats
+        compact[f"headline{n}_total"] = total
+    detail.update(run)
+    compact.update({k: run[k] for k in _COMPACT_RUN_KEYS})
+    compact["detail"] = "BENCH_DETAIL.json"
+    return detail, compact
 
 
 def main() -> None:
@@ -307,85 +340,35 @@ def main() -> None:
     except ValueError:  # e.g. SPARK_GRAFT_CPUS="*" — report the host count
         session_cpus = cpus
 
-    timings, stats1 = measure(HEADLINE)
-    timings2, stats2 = measure(HEADLINE2)
-    timings3, stats3 = measure(HEADLINE3)
-    timings4, stats4 = measure(HEADLINE4)
-    timings5, stats5 = measure(HEADLINE5)
-    timings6, stats6 = measure(HEADLINE6)
-    timings7, stats7 = measure(HEADLINE7)
-    timings8, stats8 = measure(HEADLINE8)
+    results = [measure(names) for names in SECTIONS]
     # The driver records only the LAST ~2.3 KB of stdout; r4's combined
     # line (medians + min/max stats) overflowed that and truncated its own
     # "value" field (VERDICT r4 item 5). So: the FINAL stdout line is a
     # compact totals+medians JSON that fits the window, and the full
     # per-query stats go to BENCH_DETAIL.json committed in-repo.
-    detail = {
-        "metric": "headline_queries_total_wall",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec",
-        "queries": timings,
-        "query_stats": stats1,
-        "headline2_total": round(sum(timings2.values()), 3),
-        "headline2_queries": timings2,
-        "headline2_query_stats": stats2,
-        "headline3_total": round(sum(timings3.values()), 3),
-        "headline3_queries": timings3,
-        "headline3_query_stats": stats3,
-        "headline4_total": round(sum(timings4.values()), 3),
-        "headline4_queries": timings4,
-        "headline4_query_stats": stats4,
-        "headline5_total": round(sum(timings5.values()), 3),
-        "headline5_queries": timings5,
-        "headline5_query_stats": stats5,
-        "headline6_total": round(sum(timings6.values()), 3),
-        "headline6_queries": timings6,
-        "headline6_query_stats": stats6,
-        "headline7_total": round(sum(timings7.values()), 3),
-        "headline7_queries": timings7,
-        "headline7_query_stats": stats7,
-        "headline8_total": round(sum(timings8.values()), 3),
-        "headline8_queries": timings8,
-        "headline8_query_stats": stats8,
-        "calibration_scan_sec": calib,
-        "calibration_cpu_sec": calib_cpu,
-        "runs_per_query": runs,
-        "load_before_1m": load_before,
-        "load_after_1m": round(os.getloadavg()[0], 2),
-        # the SESSION core count (local[$SPARK_GRAFT_CPUS]) — r11's c8
-        # scaling run stamped os.cpu_count() here and the parsed JSON
-        # claimed 32 cores for an 8-core session (VERDICT r11 item 6);
-        # host_cpus keeps the box size for load-guard context
-        "cpus": session_cpus,
-        "host_cpus": cpus,
-        "sf": sf,
-    }
+    detail, compact = build_reports(
+        results,
+        {
+            "calibration_scan_sec": calib,
+            "calibration_cpu_sec": calib_cpu,
+            "runs_per_query": runs,
+            "load_before_1m": load_before,
+            "load_after_1m": round(os.getloadavg()[0], 2),
+            # the SESSION core count (local[$SPARK_GRAFT_CPUS]) — r11's c8
+            # scaling run stamped os.cpu_count() here and the parsed JSON
+            # claimed 32 cores for an 8-core session (VERDICT r11 item 6);
+            # host_cpus keeps the box size for load-guard context
+            "cpus": session_cpus,
+            "host_cpus": cpus,
+            "sf": sf,
+        },
+    )
     detail_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     print(f"# full per-query stats -> {detail_path}", file=sys.stderr)
-    compact = {
-        "metric": "headline_queries_total_wall",
-        "value": detail["value"],
-        "unit": "sec",
-        "queries": timings,
-        "headline2_total": detail["headline2_total"],
-        "headline3_total": detail["headline3_total"],
-        "headline4_total": detail["headline4_total"],
-        "headline5_total": detail["headline5_total"],
-        "headline6_total": detail["headline6_total"],
-        "headline7_total": detail["headline7_total"],
-        "headline8_total": detail["headline8_total"],
-        "calibration_scan_sec": calib,
-        "calibration_cpu_sec": calib_cpu,
-        "runs_per_query": runs,
-        "load_before_1m": load_before,
-        "cpus": session_cpus,
-        "sf": sf,
-        "detail": "BENCH_DETAIL.json",
-    }
     line = json.dumps(compact)
     if len(line) > 2000:  # stay inside the driver's ~2.3 KB tail window
         compact.pop("queries")

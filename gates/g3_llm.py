@@ -517,7 +517,7 @@ WHERE CASE WHEN b2.k IS NOT NULL THEN NOT b2.del ELSE NOT b1.del END
 
 def q_m8_lakehouse_vertical(spark, sf_dir):
     """The FULL lakehouse lifecycle on ONE durable copy-on-write table
-    (``DurableCatalogTarget``): three CT-dialect waves merged
+    (``SnapshotParquetTarget``): three CT-dialect waves merged
     copy-on-write, each committing a durable parquet snapshot — then X1
     compaction, X4 ANALYZE, X3 orphan removal and X2 snapshot expiry run
     on the SAME table, time
@@ -538,15 +538,15 @@ def q_m8_lakehouse_vertical(spark, sf_dir):
         remove_orphan_files,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     _harden_session(spark)
     run_dir = tempfile.mkdtemp(prefix="arcane_m8_run_")
-    target = DurableCatalogTarget(
+    target = SnapshotParquetTarget(
         # 500-row chunks fragment every snapshot so X1 has work to do
-        spark, os.path.join(run_dir, "t"), "m8", max_rows_per_file=500
+        spark, os.path.join(run_dir, "t"), max_rows_per_file=500
     )
     ev = _read(spark, sf_dir, "events")
     mx = ev.agg(F.max("event_id")).first()[0]
@@ -572,7 +572,7 @@ def q_m8_lakehouse_vertical(spark, sf_dir):
 
     # X1 compaction (-> v=4) must be metadata-only: time travel to the
     # pre-compaction snapshot and diff
-    optimize_snapshot(target.snapshots, target_file_bytes=128 << 20)
+    optimize_snapshot(target, target_file_bytes=128 << 20)
     # localCheckpoint each compared side once, then ONE count over the
     # union of both exceptAll directions: the fragmented (500-row-file)
     # snapshots are read once each instead of twice per direction (r11);
@@ -590,7 +590,7 @@ def q_m8_lakehouse_vertical(spark, sf_dir):
         f_diff = pool.submit(
             pre.exceptAll(post).unionAll(post.exceptAll(pre)).count
         )
-        f_stats = pool.submit(analyze_snapshot, target.snapshots)  # X4
+        f_stats = pool.submit(analyze_snapshot, target)  # X4
         if f_diff.result():
             raise AssertionError("compaction changed table values")
         stats = f_stats.result()
@@ -598,10 +598,10 @@ def q_m8_lakehouse_vertical(spark, sf_dir):
         raise AssertionError(f"ANALYZE records {stats.records} != {n_rows}")
 
     open(os.path.join(run_dir, "t", "_CURRENT.tmp"), "w").write("9")
-    if remove_orphan_files(target.snapshots) != ["_CURRENT.tmp"]:  # X3
+    if remove_orphan_files(target) != ["_CURRENT.tmp"]:  # X3
         raise AssertionError("orphan removal missed the crashed pointer tmp")
 
-    if expire_snapshots(target.snapshots, keep_last=2) != [1, 2]:  # X2
+    if expire_snapshots(target, keep_last=2) != [1, 2]:  # X2
         raise AssertionError("expire should drop exactly v=1 and v=2")
 
     # T9 crash-replay: the last wave re-merged onto the compacted
@@ -662,16 +662,15 @@ def q_m10_pruned_cow_merge(spark, sf_dir):
     import tempfile
 
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     _harden_session(spark)
     run_dir = tempfile.mkdtemp(prefix="arcane_m10_run_")
-    target = DurableCatalogTarget(
+    target = SnapshotParquetTarget(
         spark,
         os.path.join(run_dir, "t"),
-        "m10",
         partition_cols=["bucket"],
     )
     ev = _read(spark, sf_dir, "events")
@@ -1036,15 +1035,15 @@ def q_m11_file_pruned_merge(spark, sf_dir):
         optimize_snapshot,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
     from arcane_framework_scala_spark.sinks.table_stats import table_stats
 
     _harden_session(spark)
     run_dir = tempfile.mkdtemp(prefix="arcane_m11_run_")
-    target = DurableCatalogTarget(
-        spark, os.path.join(run_dir, "t"), "m11", file_group_pruning=True
+    target = SnapshotParquetTarget(
+        spark, os.path.join(run_dir, "t"), file_group_pruning=True
     )
     ev = _read(spark, sf_dir, "events")
     mx = ev.agg(F.max("event_id")).first()[0]
@@ -1063,11 +1062,11 @@ def q_m11_file_pruned_merge(spark, sf_dir):
     sink.apply(batch.filter(ver <= t2))  # v=1
     total = table_stats(os.path.join(run_dir, "t", "v=1")).bytes
     optimize_snapshot(  # v=2: ~8 files sorted by merge key
-        target.snapshots,
+        target,
         target_file_bytes=max(1, total // 8),
         sort_cols=["ARCANE_MERGE_KEY"],
     )
-    man = mf.build_manifest(target.snapshots, ["ARCANE_MERGE_KEY"])
+    man = mf.build_manifest(target, ["ARCANE_MERGE_KEY"])
     if len(man) < 3:
         raise AssertionError(f"sorted layout too coarse: {len(man)} files")
     # wave 2: the low quarter of the key space — clustered on the layout
@@ -2160,8 +2159,8 @@ def q_x7_snapshot_audit(spark, sf_dir):
         should_compact,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     _harden_session(spark)
@@ -2169,8 +2168,8 @@ def q_x7_snapshot_audit(spark, sf_dir):
     # 5-row files fragment every snapshot so the stats trigger has
     # small-file pressure to detect (the merged table is ~|users| rows,
     # which is only ~12 at sf0.001)
-    target = DurableCatalogTarget(
-        spark, os.path.join(run_dir, "t"), "x7", max_rows_per_file=5
+    target = SnapshotParquetTarget(
+        spark, os.path.join(run_dir, "t"), max_rows_per_file=5
     )
     ev = _read(spark, sf_dir, "events")
     mx = ev.agg(F.max("event_id")).first()[0]
@@ -2200,7 +2199,7 @@ def q_x7_snapshot_audit(spark, sf_dir):
     times = [ts for _, ts in hist]
     if times != sorted(times):
         raise AssertionError(f"commit times not monotonic: {times}")
-    if target.snapshots.version_as_of(between) != 2:
+    if target.version_as_of(between) != 2:
         raise AssertionError("read_as_of did not resolve to v=2")
     as_of = target.read_as_of(between)
     v2 = target.read_version(2)
@@ -2209,10 +2208,10 @@ def q_x7_snapshot_audit(spark, sf_dir):
 
     # stats-driven compaction trigger: fragmented -> fire; compacted ->
     # quenched; values unchanged across the rewrite
-    if not should_compact(target.snapshots, target_file_bytes=128 << 20):
+    if not should_compact(target, target_file_bytes=128 << 20):
         raise AssertionError("should_compact missed the fragmented layout")
-    optimize_snapshot(target.snapshots, target_file_bytes=128 << 20)
-    if should_compact(target.snapshots, target_file_bytes=128 << 20):
+    optimize_snapshot(target, target_file_bytes=128 << 20)
+    if should_compact(target, target_file_bytes=128 << 20):
         raise AssertionError("should_compact still firing post-compaction")
     pre, post = target.read_version(3), target.read_version(4)
     if pre.exceptAll(post).count() or post.exceptAll(pre).count():
@@ -2248,14 +2247,14 @@ def _web_ingest_setup(spark, sf_dir, gate: str):
     import tempfile
 
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     _harden_session(spark)
     run_dir = tempfile.mkdtemp(prefix=f"arcane_{gate}_run_")
-    target = DurableCatalogTarget(
-        spark, os.path.join(run_dir, "t"), gate, max_rows_per_file=500
+    target = SnapshotParquetTarget(
+        spark, os.path.join(run_dir, "t"), max_rows_per_file=500
     )
     batch = _docs_with_urls(spark, sf_dir).select(
         mssql_merge_key("canon_url").alias("ARCANE_MERGE_KEY"),
@@ -2279,7 +2278,7 @@ def q_m9_web_ingest_vertical(spark, sf_dir):
     arrive in three CDC waves (doc_id = crawl order = change version),
     each wave canonicalizes its URLs inline in the scan
     (``functions/web.py`` — zero extra shuffles) and real-MERGEs into ONE
-    ``DurableCatalogTarget`` keyed on the canonical URL, so re-crawls of
+    ``SnapshotParquetTarget`` keyed on the canonical URL, so re-crawls of
     the same page (tracking-param noise collapsed) upsert instead of
     duplicating. Latest crawl wins; a T9 replay of the last wave lands
     byte-identical. The oracle replays the algebra: waves partition
@@ -2566,8 +2565,8 @@ def q_t_ivm_live_maintain(spark, sf_dir):
     from arcane_framework_scala_spark.operators import ivm
     from arcane_framework_scala_spark.queries.merge import UPSERT_BLOB
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
     from arcane_framework_scala_spark.streaming.structured import (
         StructuredBlobStream,
@@ -2600,7 +2599,7 @@ def q_t_ivm_live_maintain(spark, sf_dir):
                 os.rename(os.path.join(sub, fn), dst)
                 os.utime(dst, (mtime + i * 1000, mtime + i * 1000))
 
-    target = DurableCatalogTarget(spark, os.path.join(run_dir, "t"), "tlive")
+    target = SnapshotParquetTarget(spark, os.path.join(run_dir, "t"))
     maintainer = ivm.StreamingViewMaintainer(
         target, group_col="host", size_col="n_chars"
     )
@@ -2660,8 +2659,8 @@ def q_t_ivm_live_deletes(spark, sf_dir):
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
     from arcane_framework_scala_spark.streaming.structured import (
         StructuredBlobStream,
@@ -2717,7 +2716,7 @@ def q_t_ivm_live_deletes(spark, sf_dir):
                 os.rename(os.path.join(sub, fn), dst)
                 os.utime(dst, (mtime + i * 1000, mtime + i * 1000))
 
-    target = DurableCatalogTarget(spark, os.path.join(run_dir, "t"), "tlivedel")
+    target = SnapshotParquetTarget(spark, os.path.join(run_dir, "t"))
     maintainer = ivm.StreamingViewMaintainer(
         target, group_col="host", size_col="n_chars"
     )

@@ -30,11 +30,7 @@ def main() -> None:
     from arcane_framework_scala_spark import get_session
 
     if not names:
-        names = (
-            bench.HEADLINE + bench.HEADLINE2 + bench.HEADLINE3
-            + bench.HEADLINE4 + bench.HEADLINE5 + bench.HEADLINE6
-            + bench.HEADLINE7 + bench.HEADLINE8
-        )
+        names = [n for section in bench.SECTIONS for n in section]
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans", tag,

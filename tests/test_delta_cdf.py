@@ -459,8 +459,8 @@ def test_stream_runner_polls_a_delta_cdf_source(spark, tmp_path):
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
     from arcane_framework_scala_spark.streaming import (
         StreamRunner,
@@ -472,9 +472,7 @@ def test_stream_runner_polls_a_delta_cdf_source(spark, tmp_path):
 
     src = _export(spark, tmp_path, BASE)
     cdf.enable_cdf(spark, src)
-    table = "arcm.test.cdf_stream_tgt"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    target = DurableCatalogTarget(spark, str(tmp_path / "tgt"), table)
+    target = SnapshotParquetTarget(spark, str(tmp_path / "tgt"))
     runner = StreamRunner(
         source=cdf.DeltaCdfSource(spark, src, keys=["k"]),
         sink=MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING),
@@ -504,7 +502,6 @@ def test_stream_runner_polls_a_delta_cdf_source(spark, tmp_path):
     want = {(k, g, n + 5 if k == 7 else n) for k, g, n in BASE if k > 1}
     want |= {(300, "z", 1)}
     assert got == want
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_cdf_on_mapped_partitioned_table_cdc(spark, tmp_path):

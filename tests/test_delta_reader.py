@@ -211,17 +211,12 @@ def test_export_delta_roundtrip_and_incremental(spark, tmp_path):
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
-    spark.sql("DROP TABLE IF EXISTS arcm.test.delta_export")
-    dur = DurableCatalogTarget(
-        spark, str(tmp_path / "t"), "arcm.test.delta_export",
-        partition_cols=["bucket"],
-    )
-    t = dur.snapshots
-    sink = MergeSink(target=dur, dialect=SQL_SERVER_CHANGE_TRACKING)
+    t = SnapshotParquetTarget(spark, str(tmp_path / "t"), partition_cols=["bucket"])
+    sink = MergeSink(target=t, dialect=SQL_SERVER_CHANGE_TRACKING)
     schema = (
         "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, "
         "SYS_CHANGE_OPERATION string, n long, bucket int"
@@ -258,7 +253,6 @@ def test_export_delta_roundtrip_and_incremental(spark, tmp_path):
     )
     # re-export with nothing new: no empty commit, same version
     assert dr.export_delta(t, out) == 1
-    spark.sql("DROP TABLE IF EXISTS arcm.test.delta_export")
 
 
 def test_truncated_log_without_checkpoint_raises(spark, tmp_path):

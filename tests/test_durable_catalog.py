@@ -1,4 +1,4 @@
-"""DurableCatalogTarget: copy-on-write merges + durable snapshots on one
+"""SnapshotParquetTarget: copy-on-write merges + durable snapshots on one
 table (the unified Iceberg-CoW shape — the reference gets it from
 Trino-on-Iceberg, ``JdbcMergeServiceClient.scala:62-91``).
 
@@ -21,8 +21,8 @@ from arcane_framework_scala_spark.sinks.maintenance import (
     optimize_snapshot,
 )
 from arcane_framework_scala_spark.sinks.merge_sink import (
-    DurableCatalogTarget,
     MergeSink,
+    SnapshotParquetTarget,
 )
 
 BATCH_SCHEMA = (
@@ -44,7 +44,7 @@ WAVE2 = [
 
 @pytest.fixture()
 def target(spark, tmp_path):
-    return DurableCatalogTarget(spark, str(tmp_path / "t"), "dur")
+    return SnapshotParquetTarget(spark, str(tmp_path / "t"))
 
 
 def _rows(df):
@@ -86,12 +86,12 @@ def test_crash_between_merge_and_commit_loses_nothing(spark, target):
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     sink.apply(spark.createDataFrame(WAVE1, BATCH_SCHEMA))
 
-    real_commit = target.snapshots._commit
+    real_commit = target._commit
 
     def crash(df, **kw):
         raise OSError("simulated crash before snapshot commit")
 
-    target.snapshots._commit = crash
+    target._commit = crash
     with pytest.raises(OSError, match="simulated crash"):
         target.merge(
             spark.createDataFrame(WAVE2, BATCH_SCHEMA), SQL_SERVER_CHANGE_TRACKING
@@ -101,7 +101,7 @@ def test_crash_between_merge_and_commit_loses_nothing(spark, target):
     assert _rows(target.read()) == [("k1", 1, 1, 10), ("k2", 2, 2, 20)]
 
     # retry (what MergeSink's RetryPolicy does for transient errors)
-    target.snapshots._commit = real_commit
+    target._commit = real_commit
     sink.apply(spark.createDataFrame(WAVE2, BATCH_SCHEMA))
     assert target.versions() == [1, 2]
     assert _rows(target.read()) == _expected_two_waves(spark)
@@ -111,7 +111,7 @@ def test_maintenance_runs_on_the_same_table(spark, target, tmp_path):
     """X1 compaction and X2 expiry operate on the files the merges
     committed; compaction is metadata-only (values identical)."""
     # fragment: 1-row files
-    target.snapshots.max_rows_per_file = 1
+    target.max_rows_per_file = 1
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     sink.apply(spark.createDataFrame(WAVE1, BATCH_SCHEMA))
     sink.apply(spark.createDataFrame(WAVE2, BATCH_SCHEMA))
@@ -121,11 +121,11 @@ def test_maintenance_runs_on_the_same_table(spark, target, tmp_path):
 
     v2_files = len(glob.glob(str(tmp_path / "t" / "v=2" / "*.parquet")))
     assert v2_files >= 2  # fragmented (one file per surviving row)
-    target.snapshots.max_rows_per_file = None
-    n_files = optimize_snapshot(target.snapshots, target_file_bytes=128 << 20)
+    target.max_rows_per_file = None
+    n_files = optimize_snapshot(target, target_file_bytes=128 << 20)
     assert n_files < v2_files
     assert _rows(target.read()) == before
-    assert expire_snapshots(target.snapshots, keep_last=1) == [1, 2]
+    assert expire_snapshots(target, keep_last=1) == [1, 2]
     assert not os.path.exists(tmp_path / "t" / "v=1")
     # a merge after maintenance continues the same history
     sink.apply(
@@ -148,10 +148,10 @@ def test_watermark_survives_the_session(spark, target, tmp_path):
     store = target.watermark_store()
     store.commit(Watermark(version="2", timestamp="2026-08-15T00:00:00+00:00"))
 
-    reborn = DurableCatalogTarget(spark, str(tmp_path / "t"), "dur")
+    reborn = SnapshotParquetTarget(spark, str(tmp_path / "t"))
     wm = reborn.watermark_store().read()
     assert wm is not None and wm.version == "2"
-    assert remove_orphan_files(reborn.snapshots) == []
+    assert remove_orphan_files(reborn) == []
     assert reborn.watermark_store().read().version == "2"
 
 
@@ -193,7 +193,7 @@ def test_changes_between_snapshots_is_the_cdf(spark, target):
 
 
 def test_partitioned_snapshots_prune_on_read(spark, tmp_path):
-    """100 TB posture: a DurableCatalogTarget with partition_cols commits
+    """100 TB posture: a SnapshotParquetTarget with partition_cols commits
     hive-partitioned snapshots, and a read with a partition predicate
     reaches the scan as a PartitionFilter (directory pruning — the
     Iceberg partition-spec equivalent)."""
@@ -203,8 +203,8 @@ def test_partitioned_snapshots_prune_on_read(spark, tmp_path):
         optimize_snapshot,
     )
 
-    target = DurableCatalogTarget(
-        spark, str(tmp_path / "t"), "part", partition_cols=["event_type"]
+    target = SnapshotParquetTarget(
+        spark, str(tmp_path / "t"), partition_cols=["event_type"]
     )
     wave1 = [
         ("k1", 1, "U", 1, 10, "click"),
@@ -236,16 +236,16 @@ def test_partitioned_snapshots_prune_on_read(spark, tmp_path):
     assert pruned.count() == 2
 
     # maintenance still works on the partitioned layout
-    optimize_snapshot(target.snapshots, target_file_bytes=128 << 20)
+    optimize_snapshot(target, target_file_bytes=128 << 20)
     assert {r["ARCANE_MERGE_KEY"] for r in target.read().collect()} == {
         "k1", "k2", "k3", "k4",
     }
-    assert expire_snapshots(target.snapshots, keep_last=1) == [1, 2]
+    assert expire_snapshots(target, keep_last=1) == [1, 2]
 
 
 def _partitioned_target(spark, tmp_path, tag):
-    return DurableCatalogTarget(
-        spark, str(tmp_path / tag), tag, partition_cols=["event_type"]
+    return SnapshotParquetTarget(
+        spark, str(tmp_path / tag), partition_cols=["event_type"]
     )
 
 
@@ -286,14 +286,14 @@ def test_pruned_merge_leaves_untouched_partitions_byte_identical(
             PART_SCHEMA,
         )
     )
-    v1 = _dir_hashes(os.path.join(target.snapshots.path, "v=1"))
+    v1 = _dir_hashes(os.path.join(target.path, "v=1"))
     # wave 2 touches ONLY the click partition
     sink.apply(
         spark.createDataFrame(
             [("k1", 4, "U", 1, 11, "click")], PART_SCHEMA
         )
     )
-    v2_dir = os.path.join(target.snapshots.path, "v=2")
+    v2_dir = os.path.join(target.path, "v=2")
     v2 = _dir_hashes(v2_dir)
     for part in ("event_type=view", "event_type=scroll"):
         b = {k: h for k, h in v1.items() if k.startswith(part)}
@@ -302,7 +302,7 @@ def test_pruned_merge_leaves_untouched_partitions_byte_identical(
         # carried by hard link: same inode, zero data movement
         for rel in b:
             assert os.path.samefile(
-                os.path.join(target.snapshots.path, "v=1", rel),
+                os.path.join(target.path, "v=1", rel),
                 os.path.join(v2_dir, rel),
             ), rel
     # the touched partition WAS rewritten (new files)
@@ -319,7 +319,7 @@ def test_pruned_merge_leaves_untouched_partitions_byte_identical(
         expire_snapshots,
     )
 
-    assert expire_snapshots(target.snapshots, keep_last=1) == [1]
+    assert expire_snapshots(target, keep_last=1) == [1]
     still = {
         r["ARCANE_MERGE_KEY"]: r["score"] for r in target.read().collect()
     }
@@ -394,14 +394,14 @@ def test_pruned_merge_schema_drift_falls_back_to_full_rewrite(
     }
     assert rows == {"k1": (11, "us"), "k2": (20, None)}
     # and the NEXT non-drifting merge prunes again on the widened table
-    v2 = _dir_hashes(os.path.join(target.snapshots.path, "v=2"))
+    v2 = _dir_hashes(os.path.join(target.path, "v=2"))
     sink.apply(
         spark.createDataFrame(
             [("k1", 5, "U", 1, 12, "click", "us")],
             PART_SCHEMA + ", region string",
         )
     )
-    v3 = _dir_hashes(os.path.join(target.snapshots.path, "v=3"))
+    v3 = _dir_hashes(os.path.join(target.path, "v=3"))
     view_b = {k: h for k, h in v2.items() if k.startswith("event_type=view")}
     view_a = {k: h for k, h in v3.items() if k.startswith("event_type=view")}
     assert view_b and view_a == view_b
@@ -422,7 +422,7 @@ def test_pruned_merge_randomized_waves_match_ground_truth(spark, tmp_path):
 
     rng = random.Random(42)
     target = _partitioned_target(spark, tmp_path, "fuzz")
-    plain = DurableCatalogTarget(spark, str(tmp_path / "plain"), "plain")
+    plain = SnapshotParquetTarget(spark, str(tmp_path / "plain"))
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     plain_sink = MergeSink(
         target=plain, dialect=SQL_SERVER_CHANGE_TRACKING
@@ -468,19 +468,19 @@ def test_file_group_pruned_merge_on_sorted_layout(spark, tmp_path):
         optimize_snapshot,
     )
 
-    target = DurableCatalogTarget(
-        spark, str(tmp_path / "fg"), "fg", file_group_pruning=True
+    target = SnapshotParquetTarget(
+        spark, str(tmp_path / "fg"), file_group_pruning=True
     )
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     rows = [(f"k{i:03d}", 1, "U", i, i * 10) for i in range(60)]
     sink.apply(spark.createDataFrame(rows, BATCH_SCHEMA))
     # sort-compact on the merge key into several files (v=2)
     optimize_snapshot(
-        target.snapshots,
+        target,
         target_file_bytes=1000,
         sort_cols=["ARCANE_MERGE_KEY"],
     )
-    v2_dir = os.path.join(target.snapshots.path, "v=2")
+    v2_dir = os.path.join(target.path, "v=2")
     files = sorted(
         f for f in os.listdir(v2_dir)
         if f.endswith(".parquet") and not f.startswith((".", "_"))
@@ -490,12 +490,12 @@ def test_file_group_pruned_merge_on_sorted_layout(spark, tmp_path):
     # at planning time to the key-range-overlapping files
     from arcane_framework_scala_spark.sinks import manifest as mf
 
-    mf.build_manifest(target.snapshots, ["ARCANE_MERGE_KEY"])
+    mf.build_manifest(target, ["ARCANE_MERGE_KEY"])
     # pick every key living in ONE file -> the rewrite group is it
     one = spark.read.parquet(os.path.join(v2_dir, files[0]))
     keys = [r["ARCANE_MERGE_KEY"] for r in one.collect()]
     cand = mf.plan_files(
-        target.snapshots, "ARCANE_MERGE_KEY",
+        target, "ARCANE_MERGE_KEY",
         lo=min(keys), hi=max(keys),
     )
     assert len(cand) < len(files)  # planning pruned the probe itself
@@ -503,7 +503,7 @@ def test_file_group_pruned_merge_on_sorted_layout(spark, tmp_path):
         [(k, 2, "U", 0, 999) for k in keys], BATCH_SCHEMA
     )
     sink.apply(batch)
-    v3_dir = os.path.join(target.snapshots.path, "v=3")
+    v3_dir = os.path.join(target.path, "v=3")
     for f in files[1:]:  # unmatched files carried: same inode
         assert os.path.samefile(
             os.path.join(v2_dir, f), os.path.join(v3_dir, f)
@@ -520,7 +520,7 @@ def test_file_group_pruned_merge_on_sorted_layout(spark, tmp_path):
     sink.apply(
         spark.createDataFrame([("new1", 3, "U", 99, 1)], BATCH_SCHEMA)
     )
-    v4_dir = os.path.join(target.snapshots.path, "v=4")
+    v4_dir = os.path.join(target.path, "v=4")
     for f in v3_files:
         if f.endswith(".parquet") and not f.startswith((".", "_")):
             assert os.path.samefile(
@@ -555,8 +555,8 @@ def test_file_group_hydration_has_no_file_name_in_literal(
     file count (VERDICT r7 'what's wrong' 1)."""
     from arcane_framework_scala_spark.sinks import merge_sink
 
-    target = DurableCatalogTarget(
-        spark, str(tmp_path / "fgplan"), "fgplan", file_group_pruning=True,
+    target = SnapshotParquetTarget(
+        spark, str(tmp_path / "fgplan"), file_group_pruning=True,
         max_rows_per_file=20,
     )
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
@@ -594,8 +594,8 @@ def test_pruned_merge_survives_glob_metachars_in_table_path(
     rewrite group and the linked carry set, or fail to resolve
     (ADVICE r8, merge_sink glob/percent hazard)."""
     evil = tmp_path / "fg [glob]{x} dir"
-    target = DurableCatalogTarget(
-        spark, str(evil), "fgmeta", file_group_pruning=True,
+    target = SnapshotParquetTarget(
+        spark, str(evil), file_group_pruning=True,
         max_rows_per_file=20,
     )
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
@@ -767,7 +767,7 @@ def test_commit_conflict_retries_and_converges(spark, target):
     )
     sink.apply(spark.createDataFrame(WAVE1, BATCH_SCHEMA))
 
-    orig = target.snapshots._commit
+    orig = target._commit
     state = {"raised": False}
 
     def conflict_once(df, **kw):
@@ -776,7 +776,7 @@ def test_commit_conflict_retries_and_converges(spark, target):
             raise CommitConflictError("simulated concurrent commit")
         return orig(df, **kw)
 
-    target.snapshots._commit = conflict_once
+    target._commit = conflict_once
     sink.apply(spark.createDataFrame(WAVE2, BATCH_SCHEMA))  # retries inside
     assert state["raised"]
     assert target.versions() == [1, 2]
@@ -808,7 +808,7 @@ def test_merge_after_maintenance_runs_the_same_jobs(spark, target):
     sink.apply(spark.createDataFrame(WAVE1, BATCH_SCHEMA))
     wave2 = spark.createDataFrame(WAVE2, BATCH_SCHEMA)
     before = _jobs_in_group(spark, lambda: sink.apply(wave2))
-    optimize_snapshot(target.snapshots, target_file_bytes=128 << 20)
+    optimize_snapshot(target, target_file_bytes=128 << 20)
     wave3 = spark.createDataFrame([("k9", 9, "U", 9, 90)], BATCH_SCHEMA)
     after = _jobs_in_group(spark, lambda: sink.apply(wave3))
     assert before > 0 and after == before, (before, after)
@@ -829,7 +829,7 @@ def test_partitioned_writes_one_file_per_touched_partition(spark, tmp_path):
         return spark.createDataFrame(rows, PART_SCHEMA).repartition(4)
 
     def files(version):
-        vdir = os.path.join(target.snapshots.path, f"v={version}")
+        vdir = os.path.join(target.path, f"v={version}")
         out = {}
         for part in sorted(os.listdir(vdir)):
             if part.startswith("event_type="):
@@ -887,7 +887,7 @@ def test_polling_loop_with_inloop_maintenance_on_the_durable_table(
         watermark_store=target.watermark_store(),
         settings=StreamSettings(poll_interval_seconds=0.01),
         maintenance=MaintenanceSchedule(optimize_every=2, expire_every=2),
-        maintenance_fn=lambda op: run_maintenance(target.snapshots, op),
+        maintenance_fn=lambda op: run_maintenance(target, op),
     )
 
     spark.createDataFrame(
@@ -1007,12 +1007,12 @@ def test_pruned_merge_planning_cases_match_ground_truth(spark, tmp_path, case):
         "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, "
         f"SYS_CHANGE_OPERATION string, score long, {pcol_ddl}"
     )
-    target = DurableCatalogTarget(
-        spark, str(tmp_path / case), case, partition_cols=[pcol]
+    target = SnapshotParquetTarget(
+        spark, str(tmp_path / case), partition_cols=[pcol]
     )
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     sink.apply(spark.createDataFrame(wave1, schema))
-    v1_dir = os.path.join(target.snapshots.path, "v=1")
+    v1_dir = os.path.join(target.path, "v=1")
     v1 = _dir_hashes(v1_dir)
     batch = spark.createDataFrame(wave2, schema)
     sink.apply(batch)
@@ -1023,7 +1023,7 @@ def test_pruned_merge_planning_cases_match_ground_truth(spark, tmp_path, case):
     assert sorted(target.read().columns) == cols
     assert _rows(target.read().select(*cols)) == _rows(truth.select(*cols))
 
-    v2_dir = os.path.join(target.snapshots.path, "v=2")
+    v2_dir = os.path.join(target.path, "v=2")
     v2 = _dir_hashes(v2_dir)
     for leaf in sorted({os.path.dirname(rel) for rel in v1}):
         before = {k: h for k, h in v1.items() if os.path.dirname(k) == leaf}
@@ -1067,7 +1067,7 @@ def test_merge_on_a_version_it_committed_infers_no_schema(spark, tmp_path, parti
     pcols = ["event_type"] if partitioned else None
 
     def table(name):
-        t = DurableCatalogTarget(spark, str(tmp_path / name), name, partition_cols=pcols)
+        t = SnapshotParquetTarget(spark, str(tmp_path / name), partition_cols=pcols)
         MergeSink(target=t, dialect=SQL_SERVER_CHANGE_TRACKING).apply(
             spark.createDataFrame(
                 [("k1", 1, "U", 1, 10, "click"), ("k2", 2, "U", 2, 20, "view"),
@@ -1078,10 +1078,10 @@ def test_merge_on_a_version_it_committed_infers_no_schema(spark, tmp_path, parti
         return t
 
     remembered = table("remembered")
-    fresh = DurableCatalogTarget(
-        spark, table("fresh").snapshots.path, "fresh", partition_cols=pcols
+    fresh = SnapshotParquetTarget(
+        spark, table("fresh").path, partition_cols=pcols
     )
-    assert fresh.snapshots._schema is None
+    assert fresh._schema is None
 
     def merge(t):
         wave2 = spark.createDataFrame(
@@ -1113,16 +1113,16 @@ def test_remembered_schema_matches_inference(spark, tmp_path):
     )
 
     def check(t):
-        v = t.snapshots.current_version()
-        inferred = spark.read.parquet(os.path.join(t.snapshots.path, f"v={v}")).schema
-        assert t.snapshots._schema == (v, inferred)
+        v = t.current_version()
+        inferred = spark.read.parquet(os.path.join(t.path, f"v={v}")).schema
+        assert t._schema == (v, inferred)
 
     def batch(rows, ddl=schema):
         return spark.createDataFrame(rows, ddl)
 
     for pcols in (["bucket"], None):
-        t = DurableCatalogTarget(
-            spark, str(tmp_path / f"t{bool(pcols)}"), "t", partition_cols=pcols
+        t = SnapshotParquetTarget(
+            spark, str(tmp_path / f"t{bool(pcols)}"), partition_cols=pcols
         )
         sink = MergeSink(target=t, dialect=SQL_SERVER_CHANGE_TRACKING)
         sink.apply(batch([("k1", 1, "U", D("1.50"), ["a"], 0), ("k2", 1, "U", D("2.50"), [], 1),
@@ -1137,6 +1137,180 @@ def test_remembered_schema_matches_inference(spark, tmp_path):
         check(t)  # T8 drift: full rewrite
         t.overwrite(t.read().filter("ARCANE_MERGE_KEY != 'k3'"))
         check(t)
-        optimize_snapshot(t.snapshots, target_file_bytes=128 << 20)
+        optimize_snapshot(t, target_file_bytes=128 << 20)
         check(t)
         assert t.read().count() == 3
+
+
+def test_overwrite_writes_one_file_per_partition(spark, tmp_path):
+    """``overwrite`` hash-distributes by the partition columns, as every
+    merge does: a backfill whose rows sit in eight tasks still commits
+    one data file per partition."""
+    target = _partitioned_target(spark, tmp_path, "ow")
+    etypes = ["click", "view", "scroll"]
+    df = spark.createDataFrame(
+        [(f"k{i}", 1, i, i, etypes[i % 3]) for i in range(240)],
+        "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, user_id long, "
+        "score long, event_type string",
+    ).repartition(8)
+    target.overwrite(df)
+    vdir = os.path.join(target.path, "v=1")
+    files = {
+        part: [f for f in os.listdir(os.path.join(vdir, part)) if f.endswith(".parquet")]
+        for part in os.listdir(vdir)
+        if part.startswith("event_type=")
+    }
+    assert sorted(files) == ["event_type=click", "event_type=scroll", "event_type=view"]
+    assert [len(f) for f in files.values()] == [1, 1, 1], files
+    assert target.read().count() == 240
+
+
+def test_optimize_commits_its_coalesce_output_undistributed(spark, tmp_path):
+    """X1 compaction commits its ``coalesce`` output as is — no shuffle
+    by partition, unlike ``overwrite`` — so each of its tasks writes one
+    file per partition it holds rows of, exactly as a plain partitioned
+    write of the coalesced snapshot does."""
+    from arcane_framework_scala_spark.sinks.table_stats import (
+        _parquet_files,
+        table_stats,
+    )
+
+    target = SnapshotParquetTarget(
+        spark, str(tmp_path / "x1"), max_rows_per_file=10,
+        partition_cols=["event_type"],
+    )
+    etypes = ["click", "view", "scroll"]
+    target.overwrite(spark.createDataFrame(
+        [(f"k{i}", 1, i, i, etypes[i % 3]) for i in range(300)],
+        "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, user_id long, "
+        "score long, event_type string",
+    ))
+    v1 = os.path.join(target.path, "v=1")
+    assert len(_parquet_files(v1)) == 30  # ten 10-row files per partition
+    target.max_rows_per_file = None
+    half = table_stats(v1).bytes // 2 + 1
+    base = target.read()
+    assert optimize_snapshot(target, target_file_bytes=half) == 2
+    plain = str(tmp_path / "plain")
+    base.coalesce(2).write.partitionBy("event_type").parquet(plain)
+    compacted = _parquet_files(os.path.join(target.path, "v=2"))
+    assert len(compacted) == len(_parquet_files(plain)) == 6
+    assert target.read().count() == 300
+
+
+def test_batch_partition_column_matches_without_case(spark, tmp_path):
+    """A batch that spells the partition column ``EVENT_TYPE`` still takes
+    the pruned merge on a table partitioned by ``event_type``: names match
+    without regard to case, as T8 drift and merge_apply match them, so
+    the untouched partitions are carried by hard link, not rewritten."""
+    target = _partitioned_target(spark, tmp_path, "case")
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    sink.apply(spark.createDataFrame(
+        [("k1", 1, "U", 1, 10, "click"), ("k2", 2, "U", 2, 20, "view"),
+         ("k3", 3, "U", 3, 30, "scroll")],
+        PART_SCHEMA,
+    ))
+    v1_dir = os.path.join(target.path, "v=1")
+    v1 = _dir_hashes(v1_dir)
+    sink.apply(spark.createDataFrame(
+        [("k1", 4, "U", 1, 11, "click")],
+        PART_SCHEMA.replace("event_type", "EVENT_TYPE"),
+    ))
+    v2_dir = os.path.join(target.path, "v=2")
+    assert sorted(p for p in os.listdir(v2_dir) if "=" in p) == [
+        "event_type=click", "event_type=scroll", "event_type=view",
+    ]
+    for part in ("event_type=view", "event_type=scroll"):
+        rels = [k for k in v1 if k.startswith(part)]
+        assert rels
+        for rel in rels:
+            assert os.path.samefile(
+                os.path.join(v1_dir, rel), os.path.join(v2_dir, rel)
+            ), rel
+    rows = {
+        r["ARCANE_MERGE_KEY"]: (r["event_type"], r["score"])
+        for r in target.read().collect()
+    }
+    assert rows == {"k1": ("click", 11), "k2": ("view", 20), "k3": ("scroll", 30)}
+
+
+def test_durable_catalog_target_is_the_snapshot_table(spark, tmp_path):
+    """``DurableCatalogTarget`` is ``SnapshotParquetTarget`` under the call
+    perfbench's workloads make: a positional table name it ignores,
+    ``target.snapshots`` handed to maintenance, and the pruned merge."""
+    from arcane_framework_scala_spark.sinks.maintenance import run_maintenance
+    from arcane_framework_scala_spark.sinks.merge_sink import DurableCatalogTarget
+
+    target = DurableCatalogTarget(
+        spark, str(tmp_path / "t"), "t", partition_cols=["event_type"]
+    )
+    assert isinstance(target, SnapshotParquetTarget)
+    assert target.snapshots is target
+    sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
+    sink.apply(spark.createDataFrame(
+        [("k1", 1, "U", 1, 10, "click"), ("k2", 2, "U", 2, 20, "view")],
+        PART_SCHEMA,
+    ))
+    v1_dir = os.path.join(target.path, "v=1")
+    views = [k for k in _dir_hashes(v1_dir) if k.startswith("event_type=view")]
+    sink.apply(spark.createDataFrame([("k1", 4, "U", 1, 11, "click")], PART_SCHEMA))
+    assert views
+    for rel in views:  # carried by hard link: the pruned path ran
+        assert os.path.samefile(
+            os.path.join(v1_dir, rel), os.path.join(target.path, "v=2", rel)
+        )
+    assert run_maintenance(target.snapshots, "optimize") == 1
+    assert target.versions() == [1, 2, 3]
+    assert {
+        r["ARCANE_MERGE_KEY"]: r["score"] for r in target.read().collect()
+    } == {"k1": 11, "k2": 20}
+
+
+def test_patching_both_class_names_restores_the_originals(spark, tmp_path):
+    """perfbench's tracer wraps ``merge``/``overwrite`` on
+    ``SnapshotParquetTarget``, then on ``DurableCatalogTarget``, and
+    restores them in reverse order. The subclass holds its own
+    attributes, so a traced merge runs one wrapper, not the parent's
+    inside its own, and afterwards both classes hold the originals: an
+    untraced merge runs no wrapper."""
+    from arcane_framework_scala_spark.sinks.merge_sink import DurableCatalogTarget
+
+    classes = (SnapshotParquetTarget, DurableCatalogTarget)
+    attrs = ("merge", "overwrite")
+    originals = {(c, a): c.__dict__[a] for c in classes for a in attrs}
+    calls = []
+
+    def wrap(fn):
+        def wrapper(*a, **kw):
+            calls.append(fn.__name__)
+            return fn(*a, **kw)
+
+        return wrapper
+
+    def batch(ver):
+        return spark.createDataFrame([("k1", ver, "U", 1, 10 * ver)], BATCH_SCHEMA)
+
+    patches = []
+    try:
+        for cls in classes:
+            for attr in attrs:
+                original = getattr(cls, attr)
+                patches.append((cls, attr, original))
+                setattr(cls, attr, wrap(original))
+        traced = DurableCatalogTarget(spark, str(tmp_path / "traced"), "t")
+        traced.merge(batch(1), SQL_SERVER_CHANGE_TRACKING)
+        assert calls == ["merge"]
+    finally:
+        while patches:
+            owner, attr, original = patches.pop()
+            setattr(owner, attr, original)
+    assert {(c, a): c.__dict__[a] for c in classes for a in attrs} == originals
+    calls.clear()
+    for t in (
+        SnapshotParquetTarget(spark, str(tmp_path / "plain")),
+        DurableCatalogTarget(spark, str(tmp_path / "compat"), "t"),
+    ):
+        t.merge(batch(1), SQL_SERVER_CHANGE_TRACKING)
+        t.overwrite(t.read())
+        t.merge(batch(2), SQL_SERVER_CHANGE_TRACKING)
+    assert calls == []

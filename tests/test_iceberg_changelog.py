@@ -133,8 +133,8 @@ def test_stream_runner_polls_an_iceberg_cdc_source(spark, tmp_path):
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
     from arcane_framework_scala_spark.streaming import (
         StreamRunner,
@@ -145,9 +145,7 @@ def test_stream_runner_polls_an_iceberg_cdc_source(spark, tmp_path):
     )
 
     out = _table(spark, tmp_path)
-    table = "arcm.test.ice_cdc_stream_tgt"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    target = DurableCatalogTarget(spark, str(tmp_path / "tgt"), table)
+    target = SnapshotParquetTarget(spark, str(tmp_path / "tgt"))
     runner = StreamRunner(
         source=im.IcebergCdcSource(spark, out, keys=["k"]),
         sink=MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING),
@@ -190,7 +188,6 @@ def test_stream_runner_polls_an_iceberg_cdc_source(spark, tmp_path):
     assert runner.run_once() == 1
     got2 = {(r.k, r.g, r.n) for r in target.read().collect()}
     assert got2 == want
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_streaming_maintainer_runs_off_an_iceberg_changelog_target(

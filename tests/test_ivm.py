@@ -181,8 +181,8 @@ def test_streaming_maintainer_state_table_branch(spark, tmp_path):
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     state = "arcm.test.maintainer_state"
@@ -192,9 +192,7 @@ def test_streaming_maintainer_state_table_branch(spark, tmp_path):
         "(host STRING, docs BIGINT, sum_size BIGINT, nn_size BIGINT) "
         "USING mem"
     )
-    table = "arcm.test.maintainer_tgt"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    target = DurableCatalogTarget(spark, str(tmp_path / "t"), table)
+    target = SnapshotParquetTarget(spark, str(tmp_path / "t"))
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     m = ivm.StreamingViewMaintainer(
         target, group_col="host", size_col="n", state_table=state
@@ -271,7 +269,6 @@ def test_streaming_maintainer_state_table_branch(spark, tmp_path):
     assert view.exceptAll(fresh).count() == 0
     assert fresh.exceptAll(view).count() == 0
     spark.sql(f"DROP TABLE IF EXISTS {state}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_streaming_maintainer_refuses_unversioned_populated_state(
@@ -286,8 +283,8 @@ def test_streaming_maintainer_refuses_unversioned_populated_state(
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     state = "arcm.test.maint_noversion"
@@ -298,9 +295,7 @@ def test_streaming_maintainer_refuses_unversioned_populated_state(
         "USING mem"
     )
     spark.sql(f"INSERT INTO {state} VALUES ('a', 1, 10, 1)")
-    table = "arcm.test.maint_noversion_tgt"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    target = DurableCatalogTarget(spark, str(tmp_path / "t"), table)
+    target = SnapshotParquetTarget(spark, str(tmp_path / "t"))
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     sink.apply(spark.createDataFrame(
         [("k1", 1, "U", "a", 10)],
@@ -314,7 +309,6 @@ def test_streaming_maintainer_refuses_unversioned_populated_state(
     with pytest.raises(ValueError, match="double-count"):
         m.sync()
     spark.sql(f"DROP TABLE IF EXISTS {state}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_versioned_state_table_survives_crash_between_merge_and_record(
@@ -331,8 +325,8 @@ def test_versioned_state_table_survives_crash_between_merge_and_record(
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     state = "arcm.test.versioned_state"
@@ -342,9 +336,7 @@ def test_versioned_state_table_survives_crash_between_merge_and_record(
         "(host STRING, docs BIGINT, sum_size BIGINT, nn_size BIGINT, "
         "last_v BIGINT) USING mem"
     )
-    table = "arcm.test.versioned_tgt"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    target = DurableCatalogTarget(spark, str(tmp_path / "t"), table)
+    target = SnapshotParquetTarget(spark, str(tmp_path / "t"))
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     schema = (
         "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, "
@@ -412,7 +404,6 @@ def test_versioned_state_table_survives_crash_between_merge_and_record(
     assert fresh2.exceptAll(view2).count() == 0
     assert "c" not in {r["host"] for r in view2.collect()}
     spark.sql(f"DROP TABLE IF EXISTS {state}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_null_last_v_rows_pass_the_version_guard(spark, tmp_path):
@@ -427,15 +418,13 @@ def test_null_last_v_rows_pass_the_version_guard(spark, tmp_path):
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     state = "arcm.test.null_lastv_state"
-    table = "arcm.test.null_lastv_tgt"
     spark.sql(f"DROP TABLE IF EXISTS {state}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    target = DurableCatalogTarget(spark, str(tmp_path / "t"), table)
+    target = SnapshotParquetTarget(spark, str(tmp_path / "t"))
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     schema = (
         "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, "
@@ -456,7 +445,7 @@ def test_null_last_v_rows_pass_the_version_guard(spark, tmp_path):
         f"INSERT INTO {state} VALUES "
         "('a', 1, 10, 1, NULL), ('b', 1, 5, 1, NULL)"
     )
-    v0 = target.snapshots.current_version()
+    v0 = target.current_version()
     spark.sql(
         f"ALTER TABLE {state} SET TBLPROPERTIES "
         f"('{ivm.StreamingViewMaintainer.SYNC_PROPERTY}'='{v0}')"
@@ -480,4 +469,3 @@ def test_null_last_v_rows_pass_the_version_guard(spark, tmp_path):
     stamped = spark.table(state).where("host = 'a'").collect()[0]
     assert stamped["last_v"] is not None
     spark.sql(f"DROP TABLE IF EXISTS {state}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")

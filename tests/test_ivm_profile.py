@@ -290,13 +290,11 @@ def test_all_spec_families_ride_the_view_maintainer(spark, tmp_path):
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
-    table = "arcm.test.spec_families"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    target = DurableCatalogTarget(spark, str(tmp_path / "t"), table)
+    target = SnapshotParquetTarget(spark, str(tmp_path / "t"))
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     schema = (
         "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, "
@@ -348,7 +346,6 @@ def test_all_spec_families_ride_the_view_maintainer(spark, tmp_path):
             spec=ivm_minmax.MinMaxSpec("host", "n"),
             state_table="arcm.test.nope",
         )
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_derived_avg_and_variance_match_builtins(spark):
@@ -414,19 +411,17 @@ def test_moments_spec_rides_the_maintainer_state_table(spark, tmp_path):
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     state = "arcm.test.moments_state"
-    table = "arcm.test.moments_tgt"
     spark.sql(f"DROP TABLE IF EXISTS {state}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
         f"CREATE TABLE {state} (host STRING, docs BIGINT, sum_v BIGINT, "
         "sum_sq BIGINT, nn BIGINT) USING mem"
     )
-    target = DurableCatalogTarget(spark, str(tmp_path / "t"), table)
+    target = SnapshotParquetTarget(spark, str(tmp_path / "t"))
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     schema = (
         "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, "
@@ -459,7 +454,6 @@ def test_moments_spec_rides_the_maintainer_state_table(spark, tmp_path):
         "b": (2, 4, 16, 1),
     }
     spark.sql(f"DROP TABLE IF EXISTS {state}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_histogram_spec_rides_the_maintainer_state_table(spark, tmp_path):
@@ -471,19 +465,17 @@ def test_histogram_spec_rides_the_maintainer_state_table(spark, tmp_path):
         SQL_SERVER_CHANGE_TRACKING,
     )
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
+        SnapshotParquetTarget,
     )
 
     state = "arcm.test.hist_state"
-    table = "arcm.test.hist_tgt"
     spark.sql(f"DROP TABLE IF EXISTS {state}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
     spark.sql(
         f"CREATE TABLE {state} (host STRING, e INT, sub BIGINT, "
         "lo BIGINT, cnt BIGINT) USING mem"
     )
-    target = DurableCatalogTarget(spark, str(tmp_path / "t"), table)
+    target = SnapshotParquetTarget(spark, str(tmp_path / "t"))
     sink = MergeSink(target=target, dialect=SQL_SERVER_CHANGE_TRACKING)
     schema = (
         "ARCANE_MERGE_KEY string, SYS_CHANGE_VERSION long, "
@@ -522,4 +514,3 @@ def test_histogram_spec_rides_the_maintainer_state_table(spark, tmp_path):
     }
     assert q == fresh_q
     spark.sql(f"DROP TABLE IF EXISTS {state}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -140,29 +140,23 @@ class JobGroupSink:
             self.sc.setJobGroup(self.outer, "runner")
 
 
-@pytest.mark.parametrize(
-    "kind", ["snapshot", "snapshot_partitioned", "durable", "durable_partitioned"]
-)
+@pytest.mark.parametrize("kind", ["snapshot", "snapshot_partitioned"])
 def test_runner_counts_rows_on_the_sinks_own_jobs(spark, tmp_path, kind):
     """rows.incoming equals each batch's row count, and the runner runs
     no Spark job beyond the sink's: the count rides on the merge. The
     second batch takes the partition-pruned merge on the partitioned
-    durable table."""
+    table."""
     import uuid
 
     from arcane_framework_scala_spark.queries.merge import UPSERT_BLOB
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
         MergeSink,
         SnapshotParquetTarget,
     )
 
     parts = ["part"] if kind.endswith("_partitioned") else None
     path = str(tmp_path / "target")
-    if kind.startswith("durable"):
-        target = DurableCatalogTarget(spark, path, "obs", partition_cols=parts)
-    else:
-        target = SnapshotParquetTarget(spark, path, partition_cols=parts)
+    target = SnapshotParquetTarget(spark, path, partition_cols=parts)
     schema = "ARCANE_MERGE_KEY string, createdon long, part string, v long"
     batches = [
         spark.createDataFrame(

@@ -202,7 +202,7 @@ def test_foreachbatch_merge_into_durable_target(spark, sf_dir, tmp_path):
     commit. Every micro-batch leaves a time-travelable version; replaying
     the same files is value-idempotent but still commits a snapshot (the
     Iceberg behavior — commits are history, not diffs)."""
-    from arcane_framework_scala_spark.sinks.merge_sink import DurableCatalogTarget
+    from arcane_framework_scala_spark.sinks.merge_sink import SnapshotParquetTarget
 
     src_dir = str(tmp_path / "incoming")
     orders = (
@@ -224,7 +224,7 @@ def test_foreachbatch_merge_into_durable_target(spark, sf_dir, tmp_path):
             checkpoint_dir=str(tmp_path / "ckpt"),
         )
 
-    target = DurableCatalogTarget(spark, str(tmp_path / "table"), "stream_durable")
+    target = SnapshotParquetTarget(spark, str(tmp_path / "table"))
     make_stream(target).run_available()
     assert target.versions() == [1]
     first = target.read().count()
@@ -356,7 +356,7 @@ def test_streaming_view_maintainer_rides_the_batch_hook(
     O(|delta|) catch-ups, landing exactly on a fresh groupBy."""
     from arcane_framework_scala_spark.operators import ivm
     from arcane_framework_scala_spark.sinks.merge_sink import (
-        DurableCatalogTarget,
+        SnapshotParquetTarget,
     )
 
     src_dir = str(tmp_path / "incoming")
@@ -368,7 +368,7 @@ def test_streaming_view_maintainer_rides_the_batch_hook(
     )
     orders.write.parquet(f"{src_dir}/b1")
 
-    target = DurableCatalogTarget(spark, str(tmp_path / "table"), "stream_view")
+    target = SnapshotParquetTarget(spark, str(tmp_path / "table"))
     maintainer = ivm.StreamingViewMaintainer(
         target, group_col="o_orderstatus", size_col="o_totalprice"
     )
